@@ -257,11 +257,14 @@ def main() -> None:
             if name in errors:
                 continue
             try:
-                cache_present[name].append(_cache_nonempty())
+                # read before the run, recorded only with its timing, so the
+                # flags stay aligned one-to-one with samples[name]
+                cached = _cache_nonempty()
                 t0 = time.time()
                 n = qs[name](spark, sf_dir).count()
                 dt = time.time() - t0
                 samples[name].append(dt)
+                cache_present[name].append(cached)
                 print(
                     f"# session {pass_no + 1}/{PASSES} {name}: {n} rows in {dt:.3f}s",
                     file=sys.stderr,
@@ -383,6 +386,7 @@ def main() -> None:
             "aggregation": "per-query min across sessions",
             "incomplete": bool(headline_errors),
             "settled": settled,
+            "loadavg_start": load_start,
         }
         if dropped_tiers:
             tail_line["queries_tiers_dropped_for_length"] = dropped_tiers

@@ -26,7 +26,7 @@ module reproduces that *pushdown boundary* with the public
 
 Data shape: the elasticdump / scroll-export NDJSON hit format (one JSON
 hit per line, document under ``_source``, ``_id``/``_index`` alongside) —
-the same shape io/sources.py:read_es_export reads with the JVM JSON
+the same shape io/sources.py:read_es_hits reads with the JVM JSON
 reader.  Malformed lines are skipped per-line (the reference's log-drop-
 continue, sync.go:192-204); a wholly unparseable file falls back from the
 vectorized Arrow parser to line-wise parsing rather than failing the scan.
@@ -537,6 +537,21 @@ def read_es_status(
     if schema is not None:
         r = r.schema(schema)
     return r.load()
+
+
+def export_files(path: str, start=None, stop=None) -> list[str]:
+    """The export files a batch ``es_status`` scan of ``time`` in
+    ``[start, stop)`` reads: ``EsStatusReader.partitions()`` with that
+    window pushed — the directory listing minus ``_``/``.`` names, minus
+    files whose ``_ES_COMMIT`` time stats rule the window out.  Runs on
+    the driver with no Spark job and no Python worker, so a JVM JSON scan
+    (io/sources.py:read_es_hits) can read exactly the connector's splits."""
+    reader = EsStatusReader(T.StructType.fromDDL(DEFAULT_STATUS_DDL), {"path": path})
+    if start is not None:
+        reader.pushed.append(GreaterThanOrEqual(("time",), start))
+    if stop is not None:
+        reader.pushed.append(LessThan(("time",), stop))
+    return [p.path for p in reader.partitions()]
 
 
 def read_es_status_stream(

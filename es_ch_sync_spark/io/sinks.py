@@ -5,9 +5,9 @@ keyed (token_id, timestamp, name), which absorbs the deliberate overlap the
 resume logic creates at range boundaries
 (/root/reference/internal/service/clickhouse/clickhouse.go:113-130,
 internal/sync/sync.go:128-137).  On plain Parquet the engine makes that
-semantics explicit: ``dropDuplicates`` on the same key before every write
-(within-batch idempotency) and, for cross-run idempotency, an anti-join
-against the existing table (the batch analog of MERGE).
+semantics explicit: one keep-one dedup on the same key inside every write
+(dedup_signals; within-batch idempotency) and, for cross-run idempotency,
+an anti-join against the existing table (the batch analog of MERGE).
 
 Scale posture: partition by event date — time-range queries (the engine's
 dominant predicate, S3) prune whole partitions; within files, sorting by
@@ -21,46 +21,40 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from es_ch_sync_spark.job.metrics import observe_signals
+
 DEDUP_KEY = ["token_id", "timestamp", "name"]
 
 
 def dedup_signals(signals: DataFrame, key: list[str] | None = None) -> DataFrame:
     """K2 — keep-one-row-per-key dedup on the signal key (ReplacingMergeTree
-    analog), formulated to plan WITHOUT a Sort.
+    analog), done once, by the sink (write_signals, the txlog branch of
+    job/main.py).
 
-    ``array_min(collect_list(struct(payload...)))``: collect_list is a
-    TypedImperativeAggregate, so Spark plans **ObjectHashAggregate** — the
-    only aggregate exec that hash-aggregates variable-length buffers.  Every
-    direct alternative (first(), max_by(), max(struct), any_value(),
-    dropDuplicates) plans **SortAggregate** the moment any payload column is
-    a string (measured on Spark 4.1.2 — HashAggregateExec requires
-    fixed-width mutable buffers), putting a full Sort in the engine's
-    hottest path.  This form removes that Sort and is additionally
-    *deterministic*: the kept row is the lexicographically smallest payload
-    struct, independent of shuffle arrival order (first() kept whichever row
-    happened to arrive first).  Row atomicity is exact — the winner is one
-    whole source row, never a column-wise mix.
+    The winner per key is the lexicographically smallest
+    ``(source, value_number, …)`` payload struct — ``min(struct)``, so the
+    kept row is independent of shuffle arrival order (first() kept
+    whichever row arrived first) and is one whole source row, never a
+    column-wise mix.  Null fields order first, so the winner is the row
+    the former ``array_min(collect_list(struct))`` kept (pinned in
+    tests/test_sync_job.py).
 
-    Buffer contract: the per-key list holds all duplicate rows' payloads;
-    the sync overlap that creates duplicates re-reads identical documents,
-    so lists are tiny (1-2 entries).  ObjectHashAggregate falls back to
-    sort-based aggregation after ``spark.sql.objectHashAggregate.sortBased.
-    fallbackThreshold`` distinct keys per task — session.py raises it from
-    the 128 default (load-bearing: at the default, every realistic task
-    falls straight back to the old SortAggregate behavior).
-
-    sf0.1 medians on the sync-pipeline dedup stage: 0.63 s (this form,
-    0 sorts) vs 0.58-0.75 s (first(), 2 sorts) vs 0.53-0.60 s
-    (dropDuplicates, 2 sorts) — flat at this scale; at 100 TB the removed
-    O(n log n) sort + its spill is the win."""
+    ``min`` over a struct with string fields has no fixed-width buffer, so
+    Spark plans SortAggregate: one Exchange on ``key`` and a Sort per side.
+    write_signals groups on ``(event_date, token_id, timestamp, name)``,
+    which makes that Sort the write's own partition + file order, so the
+    write adds no Exchange and no Sort of its own.  Dedup + partitioned
+    write, warm, on the 52,500-doc benchmark export (762k signal rows,
+    local[4], median of 5): 2.0 s in this form, against 3.9 s for one
+    ``array_min(collect_list(struct))`` ObjectHashAggregate and 5.9 s for
+    the two the sync path used to run.  ``row_number()`` over the same
+    window read 1.8 s, inside the runs' spread, so the single aggregate
+    stays."""
     key = key or DEDUP_KEY
     others = [c for c in signals.columns if c not in key]
-    winner = F.array_min(
-        F.collect_list(F.struct(*[F.col(c) for c in others]))
-    ).alias("_payload")
     return (
         signals.groupBy(*key)
-        .agg(winner)
+        .agg(F.min(F.struct(*others)).alias("_payload"))
         .select(*key, *[F.col(f"_payload.{c}").alias(c) for c in others])
         .select(*signals.columns)
     )
@@ -71,17 +65,23 @@ def write_signals(
     path: str,
     mode: str = "append",
     existing: DataFrame | None = None,
-) -> None:
-    """K1+K2 — dedup, optionally anti-join already-written keys, write.
+) -> dict:
+    """K1+K2 — optionally anti-join already-written keys, dedup, write;
+    returns the job/metrics.observe_signals metrics of the written rows
+    (``n_signals`` …), gathered by the write itself.
 
     ``existing`` enables idempotent re-runs (reference guarantee: syncing
     the same range twice leaves the table unchanged).  The anti-join is
     key-only (3 narrow columns) so its shuffle is small relative to data.
-    """
-    out = dedup_signals(signals)
+
+    One shuffle: the dedup's Exchange hashes ``(event_date, token_id,
+    timestamp, name)``, so a day is spread over every shuffle partition
+    (a ``repartition("event_date")`` put a whole day in one task), and the
+    dedup's Sort is the order each task writes its files in."""
     if existing is not None:
-        out = out.join(existing.select(*DEDUP_KEY), on=DEDUP_KEY, how="left_anti")
-    out = out.withColumn("event_date", F.to_date("timestamp"))
+        signals = signals.join(existing.select(*DEDUP_KEY), on=DEDUP_KEY, how="left_anti")
+    dated = signals.withColumn("event_date", F.to_date("timestamp"))
+    out, obs = observe_signals(dedup_signals(dated, ["event_date", *DEDUP_KEY]))
     # TIMESTAMP_MICROS, not the INT96 default: INT96 parquet columns carry
     # NO min/max statistics, which silently voids this sink's whole
     # row-group-skipping story for time predicates (the docstring's
@@ -91,8 +91,7 @@ def write_signals(
     spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
     try:
         (
-            out.repartition("event_date")
-            .sortWithinPartitions("token_id", "timestamp", "name")
+            out.sortWithinPartitions("event_date", *DEDUP_KEY)
             .write.mode(mode)
             .partitionBy("event_date")
             .parquet(path)
@@ -104,6 +103,7 @@ def write_signals(
             # never explicitly set before this call: unset rather than
             # pinning MICROS as a permanent session side effect (ADVICE r5)
             spark.conf.unset("spark.sql.parquet.outputTimestampType")
+    return obs.get
 
 
 def read_signals(spark: SparkSession, path: str) -> DataFrame:

@@ -178,23 +178,26 @@ def read_device_dim(
     return dim, quarantine
 
 
-def read_es_export(
+def read_es_hits(
     spark: SparkSession,
-    path: str,
+    paths: str | list[str],
     source_schema: T.StructType,
-) -> tuple[DataFrame, DataFrame]:
-    """Read an Elasticsearch bulk-export NDJSON (the elasticdump / scroll-
+) -> DataFrame:
+    """Parse an Elasticsearch bulk-export NDJSON (the elasticdump / scroll-
     dump hit format: one line per hit, the document under ``_source``,
-    ``_id``/``_index`` metadata alongside) — the file-based stand-in for
-    the reference's live scroll reads
+    ``_id``/``_index`` metadata alongside) with the JVM JSON scan — the
+    file-based stand-in for the reference's live scroll reads
     (/root/reference/internal/service/elastic/elastic.go:46-108) when a
     user migrates an index dump instead of connecting live.
 
-    Returns (docs, quarantine): docs has ``_source`` unwrapped to
-    top-level columns plus ``es_id``/``es_index``; schema-violating lines
-    go to quarantine with the raw text (same T3 contract as
-    read_status_json).  Explicit schema keeps the scan single-pass; at
-    100 TB the export is just another splittable JSON-lines table."""
+    Returns the raw hit envelope (``_id``, ``_index``, ``_source``,
+    CORRUPT_COL), PERMISSIVE: a line that does not parse against the
+    explicit schema keeps its text in CORRUPT_COL.  ``paths`` is a file,
+    a directory or a list of files; an empty list is an empty frame.
+    Explicit schema keeps the scan single-pass; at 100 TB the export is
+    just another splittable JSON-lines table.  Split the result with
+    split_es_hits; a caller that writes both sides persists it first so
+    the export is parsed once."""
     envelope = T.StructType(
         [
             T.StructField("_id", T.StringType()),
@@ -203,12 +206,21 @@ def read_es_export(
             T.StructField(CORRUPT_COL, T.StringType()),
         ]
     )
-    raw = (
+    if isinstance(paths, list) and not paths:
+        return spark.createDataFrame([], envelope)
+    return (
         spark.read.schema(envelope)
         .option("mode", "PERMISSIVE")
         .option("columnNameOfCorruptRecord", CORRUPT_COL)
-        .json(path)
+        .json(paths)
     )
+
+
+def split_es_hits(raw: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """(docs, quarantine) of a read_es_hits frame: docs has ``_source``
+    unwrapped to top-level columns plus ``es_id``/``es_index``; lines that
+    did not parse go to quarantine with the raw text (same T3 contract as
+    read_status_json)."""
     bad = F.col(CORRUPT_COL).isNotNull() | F.col("_source").isNull()
     quarantine = raw.filter(bad).select(F.col(CORRUPT_COL).alias("raw"))
     docs = raw.filter(~bad).select(

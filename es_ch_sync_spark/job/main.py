@@ -35,8 +35,11 @@ def build_parser() -> argparse.ArgumentParser:
         "--source-format",
         default="auto",
         choices=["auto", "parquet", "json", "es-export", "es_status"],
-        help="source reader; es_status = the Python DataSource connector "
-        "with filter/projection pushdown (file-based ES hit exports)",
+        help="source reader; es-export and es_status (same reader) = an ES "
+        "hit export (NDJSON, document under _source), parsed once by the "
+        "JVM JSON scan over the files the es_status connector plans for the "
+        "window (_ES_COMMIT stats prune the rest); malformed lines go to "
+        "the <quarantine>_es side output",
     )
     p.add_argument("--dim", default=None, help="device dimension path (subject,token_id)")
     p.add_argument("--out", required=True, help="signal table output path")
@@ -123,53 +126,73 @@ def main(argv: list[str] | None = None) -> int:
         q.awaitTermination()
         return 0
 
-    es_quarantine = None
-    if args.source_format == "es_status":
-        # the Python DataSource connector: subject/time/source predicates
-        # that plan_sync applies are PUSHED into the source (the reference's
-        # elastic.go:46-108 pushdown boundary, no jars required)
-        from es_ch_sync_spark.io.es_datasource import read_es_status
-
-        status = read_es_status(spark, args.source).drop("es_id", "es_index")
-    elif args.source_format == "es-export" or (
+    # A text source is parsed once: `parsed` is persisted for the run when
+    # more than one output reads it (the signals and the quarantines), and
+    # released before main returns.  split_quarantine caches a frame that
+    # still carries the corrupt-record column itself; persisting that frame
+    # here first makes its cache this one.
+    parsed = es_quarantine = None
+    if args.source_format in ("es_status", "es-export") or (
         args.source_format == "auto"
         and (args.source.endswith(".ndjson") or args.source.endswith("/es-export"))
     ):
-        # elasticdump-style index dump: _source-wrapped hits, one per line —
-        # the file-based migration path off a live ES cluster
-        from es_ch_sync_spark.io.sources import read_es_export
+        # ES hit exports: the JVM JSON scan over exactly the files the
+        # es_status connector would plan for [start, stop) — listing, then
+        # _ES_COMMIT stats pruning, computed on the driver — so no Python
+        # planner or worker runs.  Malformed lines go to the `_es` quarantine.
+        from pyspark.sql import types as T
 
-        status, es_quarantine = read_es_export(spark, args.source, DEVICE_STATUS_SCHEMA)
+        from es_ch_sync_spark.io.es_datasource import DEFAULT_STATUS_DDL, export_files
+        from es_ch_sync_spark.io.sources import read_es_hits, split_es_hits
+
+        source_schema = T.StructType(
+            [
+                f
+                for f in T.StructType.fromDDL(DEFAULT_STATUS_DDL).fields
+                if f.name not in ("es_id", "es_index")
+            ]
+        )
+        parsed = read_es_hits(
+            spark, export_files(args.source, *opts.resolved_window()), source_schema
+        )
+        status, es_quarantine = split_es_hits(parsed)
         status = status.drop("es_id", "es_index")
+        if not args.quarantine:
+            parsed = None  # one reader: nothing to share
     elif args.source_format == "json" or (
         args.source_format == "auto"
         and (args.source.endswith(".json") or args.source.endswith("/json"))
     ):
         from es_ch_sync_spark.io.sources import read_status_json
 
-        status = read_status_json(spark, args.source, DEVICE_STATUS_SCHEMA)
+        status = parsed = read_status_json(spark, args.source, DEVICE_STATUS_SCHEMA)
     else:
         status = spark.read.parquet(args.source)
 
-    signals, quarantine = plan_sync(status, catalog, dim, opts)
-    if es_quarantine is not None and args.quarantine:
-        es_quarantine.write.mode("append").parquet(args.quarantine + "_es")
-    if args.out_format == "txlog":
-        from es_ch_sync_spark.io.sinks import dedup_signals
-        from es_ch_sync_spark.io.txlog import read_table, txlog_append
+    if parsed is not None:
+        parsed.persist()
+    try:
+        signals, quarantine = plan_sync(status, catalog, dim, opts)
+        if args.out_format == "txlog":
+            from es_ch_sync_spark.io.sinks import dedup_signals
+            from es_ch_sync_spark.io.txlog import txlog_append
+            from es_ch_sync_spark.job.metrics import observe_signals
 
-        txlog_append(dedup_signals(signals), args.out)
+            out, obs = observe_signals(dedup_signals(signals))
+            txlog_append(out, args.out)
+            written = obs.get
+        else:
+            from es_ch_sync_spark.io.sinks import write_signals
+
+            written = write_signals(signals, args.out)
         if args.quarantine:
             quarantine.write.mode("append").parquet(args.quarantine)
-        n = read_table(spark, args.out).count()
-    else:
-        from es_ch_sync_spark.io.sinks import write_signals
-
-        write_signals(signals, args.out)
-        if args.quarantine:
-            quarantine.write.mode("append").parquet(args.quarantine)
-        n = spark.read.parquet(args.out).count()
-    print(f"synced: {n} signal rows at {args.out}")
+            if es_quarantine is not None:
+                es_quarantine.write.mode("append").parquet(args.quarantine + "_es")
+    finally:
+        if parsed is not None:
+            parsed.unpersist()
+    print(f"synced: {written['n_signals']} signal rows at {args.out}")
     return 0
 
 

@@ -14,7 +14,16 @@ driver only plans — executors move data.  The entire job is:
     src        = read(events).filter(time range ∧ token-set ∧ exists-any) (S1-S7)
     signals    = unpivot(src, catalog)                   (T1-T3)
                  ⋈ broadcast(device_dim)                 (J1)
-    write      = dedup + anti-join existing + append     (K1-K2)
+    write      = anti-join existing + dedup + append     (K1-K2, the sink)
+
+plan_sync builds everything up to the write and stays lazy: it does not
+dedup, and the only cache it takes is split_quarantine's on a frame that
+still carries the corrupt-record column.  Duplicates are the sink's to absorb, as in the
+reference, where the ClickHouse ReplacingMergeTree collapses them
+(clickhouse.go:113-130, sync.go:128-137): io/sinks.py:write_signals and
+the txlog branch of job/main.py each run dedup_signals exactly once.  The
+CLI (job/main.py) owns the one persisted parse of a text source that the
+signals and the quarantines share.
 
 Config surface mirrors internal/config/settings.go:4-22 (START_TIME,
 STOP_TIME, TOKEN_IDS, SIGNALS; BATCH_SIZE/PARALLEL become Spark split
@@ -30,7 +39,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from es_ch_sync_spark.catalog import SignalCatalog
-from es_ch_sync_spark.io.sinks import dedup_signals
 from es_ch_sync_spark.operators.dimjoin import resolve_tokens
 from es_ch_sync_spark.operators.transform import split_quarantine, unpivot_signals
 
@@ -87,9 +95,11 @@ def plan_sync(
 ) -> tuple[DataFrame, DataFrame]:
     """Build the full sync plan; returns (signals, quarantine).
 
-    Lazily declared — nothing executes until the caller writes/collects, so
-    Catalyst sees the whole pipeline and can push the time/token filters
-    into the source scan beneath the unpivot.
+    ``signals`` still holds the duplicates the source carries (re-emitted
+    documents, overlapping windows): the sink dedups (write_signals /
+    dedup_signals).  Lazily declared — nothing executes until the caller
+    writes/collects, so Catalyst sees the whole pipeline and can push the
+    time/token filters into the source scan beneath the unpivot.
 
     Payload-version dispatch (T1, sync.go:190-204): documents with a
     non-null ``version_col`` are v2 payloads converted through
@@ -134,7 +144,6 @@ def plan_sync(
         )
     else:
         signals = unpivot_signals(wide, cat, token_col=token_col, ts_col=ts_col, source_col=source_col)
-    signals = dedup_signals(signals)
 
     if existing_signals is not None:
         # P4 analog at plan level: don't re-emit already-synced keys.

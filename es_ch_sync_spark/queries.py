@@ -2233,8 +2233,8 @@ def q_sync_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     resolved = tall.join(dim, on="token_id", how="inner")
     # dedup on the signal key only: (token_id, timestamp, name) is unique in
     # this source (verified at every SF), so this equals the oracle's 6-col
-    # DISTINCT while hashing/comparing 3 narrow columns instead of 6;
-    # dedup_signals plans ObjectHashAggregate (no Sort) — see io/sinks.py
+    # DISTINCT while hashing/comparing 3 narrow columns instead of 6
+    # (dedup_signals, the sink's keep-one dedup — see io/sinks.py)
     from es_ch_sync_spark.io.sinks import dedup_signals
 
     return dedup_signals(resolved, ["token_id", "timestamp", "name"])

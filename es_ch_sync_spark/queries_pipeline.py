@@ -2113,10 +2113,11 @@ def q_config_driven_sync(spark: SparkSession, sf_dir: str) -> DataFrame:
     comma-list configs (whitespace, empties, unparseable entries dropped
     without error, sync.go:223-231) become the token/signal predicate
     lists, and the WHOLE plan runs through plan_sync (time window,
-    token IN-list, catalog-filtered unpivot, dedup).  The oracle states
-    the cleaned-up predicates directly."""
+    token IN-list, catalog-filtered unpivot) and the sink's dedup.  The
+    oracle states the cleaned-up predicates directly."""
     import datetime
 
+    from es_ch_sync_spark.io.sinks import dedup_signals
     from es_ch_sync_spark.job.sync import SyncOptions, plan_sync
 
     opts = SyncOptions(
@@ -2139,7 +2140,7 @@ def q_config_driven_sync(spark: SparkSession, sf_dir: str) -> DataFrame:
         ts_col="ts",
         source_col="src",
     )
-    return signals
+    return dedup_signals(signals)
 
 
 # ---------------------------------------------------------------------------

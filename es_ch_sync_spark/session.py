@@ -22,6 +22,18 @@ import os
 from pyspark.sql import SparkSession
 
 
+def default_driver_memory() -> str:
+    """Half the host's physical memory, capped at 16g (min 1g): in local
+    mode the driver JVM is the whole engine, and a heap sized past the
+    host gets the process OOM-killed instead of spilling.  The env var
+    SPARK_GRAFT_DRIVER_MEM overrides it."""
+    try:
+        phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (ValueError, OSError, AttributeError):
+        return "16g"
+    return f"{max(1, min(16, phys // 2**31))}g"
+
+
 def get_spark(
     app_name: str = "es_ch_sync_spark",
     master: str | None = None,
@@ -58,14 +70,17 @@ def get_spark(
         # dominant predicate, S3) silently does nothing.  MICROS restores
         # stats; modern engines (Iceberg/Delta/DuckDB) read it natively.
         .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-        # dedup_signals' ObjectHashAggregate (collect_list winner) must not
-        # fall back to sort-based aggregation at the 128-key default — the
-        # whole point of the formulation is removing the Sort.  Buffer
-        # entries are one tiny payload struct per duplicate row, so a large
-        # map is cheap (io/sinks.py::dedup_signals).
+        # ObjectHashAggregates (collect_list / collect_set / percentile
+        # buffers in the registry's operators) keep hashing instead of
+        # falling back to sort-based aggregation after the 128-key default.
+        # dedup_signals no longer plans one; the value stays because every
+        # registry row's recorded timing and plan was taken with it.
         .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "10000000")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory(),
+        )
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
@@ -101,7 +116,7 @@ def cluster_conf(executor_cores: int = 5, executors: int = 1000) -> dict[str, st
         "spark.sql.parquet.outputTimestampType": "TIMESTAMP_MICROS",
         # dynamic partition overwrite is what upsert_signals relies on
         "spark.sql.sources.partitionOverwriteMode": "dynamic",
-        # keep dedup_signals on ObjectHashAggregate (no Sort) at real key
+        # keep the registry's ObjectHashAggregates hashing at real key
         # cardinalities; see get_spark for rationale
         "spark.sql.objectHashAggregate.sortBased.fallbackThreshold": "10000000",
         # runtime bloom-filter join pruning: inject a bloom filter from the

@@ -17,6 +17,20 @@ def spark():
     yield spark
 
 
+@pytest.fixture(scope="module", autouse=True)
+def _clear_cache_after_module():
+    """A module's cached frames must not leak into later modules' plans:
+    CacheManager substitutes a cached full-schema relation for any later
+    plan over the same source, changing its scans.  Only clears when a
+    session exists, so Spark-free modules never start one."""
+    yield
+    from pyspark.sql import SparkSession
+
+    active = SparkSession.getActiveSession()
+    if active is not None:
+        active.catalog.clearCache()
+
+
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_DIR

@@ -15,12 +15,16 @@ from es_ch_sync_spark.operators.text import analyze_documents
 
 @pytest.fixture(scope="module")
 def docs(spark, sf_dir):
-    return read_parquet_table(spark, sf_dir, "documents").cache()
+    df = read_parquet_table(spark, sf_dir, "documents").cache()
+    yield df
+    df.unpersist()
 
 
 @pytest.fixture(scope="module")
 def emb(spark, sf_dir):
-    return read_parquet_table(spark, sf_dir, "embeddings").cache()
+    df = read_parquet_table(spark, sf_dir, "embeddings").cache()
+    yield df
+    df.unpersist()
 
 
 def test_exact_dedup_removes_planted_copies(spark, docs):

@@ -94,7 +94,7 @@ def test_es_export_reader_unwraps_and_quarantines(spark, tmp_path):
 
     from pyspark.sql import types as T
 
-    from es_ch_sync_spark.io.sources import read_es_export
+    from es_ch_sync_spark.io.sources import read_es_hits, split_es_hits
 
     p = tmp_path / "export.ndjson"
     lines = [
@@ -106,7 +106,7 @@ def test_es_export_reader_unwraps_and_quarantines(spark, tmp_path):
     schema = T.StructType(
         [T.StructField("subject", T.StringType()), T.StructField("speed", T.DoubleType())]
     )
-    docs, quar = read_es_export(spark, str(p), schema)
+    docs, quar = split_es_hits(read_es_hits(spark, str(p), schema))
     rows = {r["es_id"]: (r["subject"], r["speed"]) for r in docs.collect()}
     assert rows == {"a1": ("v1", 12.5), "a2": ("v2", 33.0)}
     assert set(docs.columns) == {"es_id", "es_index", "subject", "speed"}

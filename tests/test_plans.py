@@ -52,14 +52,75 @@ def test_sync_pipeline_shape(plans):
     assert "SortMergeJoin" not in p
 
 
-def test_sync_dedup_is_sortless(plans):
-    # dedup_signals' collect_list winner must plan ObjectHashAggregate —
-    # any regression to first()/max_by/dropDuplicates reintroduces a full
-    # Sort (SortAggregate) in the engine's hottest path (io/sinks.py)
-    p = plans("sync_pipeline")
-    assert "ObjectHashAggregate" in p
-    assert "SortAggregate" not in p
-    assert "Sort [" not in p
+def _final_plan_nodes(description: str) -> list[tuple[str, str]]:
+    """(name, details) of every node in the final plan of an AQE
+    formatted-plan description (the status store's physicalPlanDescription)."""
+    import re
+
+    tree, _, details = description.partition("\n\n")
+    tree = tree.split("== Initial Plan ==")[0]
+    blocks = {
+        int(m.group(1)): m.group(0)
+        for m in re.finditer(r"^\((\d+)\) .*?(?=^\(\d+\) |\Z)", details, re.M | re.S)
+    }
+    nodes = []
+    for m in re.finditer(r"(\w[\w ]*?) \((\d+)\)", tree):
+        nodes.append((m.group(1).strip().lstrip("* "), blocks.get(int(m.group(2)), "")))
+    return nodes
+
+
+def test_sync_cli_write_plan_one_shuffle(spark, tmp_path):
+    """The CLI's signal write: the ES export is a JVM JSON scan (no Python
+    DataSource under it), the signal rows shuffle once — on the dedup key
+    with event_date, never on event_date alone — and one dedup aggregate's
+    Sort is the order the files are written in (no Sort of the write's
+    own).  The device dim's own dedup shuffle sits under its broadcast."""
+    import contextlib
+    import io
+
+    from pyspark.sql import functions as F
+
+    from es_ch_sync_spark.io.es_datasource import write_es_status
+    from es_ch_sync_spark.job.main import main
+
+    docs = spark.range(400).select(
+        F.concat(F.lit("e"), F.col("id").cast("string")).alias("es_id"),
+        F.concat(F.lit("s"), (F.col("id") % 5).cast("string")).alias("subject"),
+        (F.lit("2024-03-01").cast("timestamp") + F.make_interval(mins=F.col("id") * 9)).alias("time"),
+        F.col("id").alias("data_speed"),
+        F.when(F.col("id") % 3 == 0, "Ford").alias("data_make"),
+    )
+    src, dim, out = (str(tmp_path / p) for p in ("export", "dim", "signal"))
+    write_es_status(docs.repartition(2), src, mode="overwrite")
+    spark.createDataFrame([(f"s{i}", i) for i in range(4)], "subject string, token_id bigint").write.parquet(dim)
+
+    with contextlib.redirect_stdout(io.StringIO()):
+        assert main([
+            "--source", src, "--source-format", "es_status", "--dim", dim, "--out", out,
+            "--start", "2024-03-01T00:00:00Z", "--stop", "2024-03-10T00:00:00Z",
+        ]) == 0
+    # the output path is unique to this test: it names the CLI's write
+    it = spark._jsparkSession.sharedState().statusStore().executionsList().iterator()
+    writes = []
+    while it.hasNext():
+        desc = it.next().physicalPlanDescription()
+        if "InsertIntoHadoopFsRelationCommand" in desc and out in desc:
+            writes.append(desc)
+    (desc,) = writes
+    nodes = _final_plan_nodes(desc)
+    names = [n for n, _ in nodes]
+
+    assert "Scan json" in names
+    assert not any("BatchScan" in n or "PythonDataSource" in n for n in names)
+    shuffles = [d for n, d in nodes if n == "Exchange"]
+    signal_shuffles = [d for d in shuffles if "subject" not in d]
+    assert len(shuffles) == 2 and len(signal_shuffles) == 1, shuffles
+    keys = signal_shuffles[0].split("hashpartitioning(")[1]
+    assert all(k in keys for k in ("event_date", "token_id", "timestamp", "name")), keys
+    dedups = [d for n, d in nodes if n.endswith("Aggregate") and "min(struct" in d]
+    assert len([d for d in dedups if "partial_min(" not in d]) == 1, dedups
+    assert names.count("Sort") == 2, names  # the dedup's map and reduce sides
+    assert "Sort" not in names[: names.index("SortAggregate")]
 
 
 def test_agg_has_partial_stage(plans):

@@ -302,3 +302,36 @@ def test_es_cell_array_scan_fixture_explode(spark):
     # event 2: (2+0)%2=0 ✓, (2+1)%3=0 ✓, (2+2)%4=0 ✓, (2+3)%5=0 ✓ — all 4
     # event 3: (3+0)%2≠0, (3+1)%3≠0, (3+2)%4≠0, (3+3)%5≠0 — none
     assert got == [(2, 0, 10.0), (2, 1, 20.0), (2, 2, 30.0), (2, 3, 40.0)]
+
+
+def test_dedup_keeps_the_collect_list_winner(spark):
+    """dedup_signals' min(struct) keeps, per key, exactly the row the former
+    array_min(collect_list(struct)) formulation kept: conflicting
+    duplicates with null value_number / value_string and differing source
+    included."""
+    from pyspark.sql import functions as F
+
+    key = ["token_id", "timestamp", "name"]
+    rows = []
+    for k in range(40):
+        ts = BASE_TIME + timedelta(seconds=k)
+        for j, (src, num, s) in enumerate(
+            [("b", None, "x"), ("a", 2.0, None), ("a", None, None), ("a", 1.0, "y"),
+             ("c", -1.0, "z"), (None, 3.0, "w")][: 1 + k % 6]
+        ):
+            rows.append((k % 7, ts, f"n{k % 3}", src, num, s))
+    sig = spark.createDataFrame(
+        rows,
+        "token_id bigint, timestamp timestamp, name string, source string, "
+        "value_number double, value_string string",
+    )
+    others = [c for c in sig.columns if c not in key]
+    before = (
+        sig.groupBy(*key)
+        .agg(F.array_min(F.collect_list(F.struct(*others))).alias("_p"))
+        .select(*key, *[F.col(f"_p.{c}").alias(c) for c in others])
+    )
+    after = dedup_signals(sig)
+    assert after.count() == sig.select(*key).distinct().count()
+    assert after.exceptAll(before).count() == 0
+    assert before.exceptAll(after).count() == 0

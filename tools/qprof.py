@@ -1,6 +1,6 @@
 """Per-query optimization harness (r16): time individual queries with
 warmup + N repeats on the bench's exact session/config, and dump their
-``explain('formatted')`` to plans/r16/<name>_<tag>.txt.
+``explain('formatted')`` to plans/<ROUND>/<name>_<tag>.txt.
 
 Usage:
     python tools/qprof.py [--plans TAG] [--reps N] [--sf SF_DIR] name ...
@@ -16,6 +16,10 @@ import os
 import sys
 import time
 from pathlib import Path
+
+# Optimization round whose plans/<ROUND>/ directory receives the dumps;
+# QPROF_PLANS_DIR overrides it.
+ROUND = "r17"
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
@@ -56,7 +60,7 @@ def main() -> int:
     spark.read.parquet(f"{sf_dir}/region.parquet").count()
 
     plans_dir = Path(__file__).resolve().parent.parent / "plans" / os.environ.get(
-        "QPROF_PLANS_DIR", "r17"
+        "QPROF_PLANS_DIR", ROUND
     )
     plans_dir.mkdir(parents=True, exist_ok=True)
 
@@ -72,7 +76,6 @@ def main() -> int:
                 df.explain("formatted")
             (plans_dir / f"{name}_{tag}.txt").write_text(buf.getvalue())
         ts = []
-        n = None
         for r in range(reps + 1 if reps else 0):  # --reps 0: plans only
             t0 = time.time()
             n = qs[name](spark, sf_dir).count()
@@ -86,7 +89,7 @@ def main() -> int:
                 flush=True,
             )
         else:
-            print(f"{name}: rows={n} (plan dump only)", flush=True)
+            print(f"{name}: (plan dump only)", flush=True)
         spark.sparkContext.setJobDescription(None)
     return 0
 
