@@ -128,9 +128,9 @@ def main(argv: list[str] | None = None) -> int:
 
     # A text source is parsed once: `parsed` is persisted for the run when
     # more than one output reads it (the signals and the quarantines), and
-    # released before main returns.  split_quarantine caches a frame that
-    # still carries the corrupt-record column itself; persisting that frame
-    # here first makes its cache this one.
+    # released before main returns.  A JSON source is always persisted:
+    # split_quarantine takes no cache of its own, and Spark rejects the
+    # quarantine's corrupt-column-only plan over raw JSON.
     parsed = es_quarantine = None
     if args.source_format in ("es_status", "es-export") or (
         args.source_format == "auto"

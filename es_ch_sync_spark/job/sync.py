@@ -17,9 +17,10 @@ driver only plans — executors move data.  The entire job is:
     write      = anti-join existing + dedup + append     (K1-K2, the sink)
 
 plan_sync builds everything up to the write and stays lazy: it does not
-dedup, and the only cache it takes is split_quarantine's on a frame that
-still carries the corrupt-record column.  Duplicates are the sink's to absorb, as in the
-reference, where the ClickHouse ReplacingMergeTree collapses them
+dedup and takes no cache (a source that still carries the corrupt-record
+column is persisted by its caller; see split_quarantine).  Duplicates are
+the sink's to absorb, as in the reference, where the ClickHouse
+ReplacingMergeTree collapses them
 (clickhouse.go:113-130, sync.go:128-137): io/sinks.py:write_signals and
 the txlog branch of job/main.py each run dedup_signals exactly once.  The
 CLI (job/main.py) owns the one persisted parse of a text source that the

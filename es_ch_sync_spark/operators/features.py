@@ -67,6 +67,7 @@ def chunk_documents(
         F.col(id_col),
         toks.alias("toks"),
         F.size(toks).alias("n_toks"),
+        F.greatest(F.size(toks) - window, F.lit(0)).alias("last_start"),
     )
     # starts = distinct({least(i*stride, n-window) : 0 <= i <= ceil((n-window)/stride)})
     # For n <= window this degenerates to [0] (one whole-doc chunk).
@@ -80,9 +81,7 @@ def chunk_documents(
                     ).cast("int")
                 ),
             ),
-            lambda i: F.least(
-                i * stride, F.greatest(F.col("n_toks") - window, F.lit(0))
-            ),
+            lambda i: F.least(i * stride, F.col("last_start")),
         )
     )
     chunk = F.slice(F.col("toks"), F.col("start_tok") + 1, window)

@@ -214,13 +214,14 @@ def pagerank_fixed(
     # r16 optimization: bounded small-graph driver fast path — same
     # rationale and same integer arithmetic as hits_fixed below (each
     # round above pays join + agg + eager checkpoint in blocking jobs;
-    # Python ints replicate the BIGINT div chain exactly).  r17 (VERDICT
-    # what's-wrong #2): the probed frame is persist()-ed FIRST, so the
-    # partitions the executeTake ramp computes are cached — on the
-    # over-cap branch the distributed path reads the cache instead of
-    # re-executing the upstream mining (the r16 shape paid one extra
-    # full map-side pass there); on the small path the probe is still
-    # ONE bounded job and the (≤cap-row) cache is dropped on return.
+    # Python ints replicate the BIGINT div chain exactly).  The probed
+    # frame is persist()-ed FIRST so the over-cap branch computes the
+    # upstream mining once: the probe's limit ramp caches the partitions
+    # it touches (each in full, even one it reads only part of), the
+    # node checkpoint computes the rest, and every round reads the cache.
+    # On the small path the probe is ONE bounded job and the cache is
+    # dropped on return; the over-cap branch drops it once the final
+    # ranks are checkpointed.
     e_p = e.persist()
     probe = e_p.limit(small_graph_edges + 1).collect()
     if len(probe) <= small_graph_edges:
@@ -259,11 +260,22 @@ def pagerank_fixed(
             [(v, rank_loc[v]) for v in node_set], schema=schema
         )
 
-    # over-cap: the persisted frame IS the shared materialization (the
-    # probe already cached its ramp's partitions; the rest computes once,
-    # on first use) — the former localCheckpoint would re-execute the
-    # whole upstream mining a second time
-    e = e_p
+    # over-cap: the persisted frame IS the shared materialization,
+    # released when the distributed path returns (every frame it returns
+    # is checkpointed and no longer reads it)
+    try:
+        return _pagerank_distributed(
+            e_p, iterations, damping_num, damping_den, unit
+        )
+    finally:
+        e_p.unpersist()
+
+
+def _pagerank_distributed(
+    e: DataFrame, iterations: int, damping_num: int, damping_den: int, unit: int
+) -> DataFrame:
+    """pagerank_fixed's distributed rounds over a persisted (src, dst)
+    edge frame."""
     deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
     nodes = (
         e.select(F.col("src").alias("id"))
@@ -358,11 +370,12 @@ def hits_fixed(
     # blocking jobs, ×2 per iteration, pure fixed overhead when the host
     # graph is small (a near-dup mirror graph has FAR fewer hosts than
     # documents).  The size probe IS the collect (limit cap+1 — one
-    # bounded job) and runs on a persist()-ed frame (r17, VERDICT
-    # what's-wrong #2): the ramp's partitions land in the cache, so the
-    # over-cap branch reuses them instead of re-executing the upstream
-    # mining; the small path's collect is still one bounded job and its
-    # ≤cap-row cache is dropped on return.  When bounded, run the
+    # bounded job) and runs on a persist()-ed frame, so the over-cap
+    # branch computes the upstream mining once (the ramp caches the
+    # partitions it touches, the first full use the rest) and reads the
+    # cache after it; the small path's collect is still one bounded job
+    # and its cache is dropped on return, the over-cap branch's once the
+    # returned frames are checkpointed.  When bounded, run the
     # identical quantized-integer recurrence on the driver — Python ints
     # are arbitrary-precision, so (raw·unit) // tot is exactly the
     # DECIMAL(38,0) `div` the distributed path computes on non-negative
@@ -415,9 +428,17 @@ def hits_fixed(
             [(v, a_loc[v], h_loc[v]) for v in node_set], schema=schema
         )
 
-    # over-cap: reuse the persisted probe frame (see pagerank_fixed — the
-    # former localCheckpoint re-executed the upstream mining)
-    e = e_p
+    # over-cap: reuse the persisted probe frame (see pagerank_fixed),
+    # released once the checkpointed result no longer reads it
+    try:
+        return _hits_distributed(e_p, iterations, unit)
+    finally:
+        e_p.unpersist()
+
+
+def _hits_distributed(e: DataFrame, iterations: int, unit: int) -> DataFrame:
+    """hits_fixed's distributed half-steps over a persisted (src, dst)
+    edge frame."""
     nodes = (
         e.select(F.col("src").alias("id"))
         .unionByName(e.select(F.col("dst").alias("id")))

@@ -90,16 +90,15 @@ def split_quarantine(
     ``corrupt_col``; for parquet fixtures, callers mark bad rows upstream
     (FIXTURES.md `is_malformed`).  Returns (clean, quarantined).
 
-    Both outputs share one scan: Catalyst plans two filters over a cached
-    or re-read source; at scale write the quarantine side to a side sink
-    rather than recomputing.
+    Takes no cache: the caller that owns the source's lifetime persists
+    (or checkpoints) the parsed frame before splitting and releases it
+    after its last action, as job/main.py does.  That is what lets both
+    outputs share one parse, and over raw JSON it is required: Spark
+    rejects a plan that references ONLY the corrupt column
+    (QUERY_ONLY_CORRUPT_RECORD_COLUMN), which counting the quarantine
+    side does.
     """
     if corrupt_col in df.columns:
-        # Spark disallows plans referencing ONLY the corrupt column over raw
-        # JSON (QUERY_ONLY_CORRUPT_RECORD_COLUMN); caching the parsed frame
-        # is the documented contract — and the right call anyway, since both
-        # split outputs share one parse of the source.
-        df = df.cache()
         bad = F.col(corrupt_col).isNotNull()
     elif "is_malformed" in df.columns:
         bad = F.col("is_malformed") == True  # noqa: E712

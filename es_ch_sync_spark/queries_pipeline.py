@@ -2069,11 +2069,15 @@ def q_quarantine_split(spark: SparkSession, sf_dir: str) -> DataFrame:
                     _json.dumps({"event_id": r["event_id"], "value": r["value"]})
                     + "\n"
                 )
+    # the query owns the parse: checkpointed once, both sides read it (a
+    # checkpoint instead of a cache, because the returned frame outlives
+    # this function and nothing would release a cache)
     raw = (
         spark.read.schema("event_id long, value double, _corrupt_record string")
         .option("mode", "PERMISSIVE")
         .option("columnNameOfCorruptRecord", "_corrupt_record")
         .json(path)
+        .localCheckpoint()
     )
     clean, bad = split_quarantine(raw)
     return clean.agg(

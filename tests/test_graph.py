@@ -242,3 +242,33 @@ def test_graph_small_fast_paths_match_distributed(spark):
     assert sorted(map(tuple, pagerank_fixed(el, iterations=1).collect())) == sorted(
         map(tuple, pagerank_fixed(el, iterations=1, small_graph_edges=0).collect())
     )
+
+
+def test_graph_over_cap_paths_release_their_caches(spark):
+    """With small_graph_edges below the edge count, pagerank_fixed,
+    hits_fixed and connected_components take their distributed paths over
+    the persisted probe frame: rows equal the small paths', and nothing
+    is left in the CacheManager once they return."""
+    from es_ch_sync_spark.operators.dedup import connected_components
+    from es_ch_sync_spark.operators.graph import hits_fixed, pagerank_fixed
+
+    spark.catalog.clearCache()
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    E = [("a", "c"), ("b", "c"), ("c", "d"), ("d", "a"), ("c", "a"),
+         ("e", "e"), ("b", "d"), ("f", "g")]
+    edges = spark.createDataFrame(E, "src string, dst string")
+    pairs = spark.createDataFrame(
+        [(3, 9), (9, 5), (5, 7), (10, 12), (12, 11), (20, 21)],
+        "id_a long, id_b long",
+    )
+    runs = [
+        (lambda cap: pagerank_fixed(edges, iterations=3, small_graph_edges=cap)),
+        (lambda cap: hits_fixed(edges, iterations=2, small_graph_edges=cap)),
+        (lambda cap: connected_components(pairs, small_graph_edges=cap)),
+    ]
+    for run in runs:
+        small = sorted(map(tuple, run(1000).collect()))
+        assert cache.isEmpty()
+        over = run(3)  # 3 < edge count: the distributed path
+        assert cache.isEmpty()
+        assert sorted(map(tuple, over.collect())) == small

@@ -34,13 +34,17 @@ def test_permissive_json_quarantine(spark, tmp_path):
     ]
     p.write_text("\n".join(lines))
 
-    df = read_status_json(spark, str(p), SCHEMA)
-    clean, bad = split_quarantine(df, corrupt_col=CORRUPT_COL)
-    assert clean.count() == 2
-    assert bad.count() == 2
-    assert {r["subject"] for r in clean.collect()} == {"1", "3"}
-    # quarantined rows keep the raw text for forensics
-    assert all(r[CORRUPT_COL] for r in bad.collect())
+    # the caller owns the parse's lifetime: split_quarantine takes no cache
+    df = read_status_json(spark, str(p), SCHEMA).persist()
+    try:
+        clean, bad = split_quarantine(df, corrupt_col=CORRUPT_COL)
+        assert clean.count() == 2
+        assert bad.count() == 2
+        assert {r["subject"] for r in clean.collect()} == {"1", "3"}
+        # quarantined rows keep the raw text for forensics
+        assert all(r[CORRUPT_COL] for r in bad.collect())
+    finally:
+        df.unpersist()
 
 
 def test_signal_sink_layout_and_pruning(spark, tmp_path):
@@ -279,3 +283,50 @@ def test_avro_reader_gated_with_deploy_instruction(spark, tmp_path):
             read_avro_table(spark, str(tmp_path / "missing"))
         return
     assert read_avro_table(spark, str(tmp_path / "av")).count() == 3
+
+
+def test_plan_sync_over_json_takes_no_cache(spark, tmp_path):
+    """split_quarantine takes no cache: plan_sync over a JSON source adds
+    nothing to the CacheManager at plan time, and a caller that persists
+    the parse (as job/main.py does) counts and writes both outputs with no
+    QUERY_ONLY_CORRUPT_RECORD_COLUMN error and an empty CacheManager once
+    it releases the parse."""
+    from datetime import timedelta
+
+    from es_ch_sync_spark.catalog import DEVICE_STATUS_CATALOG
+    from es_ch_sync_spark.fixtures import (
+        BASE_TIME,
+        DEVICE_STATUS_SCHEMA,
+        device_dim_df,
+        device_status_df,
+    )
+    from es_ch_sync_spark.job.sync import SyncOptions, plan_sync
+
+    spark.catalog.clearCache()
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    src = tmp_path / "status"
+    device_status_df(spark, subjects=4, rows_per_subject=20, malformed_every=0).write.json(
+        str(src)
+    )
+    (src / "broken.json").write_text('{"subject": "1", "time": \nnot json at all\n')
+    dim = device_dim_df(spark, subjects=4)
+    opts = SyncOptions(
+        start_time=BASE_TIME - timedelta(days=1), stop_time=BASE_TIME + timedelta(days=1)
+    )
+
+    plan_sync(read_status_json(spark, str(src), DEVICE_STATUS_SCHEMA), DEVICE_STATUS_CATALOG,
+              dim, opts)
+    assert cache.isEmpty()
+
+    parsed = read_status_json(spark, str(src), DEVICE_STATUS_SCHEMA).persist()
+    try:
+        signals, quarantine = plan_sync(parsed, DEVICE_STATUS_CATALOG, dim, opts)
+        assert quarantine.count() == 2
+        assert signals.count() > 0
+        written = write_signals(signals, str(tmp_path / "signal"), mode="overwrite")
+        quarantine.write.parquet(str(tmp_path / "quarantine"))
+    finally:
+        parsed.unpersist()
+    assert cache.isEmpty()
+    assert written["n_signals"] == read_signals(spark, str(tmp_path / "signal")).count()
+    assert spark.read.parquet(str(tmp_path / "quarantine")).count() == 2

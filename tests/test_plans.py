@@ -543,11 +543,12 @@ def test_nb_census_not_replayed(plans):
 
 
 # --- Plan-shape gate (r11 verdict directive #1) -------------------------
-# tools/plan_gate.py is the single source of truth for the three rules
+# tools/plan_gate.py is the single source of truth for the four rules
 # (zero CartesianProduct, census-whitelisted single-partition windows,
-# shared-pass FileScan budgets); it runs in three places: here (pytest),
-# tools/dump_plans.py (the PLANS.md regen step of the sweep chain), and
-# standalone via `python tools/plan_gate.py`.
+# shared-pass FileScan budgets, lambdas that capture no computed
+# expression); it runs in three places: here (pytest), tools/dump_plans.py
+# (the PLANS.md regen step of the sweep chain), and standalone via
+# `python tools/plan_gate.py`.
 
 def _plan_gate():
     import sys
@@ -625,3 +626,66 @@ def test_plan_gate_live_shared_pass(spark, sf_dir):
         df.collect()
         plan = df._jdf.queryExecution().executedPlan().toString()
         assert pg.violations(name, plan) == [], name
+
+
+def test_plan_gate_rule4_flags_lambda_captures(spark):
+    """Rule 4 is non-vacuous: the former O(L^2) fingerprint_rolling and
+    word_shingles forms (their lambdas closed over normalize_text(col) /
+    words(col)) are flagged; the current kernels and stopword_hits, whose
+    captured stopword array folds to a literal, are not."""
+    from pyspark.sql import functions as F
+
+    from es_ch_sync_spark.operators.dedup import word_shingles
+    from es_ch_sync_spark.operators.text import (
+        ROLL_MOD,
+        fingerprint_rolling,
+        normalize_text,
+        repetition_metrics,
+        stopword_hits,
+        words,
+    )
+
+    pg = _plan_gate()
+    docs = spark.createDataFrame([(1, "a b  c"), (2, None)], "doc_id int, text string")
+    t = F.col("text")
+
+    def caps(col):
+        return pg.invariant_captures(pg.optimized_json(docs.select(col.alias("x"))))
+
+    norm = normalize_text(t)
+    old_fp = F.aggregate(
+        F.sequence(F.lit(1), F.length(norm)),
+        F.lit(0).cast("long"),
+        lambda acc, i: (acc * 131 + F.ascii(F.substr(norm, i, F.lit(1)))) % F.lit(ROLL_MOD),
+    )
+    w = words(t)
+    old_sh = F.array_distinct(
+        F.transform(
+            F.sequence(F.lit(1), F.greatest(F.size(w) - 2, F.lit(1))),
+            lambda i: F.concat_ws(" ", F.slice(w, i, 3)),
+        )
+    )
+    (fp_cap,) = caps(old_fp)
+    assert fp_cap.startswith("StringTrim(RegExpReplace(Lower(text)"), fp_cap
+    (sh_cap,) = caps(old_sh)
+    assert sh_cap.startswith("StringSplit(StringTrim("), sh_cap
+    # one finding per distinct capture, however many frames repeat it
+    plan = pg.optimized_json(docs.select(old_fp))
+    (v,) = pg.lambda_violations("q", [plan, plan])
+    assert v.startswith("q: lambda body captures computed StringTrim(")
+    # a capture of an enclosing lambda's variable is not invariant
+    nested = F.transform(
+        F.array(w), lambda ws: F.transform(ws, lambda x: F.concat(x, ws[0]))
+    )
+    assert caps(nested) == []
+    for col in (fingerprint_rolling(t), word_shingles(t, 3), stopword_hits(t, "en")):
+        assert caps(col) == []
+    assert pg.invariant_captures(pg.optimized_json(repetition_metrics(docs))) == []
+
+
+def test_plan_gate_rule4_registry_sweep(spark, sf_dir):
+    """Rule 4 over every registered query (final plans plus every frame a
+    query checkpoints, caches or collects while it is built): no
+    offender."""
+    pg = _plan_gate()
+    assert pg.sweep(spark, sf_dir) == {}

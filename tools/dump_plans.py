@@ -2,7 +2,9 @@
 the plan-audit artifact: shows pushed filters, join strategies, partial
 aggregation, and codegen spans for every headline query at a glance.
 
-Usage: python tools/dump_plans.py [sf_dir]
+Usage: python tools/dump_plans.py [sf_dir] [query ...]
+With query names, only those headline sections are re-dumped and replaced
+in the existing PLANS.md; every other section is left as it is.
 """
 
 from __future__ import annotations
@@ -157,6 +159,33 @@ def _marker_counts(plan: str) -> dict[str, int]:
     return counts
 
 
+def _section(name: str, plan: str) -> str:
+    counts = _marker_counts(plan)
+    print(f"# {name}: {counts}", file=sys.stderr)
+    return "\n".join([
+        f"## {name}",
+        "",
+        "markers: " + ", ".join(f"{k}×{v}" for k, v in sorted(counts.items())),
+        "",
+        "```",
+        _final_section(plan).rstrip(),
+        "```",
+        "",
+    ])
+
+
+def _splice(text: str, sections: dict[str, str]) -> str:
+    """Replace the named sections of a PLANS.md text (each runs from its
+    '## name' heading to the next heading)."""
+    for name, body in sections.items():
+        m = re.search(rf"^## {re.escape(name)}\n.*?(?=^## |\Z)", text, re.S | re.M)
+        if m is None:
+            raise SystemExit(f"{name}: no section in PLANS.md")
+        tail = "\n" if m.end() < len(text) else ""
+        text = text[: m.start()] + body + tail + text[m.end():]
+    return text
+
+
 def main() -> None:
     from plan_gate import violations  # tools/plan_gate.py (same dir)
 
@@ -164,6 +193,10 @@ def main() -> None:
     from es_ch_sync_spark.session import get_spark
 
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
+    only = sys.argv[2:]
+    unknown = [q for q in only if q not in HEADLINE]
+    if unknown:
+        raise SystemExit(f"not headline queries: {unknown}")
     spark = get_spark("dump_plans", shuffle_partitions=16)
     qs = spark_queries()
     out = ["# PLANS — executed physical plans of the headline queries",
@@ -180,24 +213,20 @@ def main() -> None:
            "excluded); BroadcastExchange counted separately.  The",
            "'== Initial Plan ==' section AQE appends is stripped.", ""]
     gate_failures: list[str] = []
-    for name in HEADLINE:
+    sections: dict[str, str] = {}
+    for name in only or HEADLINE:
         df = qs[name](spark, sf_dir)
         # execute THIS df's QueryExecution so its AdaptiveSparkPlan
         # finalizes (df.write/... would spawn a separate QueryExecution)
         df.collect()
         plan = df._jdf.queryExecution().executedPlan().toString()
-        counts = _marker_counts(plan)
         gate_failures.extend(violations(name, plan))
-        out.append(f"## {name}")
-        out.append("")
-        out.append("markers: " + ", ".join(f"{k}×{v}" for k, v in sorted(counts.items())))
-        out.append("")
-        out.append("```")
-        out.append(_final_section(plan).rstrip())
-        out.append("```")
-        out.append("")
-        print(f"# {name}: {counts}", file=sys.stderr)
-    Path("/root/repo/PLANS.md").write_text("\n".join(out))
+        sections[name] = _section(name, plan)
+    path = Path(__file__).resolve().parent.parent / "PLANS.md"
+    if only:
+        path.write_text(_splice(path.read_text(), sections))
+    else:
+        path.write_text("\n".join(out + list(sections.values())))
     print("wrote PLANS.md")
     # Plan-shape gate (r11 verdict #1): fail the regen step itself — the
     # artifact still gets written (diffable), but the chain goes red.
@@ -205,7 +234,7 @@ def main() -> None:
         for v in gate_failures:
             print(f"PLAN GATE FAIL {v}", file=sys.stderr)
         sys.exit(1)
-    print(f"plan gate: OK ({len(HEADLINE)} plans, 0 violations)")
+    print(f"plan gate: OK ({len(sections)} plans, 0 violations)")
 
 
 if __name__ == "__main__":

@@ -1,7 +1,7 @@
 """Machine-checkable plan-shape gate (r11 verdict directive #1): turns the
 judge's three-round eyeball audit of PLANS.md into a regression check.
 
-Three rules, each a scale invariant the engine documents in
+Four rules, each a scale invariant the engine documents in
 ARCHITECTURE.md (reference analog: the pushdown surface at
 `/root/reference/internal/service/elastic/elastic.go:46-108` — plan shape
 IS the product there, and here):
@@ -22,17 +22,40 @@ IS the product there, and here):
    one materialized posting/trigram table feeding every downstream leg)
    must never silently re-grow a second corpus scan — their executed
    plans carry at most 1 `FileScan`.
+4. **Lambdas capture attributes or lambda variables only.**  A
+   higher-order function (`transform`, `aggregate`, `filter`, ...)
+   evaluates its lambda body once per array element, and subexpression
+   elimination does not hoist out of lambda bodies: a body that contains
+   a computed expression over the row (say `substr(normalize(text), i,
+   1)`) re-runs that expression per element, which turns an O(L) kernel
+   into O(L^2).  The rule flags every lambda-invariant non-trivial
+   subexpression of a lambda body: one that references no lambda
+   variable, is not an attribute or a literal, and contains an attribute
+   reference.  It reads the OPTIMIZED LOGICAL plan (so constant arrays
+   such as `stopword_hits`' stopword list fold to literals first), and
+   the plans of every frame a query checkpoints, caches or collects while
+   it is built, because those never reach the final plan.  Bind the value
+   outside the lambda instead (a pre-projected column, or a one-element
+   `transform(array(v), w -> ...)[0]` let).  No query is exempt.  The
+   sweep sees the code paths a query takes at the scale it is run at.
 
 Usage:
-    python tools/plan_gate.py [PLANS.md]   # gate the committed artifact
-Also imported by tools/dump_plans.py (gates plans as they are dumped) and
+    python tools/plan_gate.py [PLANS.md]          # rules 1-3 on the artifact
+    python tools/plan_gate.py SF_DIR [query ...]  # rule 4, live registry sweep
+Rules 1-3 read executed physical plans, so they gate the committed
+artifact; rule 4 needs the optimized logical plan, which the artifact does
+not hold, so it builds the queries live.  Also imported by
+tools/dump_plans.py (gates plans as they are dumped) and
 tests/test_plans.py (pytest gate on the committed artifact + live checks).
 """
 
 from __future__ import annotations
 
+import json
+import os
 import re
 import sys
+from collections.abc import Iterator
 
 # Queries whose single-partition window runs over a BOUNDED CENSUS — a
 # frame whose cardinality is fixed by construction, independent of corpus
@@ -181,8 +204,204 @@ def parse_plans_md(text: str) -> dict[str, str]:
     return plans
 
 
+_TRIVIAL = {"AttributeReference", "Literal"}
+
+
+def _cls(node: dict) -> str:
+    return node["class"].rsplit(".", 1)[-1]
+
+
+def _is_flat_tree(value: object) -> bool:
+    return (
+        isinstance(value, list)
+        and bool(value)
+        and all(isinstance(x, dict) and "num-children" in x for x in value)
+    )
+
+
+def _unflatten(nodes: list[dict]) -> list[dict]:
+    """Rebuild the trees of a TreeNode.toJSON pre-order list (each node
+    carries its `num-children`); returns the roots, children under
+    `_kids`."""
+    roots: list[dict] = []
+    stack: list[tuple[dict, int]] = []  # (node, children still expected)
+    for raw in nodes:
+        node = dict(raw, _kids=[])
+        if stack:
+            parent, left = stack.pop()
+            parent["_kids"].append(node)
+            if left > 1:
+                stack.append((parent, left - 1))
+        else:
+            roots.append(node)
+        if node["num-children"]:
+            stack.append((node, node["num-children"]))
+    return roots
+
+
+def _trees(value: object) -> Iterator[dict]:
+    """Every tree serialized anywhere inside a toJSON value: the plan
+    itself, each operator's expression fields, nested subquery plans."""
+    if _is_flat_tree(value):
+        yield from _unflatten(value)  # type: ignore[arg-type]
+    elif isinstance(value, list):
+        for v in value:
+            yield from _trees(v)
+    elif isinstance(value, dict):
+        for k, v in value.items():
+            if k not in ("class", "num-children", "_kids"):
+                yield from _trees(v)
+
+
+def _nodes(root: dict) -> Iterator[dict]:
+    """Pre-order over a tree and over every tree held in its fields."""
+    stack = [root]
+    while stack:
+        node = stack.pop()
+        yield node
+        stack.extend(reversed(node["_kids"]))
+        for k, v in node.items():
+            if k not in ("class", "num-children", "_kids"):
+                stack.extend(_trees(v))
+
+
+def _mark(root: dict) -> None:
+    """Set `_lv` (subtree references a lambda variable) and `_attr`
+    (subtree references an attribute) on every node of one tree."""
+    order, stack = [], [root]
+    while stack:
+        node = stack.pop()
+        order.append(node)
+        stack.extend(node["_kids"])
+    for node in reversed(order):
+        cls = _cls(node)
+        node["_lv"] = cls == "NamedLambdaVariable" or any(k["_lv"] for k in node["_kids"])
+        node["_attr"] = cls == "AttributeReference" or any(k["_attr"] for k in node["_kids"])
+
+
+def _render(node: dict, limit: int = 160) -> str:
+    """Compact one-line form of an expression tree, for messages."""
+    cls = _cls(node)
+    if cls == "AttributeReference":
+        out = node.get("name", "?")
+    elif cls == "Literal":
+        out = repr(node.get("value"))
+    else:
+        out = f"{cls}({', '.join(_render(k, limit) for k in node['_kids'])})"
+    return out if len(out) <= limit else out[: limit - 3] + "..."
+
+
+def invariant_captures(plan_json: str) -> list[str]:
+    """Rule 4 over one optimized logical plan (`plan.toJSON()`): the
+    rendered lambda-invariant, non-trivial subexpressions of every lambda
+    body (outermost only).  A nested lambda is checked on its own; a
+    subexpression that references an enclosing lambda's variable is not
+    invariant."""
+    found: list[str] = []
+    for tree in _trees(json.loads(plan_json)):
+        for node in _nodes(tree):
+            if _cls(node) != "LambdaFunction":
+                continue
+            body = node["_kids"][0]
+            _mark(body)
+            stack = [body]
+            while stack:
+                e = stack.pop()
+                cls = _cls(e)
+                if cls == "LambdaFunction":
+                    continue
+                if e["_lv"]:
+                    stack.extend(e["_kids"])
+                elif cls not in _TRIVIAL and e["_attr"]:
+                    found.append(_render(e))
+    return found
+
+
+def lambda_violations(name: str, plan_jsons: list[str]) -> list[str]:
+    """Rule 4 for one query, given the optimized-plan JSON of its final
+    frame and of every frame materialized while building it."""
+    caps = sorted({c for pj in plan_jsons for c in invariant_captures(pj)})
+    return [
+        f"{name}: lambda body captures computed {c} (re-evaluated per "
+        "element: bind it outside the lambda)"
+        for c in caps
+    ]
+
+
+def optimized_json(df) -> str:
+    return df._jdf.queryExecution().optimizedPlan().toJSON()
+
+
+# DataFrame methods that materialize a frame while a query is being built:
+# the frames they act on never reach the query's final plan (a checkpoint
+# or cache replaces them), so rule 4 reads them as they go by.
+_EAGER = ("localCheckpoint", "checkpoint", "persist", "cache", "collect",
+          "count", "take", "toPandas", "toLocalIterator", "isEmpty")
+
+
+def query_plan_jsons(spark, sf_dir: str, fn) -> list[str]:
+    """Build one registry query; return the optimized-plan JSON of its
+    final frame and of every frame its construction materialized.  While
+    it builds, each eager DataFrame method records the plan of the frame
+    it acts on first (before a cache can substitute an InMemoryRelation
+    for it)."""
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    seen: list[str] = []
+    saved = {m: DataFrame.__dict__[m] for m in _EAGER}
+
+    def recording(orig):
+        def wrapped(self, *a, **kw):
+            seen.append(optimized_json(self))
+            return orig(self, *a, **kw)
+
+        return wrapped
+
+    for m, orig in saved.items():
+        setattr(DataFrame, m, recording(orig))
+    try:
+        df = fn(spark, sf_dir)
+    finally:
+        for m, orig in saved.items():
+            setattr(DataFrame, m, orig)
+    return seen + [optimized_json(df)]
+
+
+def sweep(spark, sf_dir: str, only: set[str] | None = None) -> dict[str, list[str]]:
+    """Rule 4 over the registry: {query: violations} for offenders only."""
+    from es_ch_sync_spark.queries import spark_queries
+
+    bad: dict[str, list[str]] = {}
+    for name, fn in spark_queries().items():
+        if only and name not in only:
+            continue
+        v = lambda_violations(name, query_plan_jsons(spark, sf_dir, fn))
+        if v:
+            bad[name] = v
+    return bad
+
+
+def main_sweep(sf_dir: str, only: set[str]) -> None:
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+    from es_ch_sync_spark.session import get_spark
+
+    spark = get_spark("plan_gate_sweep")
+    bad = sweep(spark, sf_dir, only)
+    if bad:
+        n = sum(len(v) for v in bad.values())
+        print(f"plan gate rule 4: {n} capture(s) in {len(bad)} queries:")
+        for vs in bad.values():
+            for v in vs:
+                print(f"  FAIL {v}")
+        sys.exit(1)
+    print("plan gate rule 4: OK (no lambda-invariant captures)")
+
+
 def main() -> None:
     path = sys.argv[1] if len(sys.argv) > 1 else "/root/repo/PLANS.md"
+    if os.path.isdir(path):
+        main_sweep(path, set(sys.argv[2:]))
+        return
     with open(path) as f:
         plans = parse_plans_md(f.read())
     if not plans:
