@@ -63,7 +63,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from es_ch_sync_spark.io.sinks import DEDUP_KEY
+from es_ch_sync_spark.io.sinks import DEDUP_KEY, dedup_signals
 
 MANIFEST_FILE = "_MANIFEST.json"
 LOCK_FILE = "_WRITER_LOCK"
@@ -225,9 +225,19 @@ def upsert_signals(
     union re-adds) — the plain-Parquet analog of ReplacingMergeTree
     absorption the reference relies on (sync.go:128-137).  The rewrite
     goes through ``_stage_and_swap`` (see module docstring).
+
+    Conflicting rows for one key inside ``updates`` resolve the way the
+    sink's do: ``io/sinks.dedup_signals`` keeps the ``min(struct)``
+    winner, grouped with ``event_date`` as ``write_signals`` does, so the
+    kept row does not depend on the input's partitioning.  No
+    ``repartition("event_date")`` before the write: that put a whole day
+    in one task.
     """
     key = key or DEDUP_KEY
-    up = updates.withColumn("event_date", F.to_date("timestamp")).dropDuplicates(key)
+    up = dedup_signals(
+        updates.withColumn("event_date", F.to_date("timestamp")),
+        ["event_date", *key],
+    )
 
     existing = spark.read.parquet(table_path)
     touched = [r["event_date"] for r in up.select("event_date").distinct().collect()]
@@ -237,7 +247,7 @@ def upsert_signals(
     merged = kept.unionByName(up.select(*kept.columns))
 
     _stage_and_swap(
-        merged.repartition("event_date").sortWithinPartitions(*DEDUP_KEY),
+        merged.sortWithinPartitions("event_date", *DEDUP_KEY),
         table_path,
         "event_date",
     )

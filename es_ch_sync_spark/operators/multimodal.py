@@ -1,5 +1,6 @@
 """Multimodal column plumbing: image/audio/video as opaque binary columns
-with typed metadata, processed via Arrow-batched Pandas UDFs.
+with typed metadata, processed through one Arrow boundary (``map_blobs``,
+over mapInArrow) that every per-blob kernel shares.
 
 Decode support is two-tier, honestly split by what pure numpy can do:
 
@@ -33,8 +34,8 @@ Decode support is two-tier, honestly split by what pure numpy can do:
   never silently fake pixels.
 
 Everything Spark-side is real and tested either way: the schema contract,
-the `mapInPandas` batch shape, partition sizing, and the metadata
-projection.
+the `map_blobs` boundary with its null/error-row rule, partition sizing,
+and the metadata projection.
 
 Scale posture for binary columns:
 - keep blobs in their own column so Parquet column pruning skips them for
@@ -47,18 +48,15 @@ Scale posture for binary columns:
 
 from __future__ import annotations
 
+import functools
 import struct as _struct
-
-from collections.abc import Iterator
-
-import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 # Errors a malformed blob may legitimately raise out of the pure-python
-# codecs.  Row-level kernels catch exactly this tuple so ONE bad
+# codecs.  map_blobs catches exactly this tuple so ONE bad
 # real-world blob lands in its row's ``error`` column instead of failing
 # the whole Spark job (ADVICE r14: struct.error from short segment/chunk
 # bodies and KeyError from scans that omit a component escaped the old
@@ -2099,9 +2097,8 @@ def decode_image_stub(blob: bytes) -> dict:
     """Deterministic fake decode: derives pseudo-pixel stats from the bytes.
 
     Replace body with PIL/libvips decode in a container that has them; the
-    mapInPandas plumbing, schema, and batch shape do not change."""
-    if blob is None:
-        return {"n_bytes": None, "content_md5": None, "feature": None}
+    map_blobs boundary and FEATURE_SCHEMA do not change.  Never sees a null
+    blob: map_blobs turns one into an all-null row itself."""
     import hashlib
 
     h = hashlib.md5(blob).hexdigest()
@@ -2233,13 +2230,14 @@ def parse_mjpeg_avi(blob: bytes) -> dict:
     return meta
 
 
-def sample_video_frames(blob: bytes, every_ms: int) -> list[bytes]:
+def sample_video_frames(blob: bytes, every_ms: int) -> list[tuple[int, int, bytes]]:
     """REAL frame sampling, no video library: parse the MJPEG-AVI
     container, pick the frame under each ``every_ms`` tick (index =
     floor(t·rate / (1000·scale)), exact integer arithmetic), and return
-    those frames' JPEG bytes — the container is lossless, so the sampled
-    blobs are byte-identical to what the encoder stored.  Decode of the
-    sampled frames is decode_jpeg's job (see video_frame_stats)."""
+    one ``(frame_idx, t_ms, jpeg)`` per tick — the container is lossless,
+    so the sampled blobs are byte-identical to what the encoder stored.
+    The one tick walk both video kernels share; decode of the sampled
+    frames is decode_jpeg's job (see video_frame_stats)."""
     if every_ms <= 0:
         raise ValueError("every_ms must be positive")
     v = parse_mjpeg_avi(blob)
@@ -2250,29 +2248,79 @@ def sample_video_frames(blob: bytes, every_ms: int) -> list[bytes]:
         idx = (t * v["rate"]) // (1000 * v["scale"])
         if idx >= n:
             break
-        out.append(v["frames"][idx])
+        out.append((idx, t, v["frames"][idx]))
         t += every_ms
     return out
 
 
-def extract_features(media: DataFrame, batch_rows: int = 256) -> DataFrame:
-    """Blob → (n_bytes, md5, feature[8]) via mapInPandas (Arrow batches).
+def map_blobs(media: DataFrame, kernel, schema: T.StructType) -> DataFrame:
+    """The one Python boundary for blob kernels: ``(media_id, content)``
+    Arrow batches in, ``schema`` Arrow batches out, through mapInArrow.
 
-    The UDF sees pandas DataFrames, never Python-per-row; output rows are
-    tiny so every downstream op (dedup by content_md5, ANN over feature)
-    shuffles features, not blobs."""
+    ``kernel(media_id, blob)`` is a per-blob codec body: it yields output
+    row tuples in ``schema`` field order and never sees a null blob, a
+    batch or a pandas frame.  Row isolation, so a bad blob never fails
+    the job:
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = []
-            for mid, blob in zip(pdf["media_id"], pdf["content"]):
-                d = decode_image_stub(bytes(blob) if blob is not None else None)
-                out.append(
-                    (mid, d["n_bytes"], d["content_md5"], d["feature"])
-                )
-            yield pd.DataFrame(out, columns=["media_id", "n_bytes", "content_md5", "feature"])
+    - a null ``content`` gives one row, media_id plus nulls, with
+      ``error`` = "null content";
+    - a kernel raising one of ``_ROW_DECODE_ERRORS`` gives one such row
+      with the message (first 200 chars) in ``error``, after any rows it
+      had already yielded for that blob (a clip with one corrupt
+      sampled frame keeps the rows of the frames before it).
 
-    return media.select("media_id", "content").mapInPandas(batches, FEATURE_SCHEMA)
+    A schema without an ``error`` column (extract_features) gets the
+    same row with nulls only.  Output rows are small stats, so the blob
+    column never leaves the executor and downstream shuffles move stats,
+    not pixels; the decode parallelism is the input's partitioning."""
+    names = schema.fieldNames()
+
+    def blank(media_id, error):
+        return tuple(
+            media_id if n == "media_id" else error if n == "error" else None
+            for n in names
+        )
+
+    def batches(it):
+        import pyarrow as pa
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        out_schema = to_arrow_schema(schema)
+        for rb in it:
+            rows = []
+            for media_id, blob in zip(
+                rb.column(0).to_pylist(), rb.column(1).to_pylist()
+            ):
+                if blob is None:
+                    rows.append(blank(media_id, "null content"))
+                    continue
+                try:
+                    for row in kernel(media_id, blob):
+                        rows.append(row)
+                except _ROW_DECODE_ERRORS as exc:
+                    rows.append(blank(media_id, str(exc)[:200]))
+            cols = list(zip(*rows)) or [()] * len(names)
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(c, f.type) for c, f in zip(cols, out_schema)],
+                schema=out_schema,
+            )
+
+    return media.select("media_id", "content").mapInArrow(batches, schema)
+
+
+def feature_rows(media_id: int, blob: bytes):
+    """extract_features' kernel: one (media_id, n_bytes, md5, feature[8])
+    row from decode_image_stub."""
+    d = decode_image_stub(blob)
+    yield media_id, d["n_bytes"], d["content_md5"], d["feature"]
+
+
+def extract_features(media: DataFrame) -> DataFrame:
+    """Blob → (n_bytes, md5, feature[8]) through map_blobs; a null blob
+    gives an all-null stats row.  Output rows are tiny so every downstream
+    op (dedup by content_md5, ANN over feature) shuffles features, not
+    blobs."""
+    return map_blobs(media, feature_rows, FEATURE_SCHEMA)
 
 
 PIXEL_STATS_SCHEMA = T.StructType(
@@ -2288,75 +2336,26 @@ PIXEL_STATS_SCHEMA = T.StructType(
 )
 
 
-def extract_pixel_features(
-    media: DataFrame, batch_rows: int = 256, use_arrow: bool = False
-) -> DataFrame:
-    """REAL decode → per-channel pixel means via mapInPandas.
+def pixel_stats_rows(media_id: int, blob: bytes):
+    """extract_pixel_features' kernel: decode_image → per-channel means,
+    rounded 4dp for cross-engine hashing."""
+    px = decode_image(blob)
+    m = px.reshape(-1, 3).mean(axis=0)
+    yield (
+        media_id, px.shape[1], px.shape[0], round(float(m[0]), 4),
+        round(float(m[1]), 4), round(float(m[2]), 4), None,
+    )
 
-    Uncompressed blobs (BMP/PPM) decode in pure numpy; codec blobs land in
-    the per-row ``error`` column with null stats — row-level isolation,
-    same contract as the quarantine operators (a bad blob never fails the
-    job).  Output rows are tiny (7 scalars), so downstream shuffles move
-    stats, not pixels.  ``use_arrow`` (r17 pilot, guide §4): mapInArrow
-    variant that skips the Arrow→pandas conversion on both sides."""
 
-    def _decode_rows(ids, blobs):
-        out = []
-        for mid, blob in zip(ids, blobs):
-            try:
-                px = decode_image(bytes(blob))
-                m = px.reshape(-1, 3).mean(axis=0)
-                out.append(
-                    (int(mid), px.shape[1], px.shape[0],
-                     round(float(m[0]), 4), round(float(m[1]), 4),
-                     round(float(m[2]), 4), None)
-                )
-            except _ROW_DECODE_ERRORS as exc:
-                out.append((int(mid), None, None, None, None, None, str(exc)[:200]))
-        return out
+def extract_pixel_features(media: DataFrame) -> DataFrame:
+    """REAL decode → per-channel pixel means through map_blobs.
 
-    if use_arrow:
-        def batches_arrow(it):
-            import pyarrow as pa
-
-            cols = ["media_id", "width", "height", "mean_r", "mean_g",
-                    "mean_b", "error"]
-            types = [pa.int64(), pa.int32(), pa.int32(), pa.float64(),
-                     pa.float64(), pa.float64(), pa.string()]
-            for rb in it:
-                rows = _decode_rows(
-                    rb.column(0).to_pylist(), rb.column(1).to_pylist()
-                )
-                yield pa.RecordBatch.from_arrays(
-                    [pa.array([r[i] for r in rows], types[i])
-                     for i in range(7)],
-                    names=cols,
-                )
-
-        return media.select("media_id", "content").mapInArrow(
-            batches_arrow, PIXEL_STATS_SCHEMA
-        )
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = []
-            for mid, blob in zip(pdf["media_id"], pdf["content"]):
-                try:
-                    px = decode_image(bytes(blob))
-                    m = px.reshape(-1, 3).mean(axis=0)
-                    out.append(
-                        (mid, px.shape[1], px.shape[0],
-                         round(float(m[0]), 4), round(float(m[1]), 4),
-                         round(float(m[2]), 4), None)
-                    )
-                except _ROW_DECODE_ERRORS as exc:
-                    out.append((mid, None, None, None, None, None, str(exc)[:200]))
-            yield pd.DataFrame(
-                out,
-                columns=["media_id", "width", "height", "mean_r", "mean_g", "mean_b", "error"],
-            )
-
-    return media.select("media_id", "content").mapInPandas(batches, PIXEL_STATS_SCHEMA)
+    Every format decode_image handles decodes in pure numpy; gated
+    (lossy WebP) and malformed blobs land in the per-row ``error`` column
+    with null stats — row-level isolation, same contract as the
+    quarantine operators (a bad blob never fails the job).  Output rows
+    are tiny (7 scalars), so downstream shuffles move stats, not pixels."""
+    return map_blobs(media, pixel_stats_rows, PIXEL_STATS_SCHEMA)
 
 
 AUDIO_STATS_SCHEMA = T.StructType(
@@ -2371,47 +2370,32 @@ AUDIO_STATS_SCHEMA = T.StructType(
 )
 
 
+def audio_stats_rows(media_id: int, blob: bytes):
+    """extract_audio_stats' kernel: decode dispatched on magic (RIFF/WAVE
+    PCM16 or FLAC) → whole-clip mean amplitude and RMS."""
+    import numpy as np
+
+    from es_ch_sync_spark.operators.flac import decode_flac
+
+    if blob[:4] == b"fLaC":
+        s, rate = decode_flac(blob)
+    elif blob[:4] == b"RIFF":
+        s, rate = decode_wav_pcm16(blob)
+    else:
+        raise ValueError("unrecognized audio format")
+    f = np.asarray(s, np.float64).reshape(len(s), -1)
+    yield (
+        media_id, len(f), int(rate), round(float(f.mean()), 4),
+        round(float(np.sqrt((f * f).mean())), 4), None,
+    )
+
+
 def extract_audio_stats(media: DataFrame) -> DataFrame:
-    """REAL audio decode → whole-clip stats via mapInPandas, dispatched
+    """REAL audio decode → whole-clip stats through map_blobs, dispatched
     on magic (RIFF/WAVE PCM16 or FLAC — r16 directive #8).  Bad blobs
     land in the per-row ``error`` column; output rows are 5 scalars, so
     downstream shuffles move stats, not samples."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        from es_ch_sync_spark.operators.flac import decode_flac
-
-        for pdf in it:
-            out = []
-            for mid, blob in zip(pdf["media_id"], pdf["content"]):
-                try:
-                    raw = bytes(blob)
-                    if raw[:4] == b"fLaC":
-                        s, rate = decode_flac(raw)
-                    elif raw[:4] == b"RIFF":
-                        s, rate = decode_wav_pcm16(raw)
-                    else:
-                        raise ValueError("unrecognized audio format")
-                    f = np.asarray(s, np.float64).reshape(len(s), -1)
-                    out.append(
-                        (mid, len(f), int(rate),
-                         round(float(f.mean()), 4),
-                         round(float(np.sqrt((f * f).mean())), 4), None)
-                    )
-                except _ROW_DECODE_ERRORS as exc:
-                    out.append((mid, None, None, None, None, str(exc)[:200]))
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    "media_id", "n_samples", "sample_rate",
-                    "mean_amp", "rms", "error",
-                ],
-            )
-
-    return media.select("media_id", "content").mapInPandas(
-        batches, AUDIO_STATS_SCHEMA
-    )
+    return map_blobs(media, audio_stats_rows, AUDIO_STATS_SCHEMA)
 
 
 RESIZE_SCHEMA = T.StructType(
@@ -2425,25 +2409,19 @@ RESIZE_SCHEMA = T.StructType(
 )
 
 
+def resize_rows(media_id: int, blob: bytes, width: int, height: int):
+    """resize_media's kernel: one resized BMP blob."""
+    yield media_id, resize_image(blob, width, height), width, height, None
+
+
 def resize_media(media: DataFrame, width: int, height: int) -> DataFrame:
     """Distributed image resize: decode → NN-resample → re-encode BMP, per
-    row inside Arrow batches; codec formats go to ``error``.  Blobs stay on
+    blob through map_blobs; bad blobs go to ``error``.  Blobs stay on
     executors end to end."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = []
-            for mid, blob in zip(pdf["media_id"], pdf["content"]):
-                try:
-                    out.append((mid, resize_image(bytes(blob), width, height),
-                                width, height, None))
-                except _ROW_DECODE_ERRORS as exc:
-                    out.append((mid, None, None, None, str(exc)[:200]))
-            yield pd.DataFrame(
-                out, columns=["media_id", "content", "width", "height", "error"]
-            )
-
-    return media.select("media_id", "content").mapInPandas(batches, RESIZE_SCHEMA)
+    return map_blobs(
+        media, functools.partial(resize_rows, width=width, height=height),
+        RESIZE_SCHEMA,
+    )
 
 
 WAV_CHUNK_SCHEMA = T.StructType(
@@ -2459,46 +2437,64 @@ WAV_CHUNK_SCHEMA = T.StructType(
 )
 
 
+def _pcm_chunks(blob: bytes, chunk_ms: int):
+    """Decode a RIFF/WAV blob and split its int16 stream into ``chunk_ms``
+    windows: yields (chunk_idx, start_ms, end_ms, samples).  A clip
+    shorter than one window still yields its one (possibly empty) chunk."""
+    samples, rate = decode_wav_pcm16(blob)
+    per = max(1, (rate * chunk_ms) // 1000)
+    n = len(samples)
+    for ci in range(0, max((n + per - 1) // per, 1)):
+        yield (
+            ci, ci * per * 1000 // rate, min((ci + 1) * per, n) * 1000 // rate,
+            samples[ci * per : (ci + 1) * per],
+        )
+
+
+def wav_chunk_rows(media_id: int, blob: bytes, chunk_ms: int):
+    """chunk_wav's kernel: one RMS row per ``chunk_ms`` window."""
+    import numpy as np
+
+    for ci, start_ms, end_ms, seg in _pcm_chunks(blob, chunk_ms):
+        seg = seg.astype(np.float64)
+        rms = float(np.sqrt(np.mean(seg * seg))) if len(seg) else 0.0
+        yield media_id, ci, start_ms, end_ms, len(seg), round(rms, 4), None
+
+
 def chunk_wav(media: DataFrame, chunk_ms: int = 100) -> DataFrame:
     """REAL PCM chunking: parse RIFF/WAV, split the sample stream into
     ``chunk_ms`` windows, emit per-chunk RMS — the compute-bearing half
     plan_audio_chunks only planned.  Integer sample math; RMS is
     sqrt(mean(v²)) over int16 values (exact in double at these sizes),
     rounded 4dp for cross-engine hashing.  Non-WAV/codec blobs produce one
-    ``error`` row each."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in it:
-            out = []
-            for mid, blob in zip(pdf["media_id"], pdf["content"]):
-                try:
-                    samples, rate = decode_wav_pcm16(bytes(blob))
-                    per = max(1, (rate * chunk_ms) // 1000)
-                    n = len(samples)
-                    for ci in range(0, max((n + per - 1) // per, 1)):
-                        seg = samples[ci * per : (ci + 1) * per].astype(np.float64)
-                        rms = float(np.sqrt(np.mean(seg * seg))) if len(seg) else 0.0
-                        out.append(
-                            (mid, ci, ci * per * 1000 // rate,
-                             min((ci + 1) * per, n) * 1000 // rate,
-                             len(seg), round(rms, 4), None)
-                        )
-                except _ROW_DECODE_ERRORS as exc:
-                    out.append((mid, None, None, None, None, None, str(exc)[:200]))
-            yield pd.DataFrame(
-                out,
-                columns=["media_id", "chunk_idx", "start_ms", "end_ms", "n_samples", "rms", "error"],
-            )
-
-    return media.select("media_id", "content").mapInPandas(batches, WAV_CHUNK_SCHEMA)
+    ``error`` row each (map_blobs)."""
+    return map_blobs(
+        media, functools.partial(wav_chunk_rows, chunk_ms=chunk_ms),
+        WAV_CHUNK_SCHEMA,
+    )
 
 
-WAV_FEATURE_SCHEMA = (
-    "media_id long, chunk_idx int, n_samples int, zcr int, peak int, "
-    "error string"
+WAV_FEATURE_SCHEMA = T.StructType(
+    [
+        T.StructField("media_id", T.LongType(), False),
+        T.StructField("chunk_idx", T.IntegerType(), True),
+        T.StructField("n_samples", T.IntegerType(), True),
+        T.StructField("zcr", T.IntegerType(), True),
+        T.StructField("peak", T.IntegerType(), True),
+        T.StructField("error", T.StringType(), True),
+    ]
 )
+
+
+def wav_feature_rows(media_id: int, blob: bytes, chunk_ms: int):
+    """chunk_wav_features' kernel: zero crossings and peak per window."""
+    import numpy as np
+
+    for ci, _, _, seg in _pcm_chunks(blob, chunk_ms):
+        seg = seg.astype(np.int64)
+        zcr = int(np.sum(seg[:-1] * seg[1:] < 0)) if len(seg) > 1 else 0
+        peak = int(np.max(np.abs(seg))) if len(seg) else 0
+        yield media_id, ci, len(seg), zcr, peak, None
 
 
 def chunk_wav_features(media: DataFrame, chunk_ms: int = 100) -> DataFrame:
@@ -2509,43 +2505,12 @@ def chunk_wav_features(media: DataFrame, chunk_ms: int = 100) -> DataFrame:
     so the cross-engine check is hash-exact with no float rounding at
     all (RMS needed 4dp rounding; these don't).
 
-    Same Arrow mapInPandas shape as chunk_wav: the blob never leaves the
-    executor, one output row per 100 ms chunk, decode errors become one
-    ``error`` row."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in it:
-            out = []
-            for mid, blob in zip(pdf["media_id"], pdf["content"]):
-                try:
-                    samples, rate = decode_wav_pcm16(bytes(blob))
-                    per = max(1, (rate * chunk_ms) // 1000)
-                    n = len(samples)
-                    for ci in range(0, max((n + per - 1) // per, 1)):
-                        seg = samples[ci * per : (ci + 1) * per].astype(
-                            np.int64
-                        )
-                        zcr = (
-                            int(np.sum(seg[:-1] * seg[1:] < 0))
-                            if len(seg) > 1
-                            else 0
-                        )
-                        peak = int(np.max(np.abs(seg))) if len(seg) else 0
-                        out.append((mid, ci, len(seg), zcr, peak, None))
-                except _ROW_DECODE_ERRORS as exc:
-                    out.append((mid, None, None, None, None, str(exc)[:200]))
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    "media_id", "chunk_idx", "n_samples", "zcr", "peak",
-                    "error",
-                ],
-            )
-
-    return media.select("media_id", "content").mapInPandas(
-        batches, WAV_FEATURE_SCHEMA
+    Same map_blobs shape and the same windows as chunk_wav: the blob never
+    leaves the executor, one output row per 100 ms chunk, decode errors
+    become one ``error`` row."""
+    return map_blobs(
+        media, functools.partial(wav_feature_rows, chunk_ms=chunk_ms),
+        WAV_FEATURE_SCHEMA,
     )
 
 
@@ -2819,7 +2784,7 @@ def synth_mjpeg_blob(media_id: int) -> bytes:
     return encode_mjpeg_avi(frames, 16, 8, fps=10)
 
 
-def synth_media(docs: DataFrame, kind: str, use_arrow: bool = False) -> DataFrame:
+def synth_media(docs: DataFrame, kind: str) -> DataFrame:
     """(media_id, kind, content) with real encoded BMP/WAV blobs derived
     from doc_id — generated executor-side in Arrow batches (the driver
     never holds a blob).
@@ -2859,37 +2824,23 @@ def synth_media(docs: DataFrame, kind: str, use_arrow: bool = False) -> DataFram
         ]
     )
 
-    if use_arrow:
-        # r17 pilot (guide §4, VERDICT next-round #5): mapInArrow skips the
-        # Arrow→pandas materialization of the id/blob columns on both sides
-        # of the boundary; the per-row codec loop is unchanged.
-        def batches_arrow(it):
-            import pyarrow as pa
+    # mapInArrow: ids arrive as an Arrow column and blobs leave as one,
+    # with no pandas frame on either side of the boundary.
+    def batches(it):
+        import pyarrow as pa
 
-            for rb in it:
-                ids = rb.column(0).to_pylist()
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        pa.array(ids, pa.int64()),
-                        pa.array([kind] * len(ids), pa.string()),
-                        pa.array([maker(int(m)) for m in ids], pa.binary()),
-                    ],
-                    names=["media_id", "kind", "content"],
-                )
-
-        return docs.select("doc_id").mapInArrow(batches_arrow, schema)
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["doc_id"],
-                    "kind": kind,
-                    "content": [maker(int(m)) for m in pdf["doc_id"]],
-                }
+        for rb in it:
+            ids = rb.column(0).to_pylist()
+            yield pa.RecordBatch.from_arrays(
+                [
+                    pa.array(ids, pa.int64()),
+                    pa.array([kind] * len(ids), pa.string()),
+                    pa.array([maker(int(m)) for m in ids], pa.binary()),
+                ],
+                names=["media_id", "kind", "content"],
             )
 
-    return docs.select("doc_id").mapInPandas(batches, schema)
+    return docs.select("doc_id").mapInArrow(batches, schema)
 
 
 def media_from_documents(docs: DataFrame) -> DataFrame:
@@ -2942,7 +2893,7 @@ def plan_audio_chunks(
 ) -> DataFrame:
     """Audio chunking PLAN: overlapping ``chunk_ms`` windows every
     ``hop_ms`` across each clip — the work list an ASR/feature kernel
-    would consume via mapInPandas (decode stays stubbed; the plan is real
+    would consume via map_blobs (decode stays stubbed; the plan is real
     and oracle-checked).
 
     Like plan_frame_samples, this is metadata-only: the blob column is
@@ -2972,9 +2923,9 @@ def plan_frame_samples(media: DataFrame, every_ms: int = 500) -> DataFrame:
     """Frame-sampling PLAN: one row per (media_id, frame_idx, frame_ts_ms)
     to decode, at ``every_ms`` intervals across each video's duration.
 
-    This is the Spark-side half of frame sampling — the work list the
-    decode kernel (``sample_video_frames``, stubbed here) would consume via
-    mapInPandas exactly like ``extract_features``.  Planning from metadata
+    This is the Spark-side half of frame sampling — the work list a
+    decode kernel consumes through map_blobs, as ``video_frame_stats``
+    does for MJPEG-AVI clips.  Planning from metadata
     keeps the explode blob-free: Parquet column pruning drops ``content``
     entirely, so a 100 TB video table plans its sampling schedule reading
     only (media_id, duration_ms).  Frame indices are pure column arithmetic
@@ -3003,58 +2954,38 @@ VIDEO_FRAME_SCHEMA = T.StructType(
 )
 
 
+def video_frame_stat_rows(media_id: int, blob: bytes, every_ms: int):
+    """video_frame_stats' kernel: one stats row per sampled frame."""
+    for idx, t_ms, frame in sample_video_frames(blob, every_ms):
+        px = decode_jpeg(frame).astype("float64")
+        # BT.601 luma (ADVICE r14: mean of the R channel is only luma for
+        # grayscale frames; color MJPEG needs the real weighting).  On gray
+        # fixtures the 1-ulp float noise vs the plain channel mean is
+        # absorbed by the round-to-4-decimals below.
+        luma = (
+            0.299 * px[..., 0] + 0.587 * px[..., 1] + 0.114 * px[..., 2]
+        ).mean()
+        yield (
+            media_id, idx, t_ms, px.shape[1], px.shape[0],
+            round(float(luma), 4), None,
+        )
+
+
 def video_frame_stats(media: DataFrame, every_ms: int = 200) -> DataFrame:
     """REAL video frame sampling + decode, no video library: parse each
     MJPEG-AVI blob, pick the frame under every ``every_ms`` tick, decode
     it with the baseline-JPEG decoder, and emit per-sampled-frame stats —
     (media_id, frame_idx, t_ms, width, height, mean_luma).
 
-    Same contract as extract_pixel_features: Arrow-batched mapInPandas,
-    per-row error isolation (a bad container/frame yields one error row,
-    never a failed job), and tiny output rows so shuffles move stats,
-    not pixels.  At 100 TB the blob column never leaves the executor and
-    the decode parallelism is the scan's partitioning."""
-    every_ms = int(every_ms)
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = []
-            for mid, blob in zip(pdf["media_id"], pdf["content"]):
-                try:
-                    v = parse_mjpeg_avi(bytes(blob))
-                    n = len(v["frames"])
-                    t = 0
-                    while True:
-                        idx = (t * v["rate"]) // (1000 * v["scale"])
-                        if idx >= n:
-                            break
-                        px = decode_jpeg(v["frames"][idx]).astype("float64")
-                        # BT.601 luma (ADVICE r14: mean of the R channel is
-                        # only luma for grayscale frames; color MJPEG needs
-                        # the real weighting).  On gray fixtures the 1-ulp
-                        # float noise vs the plain channel mean is absorbed
-                        # by the round-to-4-decimals below.
-                        luma = (
-                            0.299 * px[..., 0] + 0.587 * px[..., 1]
-                            + 0.114 * px[..., 2]
-                        ).mean()
-                        out.append(
-                            (mid, idx, t, px.shape[1], px.shape[0],
-                             round(float(luma), 4), None)
-                        )
-                        t += every_ms
-                except _ROW_DECODE_ERRORS as exc:
-                    out.append((mid, None, None, None, None, None, str(exc)[:200]))
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    "media_id", "frame_idx", "t_ms", "width", "height",
-                    "mean_luma", "error",
-                ],
-            )
-
-    return media.select("media_id", "content").mapInPandas(
-        batches, VIDEO_FRAME_SCHEMA
+    Same contract as extract_pixel_features: map_blobs with per-row
+    error isolation (a bad container yields one error row, a bad frame
+    one error row after the good frames before it — never a failed job),
+    and tiny output rows so shuffles move stats, not pixels.  At 100 TB
+    the blob column never leaves the executor and the decode parallelism
+    is the scan's partitioning."""
+    return map_blobs(
+        media, functools.partial(video_frame_stat_rows, every_ms=int(every_ms)),
+        VIDEO_FRAME_SCHEMA,
     )
 
 
@@ -3068,42 +2999,26 @@ FRAME_FP_SCHEMA = T.StructType(
 )
 
 
+def video_frame_fp_rows(media_id: int, blob: bytes, every_ms: int):
+    """video_frame_fingerprints' kernel: md5 of each sampled frame's
+    decoded RGB buffer."""
+    import hashlib
+
+    for idx, _, frame in sample_video_frames(blob, every_ms):
+        px = decode_jpeg(frame)
+        yield media_id, idx, hashlib.md5(px.tobytes()).hexdigest(), None
+
+
 def video_frame_fingerprints(media: DataFrame, every_ms: int = 200) -> DataFrame:
     """Content fingerprint per SAMPLED video frame: parse the MJPEG-AVI
     container, decode the frame under each ``every_ms`` tick, md5 the
     decoded RGB pixel buffer — byte-level container/encoder differences
     (chunk padding, Huffman table choice, restart intervals) vanish, so
-    equal fingerprints mean equal decoded CONTENT.  Same Arrow
-    mapInPandas + per-row error isolation as video_frame_stats."""
-    import hashlib
-
-    every_ms = int(every_ms)
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = []
-            for mid, blob in zip(pdf["media_id"], pdf["content"]):
-                try:
-                    v = parse_mjpeg_avi(bytes(blob))
-                    n = len(v["frames"])
-                    t = 0
-                    while True:
-                        idx = (t * v["rate"]) // (1000 * v["scale"])
-                        if idx >= n:
-                            break
-                        px = decode_jpeg(v["frames"][idx])
-                        out.append(
-                            (mid, idx, hashlib.md5(px.tobytes()).hexdigest(), None)
-                        )
-                        t += every_ms
-                except _ROW_DECODE_ERRORS as exc:
-                    out.append((mid, None, None, str(exc)[:200]))
-            yield pd.DataFrame(
-                out, columns=["media_id", "frame_idx", "frame_md5", "error"]
-            )
-
-    return media.select("media_id", "content").mapInPandas(
-        batches, FRAME_FP_SCHEMA
+    equal fingerprints mean equal decoded CONTENT.  Same map_blobs
+    boundary and tick walk (sample_video_frames) as video_frame_stats."""
+    return map_blobs(
+        media, functools.partial(video_frame_fp_rows, every_ms=int(every_ms)),
+        FRAME_FP_SCHEMA,
     )
 
 
@@ -3133,34 +3048,22 @@ def video_frame_dedup(media: DataFrame, every_ms: int = 200) -> DataFrame:
     )
 
 
+def gif_frame_fp_rows(media_id: int, blob: bytes):
+    """gif_frame_fingerprints' kernel: md5 of each composited frame."""
+    import hashlib
+
+    for idx, px in enumerate(parse_gif_frames(blob)["frames"]):
+        yield media_id, idx, hashlib.md5(px.tobytes()).hexdigest(), None
+
+
 def gif_frame_fingerprints(media: DataFrame) -> DataFrame:
     """Content fingerprint per ANIMATED-GIF frame: parse_gif_frames walks
     every full-canvas frame, md5 the decoded RGB pixel buffer — palette
     layout, LZW coding and sub-block packing vanish, so equal
     fingerprints mean equal decoded CONTENT (the video_frame_fingerprints
     contract on the second real container, r14 VERDICT directive #2).
-    Arrow mapInPandas + per-row error isolation."""
-    import hashlib
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = []
-            for mid, blob in zip(pdf["media_id"], pdf["content"]):
-                try:
-                    v = parse_gif_frames(bytes(blob))
-                    for idx, px in enumerate(v["frames"]):
-                        out.append(
-                            (mid, idx, hashlib.md5(px.tobytes()).hexdigest(), None)
-                        )
-                except _ROW_DECODE_ERRORS as exc:
-                    out.append((mid, None, None, str(exc)[:200]))
-            yield pd.DataFrame(
-                out, columns=["media_id", "frame_idx", "frame_md5", "error"]
-            )
-
-    return media.select("media_id", "content").mapInPandas(
-        batches, FRAME_FP_SCHEMA
-    )
+    map_blobs boundary, per-row error isolation."""
+    return map_blobs(media, gif_frame_fp_rows, FRAME_FP_SCHEMA)
 
 
 def gif_frame_dedup(media: DataFrame) -> DataFrame:
@@ -3192,7 +3095,19 @@ DHASH_SCHEMA = T.StructType(
 )
 
 
-def dhash_features(media: DataFrame, batch_rows: int = 256) -> DataFrame:
+def dhash_rows(media_id: int, blob: bytes):
+    """dhash_features' kernel: decode_image → 64-bit difference hash."""
+    import numpy as np
+
+    px = decode_image(blob)
+    gs = px.astype(np.int64).sum(axis=2)  # (H, W) channel sum
+    bits = gs[:, :-1] > gs[:, 1:]
+    h, w = bits.shape
+    weights = np.int64(1) << (np.arange(h)[:, None] * w + np.arange(w))
+    yield media_id, px.shape[1], px.shape[0], int((bits * weights).sum()), None
+
+
+def dhash_features(media: DataFrame) -> DataFrame:
     """Perceptual difference-hash (dHash) per image through REAL decode.
 
     Classic dHash [see e.g. the widely-described "difference hash" of
@@ -3207,29 +3122,4 @@ def dhash_features(media: DataFrame, batch_rows: int = 256) -> DataFrame:
     encoder), and hamming-banded blocking (as in simhash_near_duplicates)
     extends it to near-duplicates.  Output rows are (id, 64-bit scalar) —
     the blobs never shuffle."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in it:
-            out = []
-            for mid, blob in zip(pdf["media_id"], pdf["content"]):
-                try:
-                    px = decode_image(bytes(blob))
-                    gs = px.astype(np.int64).sum(axis=2)  # (H, W) channel sum
-                    bits = gs[:, :-1] > gs[:, 1:]
-                    h, w = bits.shape
-                    weights = (
-                        np.int64(1) << (np.arange(h)[:, None] * w + np.arange(w))
-                    )
-                    out.append(
-                        (mid, px.shape[1], px.shape[0],
-                         int((bits * weights).sum()), None)
-                    )
-                except _ROW_DECODE_ERRORS as exc:
-                    out.append((mid, None, None, None, str(exc)[:200]))
-            yield pd.DataFrame(
-                out, columns=["media_id", "width", "height", "dhash", "error"]
-            )
-
-    return media.select("media_id", "content").mapInPandas(batches, DHASH_SCHEMA)
+    return map_blobs(media, dhash_rows, DHASH_SCHEMA)

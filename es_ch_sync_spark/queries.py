@@ -1591,8 +1591,9 @@ def q_knn_join_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register("multimodal_features", oracles.multimodal_features_sql())
 def q_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Binary-column plumbing: blob → (n_bytes, md5, feature[8]) via
-    Arrow-batched mapInPandas; the only Pandas-UDF path in the engine.
+    """Binary-column plumbing: blob → (n_bytes, md5, feature[8]) through
+    map_blobs, the one Arrow (mapInArrow) boundary every blob kernel
+    shares; a null blob gives an all-null stats row.
 
     The registered form posexplodes the feature vector to scalar
     (pos, feature_value) rows — the driver's canonicalizer hashes scalar
@@ -2156,12 +2157,8 @@ def q_multimodal_gif_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     partial-canvas, transparency and disposal 2/3 are un-gated and
     oracle-pinned in gif_frame_dedup; of the codec formats only lossy
     WebP/MP4 still need an external library)."""
-    # r17 pilot (guide §4, VERDICT #5): both Python boundaries run as
-    # mapInArrow — the Arrow→pandas block materialization of the id/blob
-    # columns disappears on each side; the codec loops are unchanged.
-    # Interleaved A/B min-of-4 ×3: 0.81/0.87/0.83 vs 0.88/0.95/0.84 s.
-    media = mm.synth_media(_docs(spark, sf_dir), "gif", use_arrow=True)
-    return mm.extract_pixel_features(media, use_arrow=True).select(
+    media = mm.synth_media(_docs(spark, sf_dir), "gif")
+    return mm.extract_pixel_features(media).select(
         "media_id", "width", "height", "mean_r", "mean_g", "mean_b"
     )
 
@@ -2387,8 +2384,8 @@ def q_corpus_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_media_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Byte-identical media dedup: checksum every blob through the Arrow
-    mapInPandas feature extractor, then group on content_md5 — the
+    """Byte-identical media dedup: checksum every blob through the
+    map_blobs feature extractor, then group on content_md5 — the
     dedup-images-by-checksum pass every multimodal pipeline runs first.
     Only (md5, id, n_bytes) shuffles; blobs never leave their scan
     partitions (same discipline as text dedup_exact)."""
@@ -2927,7 +2924,7 @@ def q_multimodal_wav_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     voiced/unvoiced + clipping screen next to multimodal_wav_rms, and the
     first multimodal check that is hash-exact with ZERO float rounding
     (both features are pure integers over the decoded int16 stream).
-    Same real RIFF decode, same Arrow mapInPandas shape; the oracle
+    Same real RIFF decode, same map_blobs boundary; the oracle
     recomputes both from the generating formula."""
     media = mm.synth_media(
         _docs(spark, sf_dir).filter(F.col("doc_id") < 2000), "audio"

@@ -9,7 +9,8 @@ Local tests run on ``local[N]`` but every knob here is chosen for the
 - shuffle.partitions sized to cores locally; on a real cluster this is
   overridden per-job (rule of thumb: 2-3× total executor cores, or let
   AQE coalesce from a high initial value).
-- Arrow enabled for the few Pandas-UDF paths (similarity/multimodal).
+- Arrow enabled for the few Pandas-UDF paths (similarity, features,
+  sketches); multimodal blob kernels cross through mapInArrow.
 - UTC session timezone so timestamp semantics match the reference's
   epoch-ms arithmetic (/root/reference/internal/service/elastic/elastic.go:47-48)
   and the DuckDB oracle.

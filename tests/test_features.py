@@ -2,9 +2,12 @@
 
 from __future__ import annotations
 
+import functools
+
 import pytest
 from pyspark.sql import functions as F
 
+from es_ch_sync_spark.operators import multimodal as mm
 from es_ch_sync_spark.operators.features import (
     bloom_semijoin_audit,
     chunk_documents,
@@ -2056,11 +2059,11 @@ def test_mjpeg_avi_container_round_trip_and_sampling():
     assert v["frames"] == frames
     # 100 ms period: every 250 ms → t = 0, 250, 500, 750 → idx 0, 2, 5, 7(stop)
     got = sample_video_frames(avi, 250)
-    assert got == [frames[0], frames[2], frames[5]]
+    assert got == [(0, 0, frames[0]), (2, 250, frames[2]), (5, 500, frames[5])]
     # every_ms larger than the clip → just frame 0
-    assert sample_video_frames(avi, 5000) == [frames[0]]
+    assert sample_video_frames(avi, 5000) == [(0, 0, frames[0])]
     # sampled frames decode to the constant they encode
-    px = decode_jpeg(got[1])
+    px = decode_jpeg(got[1][2])
     assert (px[..., 0] == 23).all()
     import pytest
 
@@ -2081,10 +2084,10 @@ def test_synth_mjpeg_blob_matches_formula():
 
     for mid in (0, 1, 5, 42):
         n = mid % 4 + 2
-        blobs = sample_video_frames(synth_mjpeg_blob(mid), 200)
-        assert len(blobs) == (n + 1) // 2
-        for s, b in enumerate(blobs):
-            f = 2 * s
+        sampled = sample_video_frames(synth_mjpeg_blob(mid), 200)
+        assert len(sampled) == (n + 1) // 2
+        for s, (f, t_ms, b) in enumerate(sampled):
+            assert (f, t_ms) == (2 * s, 200 * s)
             want = (
                 (11 * mid + 17 * f) % 256 + (11 * mid + 17 * f + 23) % 256
             ) / 2.0
@@ -2336,17 +2339,112 @@ def test_gif_frame_dedup_hand_computed(spark):
     assert rows == {(4, 2): 1, (1, 1): 1}
 
 
-def test_multimodal_arrow_boundary_matches_pandas(spark, sf_dir):
-    """r17 mapInArrow pilot: the Arrow-boundary variants of synth_media +
-    extract_pixel_features must produce exactly the pandas variants' rows
-    (same codec loops, only the batch transport differs)."""
-    from es_ch_sync_spark.operators import multimodal as mm
+_BLOB_OPS = {
+    # operator name: (operator over a media frame, its per-blob kernel)
+    "extract_features": (mm.extract_features, mm.feature_rows),
+    "extract_pixel_features": (mm.extract_pixel_features, mm.pixel_stats_rows),
+    "extract_audio_stats": (mm.extract_audio_stats, mm.audio_stats_rows),
+    "resize_media": (
+        functools.partial(mm.resize_media, width=4, height=3),
+        functools.partial(mm.resize_rows, width=4, height=3),
+    ),
+    "chunk_wav": (
+        functools.partial(mm.chunk_wav, chunk_ms=100),
+        functools.partial(mm.wav_chunk_rows, chunk_ms=100),
+    ),
+    "chunk_wav_features": (
+        functools.partial(mm.chunk_wav_features, chunk_ms=100),
+        functools.partial(mm.wav_feature_rows, chunk_ms=100),
+    ),
+    "video_frame_stats": (
+        functools.partial(mm.video_frame_stats, every_ms=200),
+        functools.partial(mm.video_frame_stat_rows, every_ms=200),
+    ),
+    "video_frame_fingerprints": (
+        functools.partial(mm.video_frame_fingerprints, every_ms=200),
+        functools.partial(mm.video_frame_fp_rows, every_ms=200),
+    ),
+    "gif_frame_fingerprints": (mm.gif_frame_fingerprints, mm.gif_frame_fp_rows),
+    "dhash_features": (mm.dhash_features, mm.dhash_rows),
+}
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").limit(64)
 
-    def rows(use_arrow):
-        media = mm.synth_media(docs, "gif", use_arrow=use_arrow)
-        out = mm.extract_pixel_features(media, use_arrow=use_arrow)
-        return sorted(tuple(r) for r in out.collect())
+def _media_frame(spark, blobs):
+    from pyspark.sql import types as T
 
-    assert rows(True) == rows(False)
+    schema = T.StructType(
+        [
+            T.StructField("media_id", T.LongType(), False),
+            T.StructField("content", T.BinaryType(), True),
+        ]
+    )
+    return spark.createDataFrame(blobs, schema)
+
+
+def _plain_rows(df):
+    """Collected rows as plain tuples (Spark hands binary back as bytearray)."""
+    return [
+        tuple(bytes(v) if isinstance(v, bytearray) else v for v in r)
+        for r in df.collect()
+    ]
+
+
+@pytest.mark.parametrize("op", sorted(_BLOB_OPS))
+def test_blob_kernel_rows_match_driver_side_kernel(spark, op):
+    """Every blob operator's Spark rows equal its kernel body run in plain
+    Python on the driver over the same collected blobs: two synth blobs
+    of every kind (so each kernel meets both the formats it decodes and
+    ones it rejects), a NULL blob, a garbage blob, and an MJPEG clip whose
+    third frame is corrupt (a good frame row, then the error row).  None
+    of them fails the job: the null blob gives media_id plus nulls with
+    error = "null content" (extract_features, which has no error column:
+    all-null stats), a decode error its message.  Replaces the
+    two-transport equivalence test: map_blobs is the only transport."""
+    import numpy as np
+
+    makers = [
+        mm.synth_bmp_blob, mm.synth_png_blob, mm.synth_gif_blob,
+        mm.synth_jpeg_blob, mm.synth_pjpeg_blob, mm.synth_agif_blob,
+        mm.synth_webp_blob, mm.synth_pngx_blob, mm.synth_mjpeg_blob,
+        mm.synth_cmyk_blob, mm.synth_flac_blob, mm.synth_wav_blob,
+    ]
+    blobs = [
+        (100 * k + i, make(i)) for k, make in enumerate(makers) for i in (1, 6)
+    ]
+    good = mm.encode_jpeg(np.full((8, 16), 40, np.uint8))
+    blobs += [
+        (9000, None),
+        (9001, b"\x00 not a media blob"),
+        (9002, mm.encode_mjpeg_avi([good, good, b"\xff\xd8 cut"], 16, 8)),
+    ]
+    media = _media_frame(spark, blobs)
+    run, kernel = _BLOB_OPS[op]
+    names = run(media).schema.fieldNames()
+
+    def blank(mid, error):
+        return tuple(
+            mid if n == "media_id" else error if n == "error" else None
+            for n in names
+        )
+
+    want = []
+    for mid, blob in _plain_rows(media):
+        if blob is None:
+            want.append(blank(mid, "null content"))
+            continue
+        try:
+            for row in kernel(mid, blob):
+                want.append(row)
+        except mm._ROW_DECODE_ERRORS as exc:
+            want.append(blank(mid, str(exc)[:200]))
+    if op == "extract_features":  # array<float>: compare at float32
+        want = [
+            (m, n, h, f and [float(np.float32(x)) for x in f])
+            for m, n, h, f in want
+        ]
+    else:  # the garbage blob is a decode error for every real kernel
+        assert [r[-1] is not None for r in want if r[0] == 9001] == [True]
+    got = _plain_rows(run(media))
+    assert sorted(got, key=repr) == sorted(want, key=repr)
+    if op.startswith("video_frame"):
+        assert sorted((r[1] for r in got if r[0] == 9002), key=repr) == [0, None]

@@ -48,6 +48,41 @@ def test_upsert_updates_and_inserts(spark, tmp_path):
     assert got.filter(F.col("token_id") == 1).filter(F.col("value_number") == 10.0).count() == 1
 
 
+def test_upsert_conflicting_updates_keep_the_sink_winner(spark, tmp_path):
+    """Conflicting rows for one key inside one update batch resolve to
+    the sink's deterministic winner (io/sinks.dedup_signals, min(struct)),
+    whether the batch arrives in 1 partition or 8 (dropDuplicates kept
+    whichever row came first)."""
+    from es_ch_sync_spark.io.sinks import dedup_signals
+
+    rows = [
+        (1, D2, "speed", src, float(v), None)
+        for src, v in [("b", 5), ("c", 1), ("a", 7), ("b", 2), ("a", 3)]
+    ] + [_sig(2, D2, "speed", 4)]
+    winners = []
+    for parts in (1, 8):
+        path = str(tmp_path / f"sig{parts}")
+        write_signals(
+            spark.createDataFrame([_sig(1, D1, "speed", 10)], SIG_SCHEMA),
+            path, mode="overwrite",
+        )
+        updates = spark.createDataFrame(rows, SIG_SCHEMA).repartition(parts)
+        upsert_signals(spark, path, updates)
+        got = spark.read.parquet(path).drop("event_date")
+        assert got.count() == 3
+        (row,) = got.filter(
+            (F.col("token_id") == 1) & (F.col("timestamp") == D2)
+        ).collect()
+        winners.append(tuple(row))
+    (want,) = (
+        dedup_signals(spark.createDataFrame(rows, SIG_SCHEMA))
+        .filter(F.col("token_id") == 1)
+        .collect()
+    )
+    assert winners[0] == winners[1] == tuple(want)
+    assert tuple(want)[3:5] == ("a", 3.0)
+
+
 def test_upsert_touches_only_update_partitions(spark, tmp_path):
     path = str(tmp_path / "sig")
     base = [_sig(1, D1, "speed", 10), _sig(1, D2, "speed", 20)]

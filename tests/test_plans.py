@@ -52,6 +52,56 @@ def test_sync_pipeline_shape(plans):
     assert "SortMergeJoin" not in p
 
 
+def _blob_kernel_queries() -> list[str]:
+    """Registered queries that reach multimodal.map_blobs, found by a
+    name-level call-graph walk over the package source.  Conservative: a
+    function reaches whatever any function of the same name refers to.
+    (The SQL-string queries of queries_sql.py register through a loop the
+    walk does not see; they reach no Python at all.)"""
+    import ast
+    from pathlib import Path
+
+    import es_ch_sync_spark
+
+    refs: dict[str, set[str]] = {}
+    registered: dict[str, str] = {}
+    for path in Path(es_ch_sync_spark.__file__).parent.rglob("*.py"):
+        for node in ast.walk(ast.parse(path.read_text())):
+            if not isinstance(node, ast.FunctionDef):
+                continue
+            refs.setdefault(node.name, set()).update(
+                n.id if isinstance(n, ast.Name) else n.attr
+                for n in ast.walk(node)
+                if isinstance(n, (ast.Name, ast.Attribute))
+            )
+            for d in node.decorator_list:
+                if (
+                    isinstance(d, ast.Call)
+                    and getattr(d.func, "id", None) == "register"
+                    and d.args
+                    and isinstance(d.args[0], ast.Constant)
+                ):
+                    registered[d.args[0].value] = node.name
+    reach = {"map_blobs"}
+    while True:
+        new = {fn for fn, names in refs.items() if names & reach} - reach
+        if not new:
+            break
+        reach |= new
+    return sorted(q for q, fn in registered.items() if fn in reach)
+
+
+def test_blob_kernel_queries_have_no_map_in_pandas(plans):
+    """Every registry query that reaches a blob kernel crosses into Python
+    through map_blobs' mapInArrow only: no MapInPandas node in its plan."""
+    names = _blob_kernel_queries()
+    assert len(names) >= 16 and "multimodal_gif_stats" in names, names
+    for name in names:
+        p = plans(name)
+        assert "MapInPandas" not in p, name
+        assert "MapInArrow" in p, name
+
+
 def _final_plan_nodes(description: str) -> list[tuple[str, str]]:
     """(name, details) of every node in the final plan of an AQE
     formatted-plan description (the status store's physicalPlanDescription)."""
