@@ -13,7 +13,9 @@ module reproduces that *pushdown boundary* with the public
   INSIDE the source (Arrow compute over the parsed batch, before rows
   reach Spark) — the exact predicate set elastic.go builds into its bool
   query.  Unsupported shapes are yielded back and Spark evaluates them
-  post-scan, so semantics never depend on what the source handles.
+  post-scan, so semantics never depend on what the source handles;
+  comparisons on float columns are among them, because Arrow compares
+  NaN false where Spark orders it above every value.
 - **projection pushdown** via the declared read schema: the Python DS API
   has no column-prune hook yet, so projection rides on the schema the
   caller declares (``read_es_status(..., schema=...)``) — the Arrow JSON
@@ -96,6 +98,9 @@ _PUSHABLE = (
     StringStartsWith,
 )
 
+_INTEGRAL_TYPES = (T.LongType, T.IntegerType, T.ShortType, T.ByteType)
+_FLOAT_TYPES = (T.DoubleType, T.FloatType)
+
 
 def _arrow_type(dt: T.DataType) -> "pa.DataType":
     import pyarrow as pa
@@ -137,7 +142,7 @@ class EsStatusReader(DataSourceReader):
 
     # -- pushdown ---------------------------------------------------------
     def pushFilters(self, filters: list[Filter]) -> Iterator[Filter]:
-        names = {f.name for f in self.spark_schema.fields}
+        dtypes = {f.name: f.dataType for f in self.spark_schema.fields}
         pushed = []
         for flt in filters:
             attr = getattr(flt, "attribute", None)
@@ -145,7 +150,14 @@ class EsStatusReader(DataSourceReader):
                 isinstance(flt, _PUSHABLE)
                 and attr is not None
                 and len(attr) == 1
-                and attr[0] in names
+                and attr[0] in dtypes
+                # Spark orders NaN above every value and NaN = NaN; Arrow
+                # compares NaN false both ways, so float comparisons stay
+                # with Spark
+                and not (
+                    isinstance(dtypes[attr[0]], _FLOAT_TYPES)
+                    and not isinstance(flt, IsNotNull)
+                )
             ):
                 pushed.append(flt)
             else:
@@ -327,9 +339,11 @@ class EsStatusReader(DataSourceReader):
             mask = e if mask is None else (mask & e)
         return flat.filter(mask) if mask is not None else flat
 
-    def read(self, partition: InputPartition) -> Iterator:
+    def read(self, partition: InputPartition | None) -> Iterator:
         import pyarrow as pa
 
+        if partition is None:
+            return  # partitions() pruned every file; Spark still plans one task
         tbl = self._parse_file(partition.path)
         if tbl.num_rows == 0:
             return
@@ -573,7 +587,190 @@ def read_es_status_stream(
 # atomically) re-expressed through Spark 4's Python DataSource writer
 # protocol, emitting the SAME hit-export NDJSON shape the reader scans, so
 # the connector round-trips df → save → load without a JVM jar.
+#
+# Encoding is columnar: per column, one pyarrow.compute pass turns the
+# values into an array of JSON value texts, one binary_join_element_wise
+# joins the columns into hit lines, and the lines' Arrow data buffer is
+# written to the file in one call.  String, integer, bool, float,
+# timestamp and date columns never become Python objects; only types no
+# Arrow kernel encodes (decimal, binary, nested) take the per-value
+# json.dumps path (_python_values).  Manifest stats fold once per batch
+# with pc.min_max; a float column holding a NaN records no stats for its
+# file, because Spark orders NaN above every value and a [min, max] that
+# leaves it out would answer max() and prune wrongly.
 # ---------------------------------------------------------------------------
+
+# json.dumps' escapes for the control characters JSON forbids raw
+_CONTROL_ESCAPES = {
+    **{chr(c): f"\\u{c:04x}" for c in range(0x20)},
+    "\b": "\\b", "\f": "\\f", "\n": "\\n", "\r": "\\r", "\t": "\\t",
+}
+
+
+def _json_strings(col: "pa.Array") -> "pa.Array":
+    """JSON string literals of a string array: ``"``, ``\\`` and control
+    characters escaped as json.dumps escapes them; other text stays
+    UTF-8 (json.dumps writes non-ASCII as ``\\uXXXX``, which decodes to
+    the same string).  Nulls stay null."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    col = pc.cast(col, pa.string())  # large_string too: lines keep int32 offsets
+    if pc.any(pc.match_substring_regex(col, r'["\\\x00-\x1f]')).as_py():
+        col = pc.replace_substring_regex(col, r'(["\\])', r"\\\1")
+        for raw, esc in _CONTROL_ESCAPES.items():
+            col = pc.replace_substring(col, raw, esc)
+    return pc.binary_join_element_wise('"', col, '"', "")
+
+
+def _json_floats(col: "pa.Array") -> "pa.Array":
+    """JSON numbers of a float array, decoding to the same float as
+    Python's ``repr``: float32 is widened to float64 first (as
+    ``to_pylist`` did), integral values keep a ``.0`` so they read back
+    as floats, and NaN/±Inf are json.dumps' ``NaN``/``Infinity`` tokens."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    x = pc.cast(col, pa.float64())
+    out = pc.cast(x, pa.string())
+    integral = pc.and_(pc.is_finite(x), pc.equal(pc.floor(x), x))
+    if pc.any(integral).as_py():
+        # Arrow prints 100.0 as "100" but 1e15 as "1e+15"
+        integral = pc.and_(integral, pc.invert(pc.match_substring(out, "e")))
+        out = pc.if_else(integral, pc.binary_join_element_wise(out, ".0", ""), out)
+    if not pc.all(pc.is_finite(x)).as_py():
+        out = pc.replace_substring(pc.replace_substring(out, "nan", "NaN"), "inf", "Infinity")
+    return out
+
+
+def _json_timestamps(col: "pa.Array") -> "pa.Array":
+    """ISO-8601 strings in ``datetime.isoformat``'s shape: no fraction
+    when the microseconds are 0, and zone-aware values written in UTC
+    with a ``+00:00`` suffix (the same instant isoformat wrote in the
+    column's zone)."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    # dropping the zone keeps the UTC wall clock: "YYYY-MM-DD HH:MM:SS.ffffff"
+    out = pc.cast(pc.cast(col, pa.timestamp("us")), pa.string())
+    out = pc.replace_substring(pc.replace_substring(out, " ", "T"), ".000000", "")
+    return pc.binary_join_element_wise('"', out, '+00:00"' if col.type.tz else '"', "")
+
+
+def _json_default(v):
+    """json.dumps ``default`` for the values inside Python-encoded
+    columns: timestamps/dates → ISO-8601, Decimal → float, bytes →
+    base64."""
+    import base64
+    import decimal
+
+    if hasattr(v, "isoformat"):
+        return v.isoformat()
+    if isinstance(v, decimal.Decimal):
+        return float(v)
+    if isinstance(v, (bytes, bytearray)):
+        return base64.b64encode(bytes(v)).decode("ascii")
+    raise TypeError(f"es_status writer: unsupported value type {type(v)}")
+
+
+def _json_dumps(v) -> str:
+    import json
+
+    return json.dumps(v, separators=(",", ":"), default=_json_default)
+
+
+def _python_values(col: "pa.Array", encode) -> "pa.Array":
+    """``encode`` applied to each non-null value in Python — the slow
+    path, kept for the types no Arrow kernel encodes."""
+    import pyarrow as pa
+
+    return pa.array(
+        [None if v is None else encode(v) for v in col.to_pylist()], pa.string()
+    )
+
+
+def _json_values(col: "pa.Array") -> "pa.Array":
+    """The JSON text of every value of one column; null → ``null``."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    t = col.type
+    if pa.types.is_string(t) or pa.types.is_large_string(t):
+        out = _json_strings(col)
+    elif pa.types.is_integer(t) or pa.types.is_boolean(t) or pa.types.is_null(t):
+        out = pc.cast(col, pa.string())
+    elif pa.types.is_floating(t):
+        out = _json_floats(col)
+    elif pa.types.is_timestamp(t) and t.unit != "ns":
+        out = _json_timestamps(col)
+    elif pa.types.is_date(t):
+        out = pc.binary_join_element_wise('"', pc.cast(col, pa.string()), '"', "")
+    else:
+        out = _python_values(col, _json_dumps)
+    return pc.fill_null(out, "null")
+
+
+def _hit_lines(
+    batch: "pa.RecordBatch", index: str, id_col: str, tag: str, n0: int
+) -> "pa.Array":
+    """One hit NDJSON line (newline included) per row of ``batch``:
+    ``{"_id":…,"_index":…,"_source":{…}}``.  ``_id`` is the ``id_col``
+    value as text, or ``<tag>:<n>`` (``n`` the row's number in the file,
+    ``n0`` that of the batch's first row) where it is null or absent;
+    ``_source`` holds every other column, nulls included, in schema
+    order."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    names = batch.schema.names
+    if id_col in names:
+        ids = batch.column(names.index(id_col))
+        t = ids.type
+        if not (pa.types.is_string(t) or pa.types.is_large_string(t) or pa.types.is_integer(t)):
+            ids = _python_values(ids, str)
+        ids = pc.cast(ids, pa.string())
+    else:
+        ids = pa.nulls(batch.num_rows, pa.string())
+    if ids.null_count:
+        numbers = pc.cast(pa.array(np.arange(n0, n0 + batch.num_rows)), pa.string())
+        ids = pc.coalesce(ids, pc.binary_join_element_wise(f"{tag}:", numbers, ""))
+    src = [n for n in names if n != id_col]
+    keys = [k.as_py() for k in _json_strings(pa.array(src, pa.string()))]
+    index_json = _json_strings(pa.array([index], pa.string()))[0].as_py()
+    head = f',"_index":{index_json},"_source":{{'
+    parts: list = ['{"_id":', _json_strings(ids)]
+    for i, (name, key) in enumerate(zip(src, keys)):
+        parts += [(head if i == 0 else ",") + key + ":", _json_values(batch.column(name))]
+    parts.append("}}\n" if src else head + "}}\n")
+    return pc.binary_join_element_wise(*parts, "")
+
+
+def _fold_stats(bounds: dict, batch: "pa.RecordBatch", cols: list[str]) -> None:
+    """Fold this batch's per-column [min, max] into ``bounds`` in place.
+    ``bounds[c] = None`` marks a column that records no stats for the
+    file: one holding a NaN, or of a type min_max does not order."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    for c in cols:
+        i = batch.schema.get_field_index(c)
+        if i < 0 or (c in bounds and bounds[c] is None):
+            continue
+        col = batch.column(i)
+        if pa.types.is_floating(col.type) and pc.any(pc.is_nan(col)).as_py():
+            bounds[c] = None
+            continue
+        try:
+            mm = pc.min_max(col)
+        except pa.ArrowNotImplementedError:
+            bounds[c] = None
+            continue
+        lo, hi = mm["min"].as_py(), mm["max"].as_py()
+        if lo is None:
+            continue  # all null
+        cur = bounds.get(c)
+        bounds[c] = [lo, hi] if cur is None else [min(cur[0], lo), max(cur[1], hi)]
 
 
 def _stats_str(v) -> str:
@@ -585,10 +782,6 @@ def _stats_str(v) -> str:
     if hasattr(v, "isoformat"):
         return v.isoformat()
     return str(v)
-
-
-_INTEGRAL_TYPES = (T.LongType, T.IntegerType, T.ShortType, T.ByteType)
-_FLOAT_TYPES = (T.DoubleType, T.FloatType)
 
 
 def _utc_dt(s: str):
@@ -613,7 +806,9 @@ def _typed_stat(dt: T.DataType, s: str):
         if isinstance(dt, _INTEGRAL_TYPES):
             return int(s)
         if isinstance(dt, _FLOAT_TYPES):
-            return float(s)
+            v = float(s)
+            # a NaN bound (an older writer's NaN-first file) orders nothing
+            return None if v != v else v
         if isinstance(dt, T.DecimalType):
             return decimal.Decimal(s)
         if isinstance(dt, (T.TimestampType, T.DateType)):
@@ -670,7 +865,7 @@ class _EsWriteCommit(WriterCommitMessage):
 
 
 class EsStatusWriter(DataSourceArrowWriter):
-    """Task protocol: each executor serializes its Arrow batches to hit
+    """Task protocol: each executor encodes its Arrow batches to hit
     NDJSON under a task-unique ``_tmp_`` name (a speculative or retried
     task attempt can never collide with a committed file), returns the
     temp path as its commit message, and the driver makes the WHOLE job
@@ -678,7 +873,15 @@ class EsStatusWriter(DataSourceArrowWriter):
     the ``_ES_COMMIT`` manifest listing exactly the committed files.
     Readers that honor the manifest see all-or-nothing (the PrepareBatch/
     Send batch-visibility analog); ``abort`` removes the temps, so a
-    failed job leaves no partial batch behind."""
+    failed job leaves no partial batch behind.
+
+    Encoding is columnar (``_hit_lines``): a batch becomes one Arrow
+    array of hit lines built by pyarrow.compute and is written with one
+    call, and the manifest's per-file [min, max] of each ``statscolumns``
+    column folds once per batch with ``pc.min_max``.  A float column
+    that holds a NaN in a file records no stats for that file (Spark
+    orders NaN above every value, so no [min, max] without it is
+    exact)."""
 
     def __init__(self, schema: T.StructType, options: dict, overwrite: bool) -> None:
         self.spark_schema = schema
@@ -696,23 +899,7 @@ class EsStatusWriter(DataSourceArrowWriter):
             if c.strip()
         ]
 
-    @staticmethod
-    def _jsonify(v):
-        """JSON-encode the Arrow-to-Python values Spark hands the task:
-        timestamps → ISO-8601, Decimal → float, bytes → base64."""
-        import base64
-        import decimal
-
-        if hasattr(v, "isoformat"):
-            return v.isoformat()
-        if isinstance(v, decimal.Decimal):
-            return float(v)
-        if isinstance(v, (bytes, bytearray)):
-            return base64.b64encode(bytes(v)).decode("ascii")
-        raise TypeError(f"es_status writer: unsupported value type {type(v)}")
-
     def write(self, iterator) -> _EsWriteCommit:
-        import json
         import os
         import uuid
 
@@ -724,48 +911,23 @@ class EsStatusWriter(DataSourceArrowWriter):
         final_name = f"part-{tc.partitionId():05d}-{tag}.ndjson"
         tmp = os.path.join(self.path, f"_tmp_{tag}.ndjson")
         n = 0
-        # min/max accumulate on the NATIVE value — string comparison is
-        # wrong for numerics crossing a digit-count boundary (99 vs 100
-        # would record bounds ['100','99']) and the decoded lo/hi would be
-        # inverted, silently breaking zero-scan stats aggregates.  A
-        # column with incomparable mixed types gets no stats at all.
-        raw: dict[str, list] = {}
-        poisoned: set[str] = set()
-        with open(tmp, "w") as f:
+        # min/max fold on the NATIVE value (string order is wrong for
+        # numerics crossing a digit-count boundary: 99 vs 100)
+        bounds: dict[str, list | None] = {}
+        with open(tmp, "wb") as f:
             for batch in iterator:
-                for rec in batch.to_pylist():
-                    for c in self.stats_cols:
-                        v = rec.get(c)
-                        if v is None or c in poisoned:
-                            continue
-                        cur = raw.get(c)
-                        if cur is None:
-                            raw[c] = [v, v]
-                        else:
-                            try:
-                                if v < cur[0]:
-                                    cur[0] = v
-                                if v > cur[1]:
-                                    cur[1] = v
-                            except TypeError:
-                                poisoned.add(c)
-                    doc_id = rec.pop(self.id_col, None)
-                    hit = {
-                        "_id": str(doc_id) if doc_id is not None else f"{tag}:{n}",
-                        "_index": self.index,
-                        "_source": rec,
-                    }
-                    f.write(
-                        json.dumps(
-                            hit, separators=(",", ":"), default=self._jsonify
-                        )
-                        + "\n"
-                    )
-                    n += 1
+                if batch.num_rows == 0:
+                    continue
+                _fold_stats(bounds, batch, self.stats_cols)
+                lines = _hit_lines(batch, self.index, self.id_col, tag, n)
+                _, offsets, data = lines.buffers()
+                offsets = memoryview(offsets).cast("i")  # string: int32 offsets
+                f.write(memoryview(data)[offsets[lines.offset]:offsets[lines.offset + len(lines)]])
+                n += batch.num_rows
         stats: dict[str, list[str]] = {
-            c: [_stats_str(lo), _stats_str(hi)]
-            for c, (lo, hi) in raw.items()
-            if c not in poisoned
+            c: [_stats_str(b[0]), _stats_str(b[1])]
+            for c, b in bounds.items()
+            if b is not None
         }
         if n > 0:
             # every hit in this file carries _index == self.index, so the

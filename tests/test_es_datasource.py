@@ -1015,3 +1015,148 @@ def test_count_and_grouped_agg_pushdown(spark, tmp_path):
     assert rows == {"idx_a": (1, 31), "idx_b": (500, 11)}
     # count stays provable (per-file counts cover the new file)
     assert manifest_count(sink) == 42
+
+
+# ---------------------------------------------------------------------------
+# Reads whose stats prune every file; NaN in filters and stats
+# ---------------------------------------------------------------------------
+
+
+def test_read_that_prunes_every_file_returns_no_rows(spark, tmp_path):
+    """When the manifest stats rule out every file, partitions() is empty
+    and Spark plans one task with a None partition: the read must yield
+    zero rows, not fail on ``None.path``."""
+    sink = str(tmp_path / "sink")
+    schema = "es_id string, data_speed long, data_engineSpeed double"
+    df = spark.createDataFrame([("a", 100, 1.0), ("b", 150, 5.0)], schema).coalesce(1)
+    write_es_status(df, sink, mode="append", statscolumns="data_speed,data_engineSpeed")
+    r = EsStatusReader(_T.StructType.fromDDL(schema), {"path": sink})
+    list(r.pushFilters([_Gt(("data_speed",), 200)]))
+    assert r.partitions() == []
+    for pred in (F.col("data_speed") > 200, F.col("data_engineSpeed") > 10):
+        assert read_es_status(spark, sink, schema).filter(pred).count() == 0
+        assert read_es_status(spark, sink, schema).filter(pred).collect() == []
+
+
+@pytest.mark.parametrize(
+    "values", [[float("nan"), 1.0, 5.0], [1.0, 5.0, float("nan")]],
+    ids=["nan_first", "nan_last"],
+)
+def test_nan_rows_match_a_spark_scan(spark, tmp_path, values):
+    """Spark orders NaN above every value and treats NaN = NaN as true.
+    Filters and stats-served min/max over an es_status file holding a
+    NaN must answer what a plain Spark scan of the same rows answers;
+    the writer records no stats for a float column holding a NaN, and a
+    NaN bound an older writer recorded is never used."""
+    import math
+
+    from es_ch_sync_spark.io.es_datasource import read_es_status_agg
+
+    schema = "es_id string, data_engineSpeed double"
+    rows = [(f"e{i}", v) for i, v in enumerate(values)]
+    sink = str(tmp_path / "sink")
+    write_es_status(
+        spark.createDataFrame(rows, schema).coalesce(1), sink, mode="append",
+        statscolumns="data_engineSpeed",
+    )
+    mem = spark.createDataFrame(rows, schema)
+    col, nan = F.col("data_engineSpeed"), float("nan")
+    for pred in (col > 10, col >= 5.0, col < 2.0, col == F.lit(nan), col.isin(nan, 1.0)):
+        def ids(df):
+            return sorted(r["es_id"] for r in df.filter(pred).collect())
+
+        assert ids(read_es_status(spark, sink, schema)) == ids(mem), pred
+
+    def same(a, b):
+        return a == b or (math.isnan(a) and math.isnan(b))
+
+    mpath = os.path.join(sink, "_ES_COMMIT")
+    with open(mpath) as f:
+        manifest = json.load(f)
+    assert all("data_engineSpeed" not in s for s in manifest["stats"].values())
+    for tamper in (False, True):
+        if tamper:  # the NaN-first bounds an older writer recorded
+            for s in manifest["stats"].values():
+                s["data_engineSpeed"] = ["nan", "nan"]
+            with open(mpath, "w") as f:
+                json.dump(manifest, f)
+        for agg in ("min", "max"):
+            got = read_es_status_agg(spark, sink, "data_engineSpeed", agg, schema)
+            want = mem.agg({"data_engineSpeed": agg})
+            assert same(got.collect()[0][0], want.collect()[0][0]), (agg, tamper)
+
+
+# ---------------------------------------------------------------------------
+# Writer encoding stays columnar
+# ---------------------------------------------------------------------------
+
+
+def test_writer_write_path_has_no_per_row_python():
+    """Neither ``EsStatusWriter.write`` nor any module function or writer
+    method it reaches calls ``to_pylist`` or ``json.dumps``: a batch is
+    encoded by Arrow kernels, not value by value.  ``_python_values`` and
+    ``_json_dumps`` are the one per-value path, for the types no Arrow
+    kernel encodes (decimal, binary, nested); the next test pins that the
+    status schema's types never take it."""
+    import ast
+    import inspect
+
+    import es_ch_sync_spark.io.es_datasource as es_ds
+
+    tree = ast.parse(inspect.getsource(es_ds))
+    funcs = {n.name: n for n in tree.body if isinstance(n, ast.FunctionDef)}
+    cls = next(
+        n for n in tree.body if isinstance(n, ast.ClassDef) and n.name == "EsStatusWriter"
+    )
+    methods = {n.name: n for n in cls.body if isinstance(n, ast.FunctionDef)}
+    per_value = {"_python_values", "_json_dumps"}
+    seen, todo, hits = set(), [methods["write"]], []
+    while todo:
+        fn = todo.pop()
+        if fn.name in seen:
+            continue
+        seen.add(fn.name)
+        for node in ast.walk(fn):
+            if isinstance(node, ast.Attribute):
+                if node.attr in ("to_pylist", "dumps"):
+                    hits.append(f"{fn.name}:{node.lineno} .{node.attr}")
+                self_call = isinstance(node.value, ast.Name) and node.value.id == "self"
+                if self_call and node.attr in methods:
+                    todo.append(methods[node.attr])
+            elif isinstance(node, ast.Name) and node.id in funcs and node.id not in per_value:
+                todo.append(funcs[node.id])
+    assert hits == []
+    assert {"_hit_lines", "_json_values", "_fold_stats"} <= seen  # the walk reached the encoder
+
+
+def test_status_schema_types_stay_off_the_python_path(monkeypatch):
+    """Every column type of the status schema, plus int32, float32, bool,
+    date and zone-less timestamps, encodes without ``_python_values``;
+    null ids take the ``tag:n`` numbering, also without it."""
+    import pyarrow as pa
+
+    import es_ch_sync_spark.io.es_datasource as es_ds
+
+    def per_value(*_):
+        raise AssertionError("per-value Python path taken")
+
+    monkeypatch.setattr(es_ds, "_python_values", per_value)
+    sample = {
+        pa.string(): "x", pa.int64(): 7, pa.float64(): 1.5,
+        pa.timestamp("us", tz="UTC"): datetime(2024, 1, 2, 3, 4, 5, tzinfo=timezone.utc),
+    }
+    cols = {}
+    for f in _T.StructType.fromDDL(es_ds.DEFAULT_STATUS_DDL).fields:
+        t = es_ds._arrow_type(f.dataType)
+        cols[f.name] = pa.array([sample[t], None, sample[t]], t)
+    cols["es_id"] = pa.array(["a", None, "c"])
+    cols.update(
+        i32=pa.array([1, None, -1], pa.int32()),
+        f32=pa.array([0.5, None, float("nan")], pa.float32()),
+        flag=pa.array([True, None, False]),
+        day=pa.array([datetime(2024, 1, 2).date(), None, None]),
+        ntz=pa.array([datetime(2024, 1, 2), None, None], pa.timestamp("us")),
+    )
+    for id_col in ("es_id", "i32"):
+        lines = es_ds._hit_lines(pa.record_batch(cols), "events", id_col, "t", 5)
+        assert [json.loads(x)["_id"] for x in lines.to_pylist()][1] == "t:6"

@@ -1151,3 +1151,216 @@ def test_mix_jsd_bounds_and_identity(spark):
     assert out["2024-01-02"] == 0.0           # identical mix
     assert abs(out["2024-01-03"] - math.log(2)) < 1e-6  # disjoint support
     assert all(v is None or 0.0 <= v <= math.log(2) + 1e-9 for v in out.values())
+
+
+# ---------------------------------------------------------------------------
+# es_status writer: the columnar hit encoder against the per-row encoding
+# (to_pylist + json.dumps) it replaced, kept here as the reference
+# ---------------------------------------------------------------------------
+
+
+def _row_jsonify(v):
+    import base64
+    import decimal
+
+    if hasattr(v, "isoformat"):
+        return v.isoformat()
+    if isinstance(v, decimal.Decimal):
+        return float(v)
+    if isinstance(v, (bytes, bytearray)):
+        return base64.b64encode(bytes(v)).decode("ascii")
+    raise TypeError(type(v))
+
+
+def _row_hit_lines(batch, index, id_col, tag, n0):
+    import json
+
+    out = []
+    for n, rec in enumerate(batch.to_pylist(), n0):
+        doc_id = rec.pop(id_col, None)
+        hit = {
+            "_id": str(doc_id) if doc_id is not None else f"{tag}:{n}",
+            "_index": index,
+            "_source": rec,
+        }
+        out.append(json.dumps(hit, separators=(",", ":"), default=_row_jsonify) + "\n")
+    return out
+
+
+def _decoded(line: str):
+    """json.loads keeping what == would hide: NaN/Infinity tokens, a
+    float read back as an int, the sign of -0.0."""
+    import json
+    import math
+
+    return json.loads(
+        line,
+        parse_constant=lambda c: ("const", c),
+        parse_float=lambda s: ("float", float(s), math.copysign(1.0, float(s))),
+    )
+
+
+_TEXT = st.text(
+    st.one_of(st.sampled_from('"\\\n\t\b\x00\x1f\x7f '), st.characters()), max_size=6
+)
+_UTC_TS = st.datetimes(timezones=st.just(timezone.utc))
+
+
+def _encoder_columns():
+    import pyarrow as pa
+
+    return {
+        "text": (pa.string(), _TEXT),
+        "text_large": (pa.large_string(), _TEXT),
+        "f64": (pa.float64(), st.one_of(st.floats(), st.sampled_from([-0.0, 100.0, 1e15, 1e16, 1e-5]))),
+        "f32": (pa.float32(), st.floats(width=32)),
+        "i64": (pa.int64(), st.integers(-(2**63), 2**63 - 1)),
+        "i32": (pa.int32(), st.integers(-(2**31), 2**31 - 1)),
+        "flag": (pa.bool_(), st.booleans()),
+        "ts": (pa.timestamp("us", tz="UTC"), _UTC_TS),
+        "ts_ntz": (pa.timestamp("us"), st.datetimes()),
+        "day": (pa.date32(), st.dates()),
+        "amount": (pa.decimal128(12, 3), st.decimals(-(10**8), 10**8, places=3)),
+        "blob": (pa.binary(), st.binary(max_size=6)),
+        "nested": (
+            pa.struct([
+                ("n", pa.int64()), ("tags", pa.list_(pa.string())),
+                ("at", pa.timestamp("us", tz="UTC")),
+            ]),
+            st.fixed_dictionaries({
+                "n": st.none() | st.integers(-5, 5),
+                "tags": st.none() | st.lists(st.none() | _TEXT, max_size=3),
+                "at": st.none() | _UTC_TS,
+            }),
+        ),
+    }
+
+
+@st.composite
+def _hit_batches(draw):
+    """(record batch, id column name): every column type above with
+    nulls, plus a string, large string, integer or absent ``es_id`` with
+    null ids."""
+    import pyarrow as pa
+
+    n = draw(st.integers(0, 6))
+    cols = {
+        name: pa.array(draw(st.lists(st.none() | values, min_size=n, max_size=n)), typ)
+        for name, (typ, values) in _encoder_columns().items()
+    }
+    id_type = draw(st.sampled_from([pa.string(), pa.large_string(), pa.int64(), None]))
+    if id_type is not None:
+        values = st.integers(-(2**63), 2**63 - 1) if id_type == pa.int64() else _TEXT
+        ids = draw(st.lists(st.none() | values, min_size=n, max_size=n))
+        names = list(cols)
+        names.insert(draw(st.integers(0, len(names))), "es_id")
+        cols["es_id"] = pa.array(ids, id_type)
+        cols = {k: cols[k] for k in names}
+    return pa.record_batch(cols), "es_id"
+
+
+@settings(max_examples=150, deadline=None, suppress_health_check=list(HealthCheck))
+@given(_hit_batches(), st.integers(0, 10**6))
+def test_es_status_encoder_matches_row_encoding(batch_and_id, n0):
+    """Every line the columnar encoder writes decodes to the line the
+    per-row ``to_pylist`` + ``json.dumps`` encoding wrote."""
+    from es_ch_sync_spark.io.es_datasource import _hit_lines
+
+    batch, id_col = batch_and_id
+    index = 'status-"é\\'
+    got = _hit_lines(batch, index, id_col, "3-0-abcd1234", n0).to_pylist()
+    want = _row_hit_lines(batch, index, id_col, "3-0-abcd1234", n0)
+    assert len(got) == len(want)
+    for g, w in zip(got, want):
+        assert g.endswith("\n") and g.count("\n") == 1
+        assert _decoded(g) == _decoded(w)
+
+
+def test_es_status_stream_micro_batch_uses_the_batch_encoder(spark, tmp_path):
+    """The streaming sink's ``write`` is the batch writer's (one encoder),
+    and a micro-batch it writes decodes to the per-row reference
+    encoding of the same rows."""
+    import json
+    import os
+
+    from es_ch_sync_spark.io.es_datasource import (
+        EsStatusStreamWriter,
+        EsStatusWriter,
+        read_es_status,
+        read_es_status_stream,
+    )
+
+    assert EsStatusStreamWriter.write is EsStatusWriter.write
+    schema = "es_id string, subject string, time timestamp, data_speed bigint, data_odometer double"
+    src, sink = tmp_path / "export", tmp_path / "sink"
+    src.mkdir()
+    odometers = [float("nan"), -0.0, 1e16, 2.5, None, float("inf")]
+    with open(src / "part-00001.ndjson", "w") as f:
+        for i, odo in enumerate(odometers):
+            source = {
+                "subject": ['a"b', "c\\d", "e\nf", "ü😀", None, ""][i],
+                "time": f"2024-01-0{i + 1}T00:00:0{i}.{i * 5:06d}Z" if i % 3 else None,
+                "data_speed": i * 10 if i != 4 else None,
+                "data_odometer": odo,
+            }
+            f.write(json.dumps({"_id": f"e{i}", "_index": "x", "_source": source}) + "\n")
+    q = (
+        read_es_status_stream(spark, str(src), schema)
+        .writeStream.format("es_status")
+        .option("path", str(sink))
+        .option("index", "status")
+        .option("checkpointLocation", str(tmp_path / "ck"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(120)
+    got = []
+    for p in sorted(os.listdir(sink)):
+        if p.startswith("part-"):
+            with open(sink / p) as f:
+                got += f.readlines()
+    rows = read_es_status(spark, str(src), schema).toArrow()
+    want = [
+        line for b in rows.to_batches() for line in _row_hit_lines(b, "status", "es_id", "-", 0)
+    ]
+    key = lambda d: d["_id"]  # noqa: E731
+    assert sorted(map(_decoded, got), key=key) == sorted(map(_decoded, want), key=key)
+
+
+def _row_stats(batches, cols):
+    """The per-row [min, max] fold the writer did before pc.min_max,
+    plus the NaN rule: a float column holding a NaN records nothing."""
+    import math
+
+    raw, dropped = {}, set()
+    for b in batches:
+        for rec in b.to_pylist():
+            for c in cols:
+                v = rec.get(c)
+                if isinstance(v, float) and math.isnan(v):
+                    dropped.add(c)
+                if v is None or c in dropped:
+                    continue
+                cur = raw.setdefault(c, [v, v])
+                cur[0], cur[1] = min(cur[0], v), max(cur[1], v)
+    return {c: b for c, b in raw.items() if c not in dropped}
+
+
+@settings(max_examples=100, deadline=None, suppress_health_check=list(HealthCheck))
+@given(_hit_batches(), st.integers(0, 6))
+def test_es_status_stats_fold_matches_row_fold(batch_and_id, cut):
+    """Folding pc.min_max per batch gives the bounds the per-row fold
+    gave, over a file written as two batches; a nested column, which no
+    reader can prune on, records none."""
+    from es_ch_sync_spark.io.es_datasource import _fold_stats
+
+    batch, _ = batch_and_id
+    batches = [batch.slice(0, cut), batch.slice(cut)]
+    cols = [c for c in batch.schema.names if c != "nested"]
+    bounds: dict = {}
+    for b in batches:
+        if b.num_rows:
+            _fold_stats(bounds, b, cols + ["nested"])
+    got = {c: b for c, b in bounds.items() if b is not None}
+    assert "nested" not in got
+    assert got == _row_stats(batches, cols)
