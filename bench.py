@@ -1,26 +1,26 @@
-"""Benchmark harness: runs the headline queries at $SPARK_GRAFT_SF_DIR
-(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE
-JSON line:
+"""Benchmark harness: runs the bench rows at $SPARK_GRAFT_SF_DIR (default:
+the sf0.1 testdata, TESTDATA.md) on local[$SPARK_GRAFT_CPUS] and prints
+two JSON lines, a full one and a short trailing one:
 
     {"metric": "headline_suite_wall_sec", "value": <total>, "unit": "sec",
-     "queries": {"<name>": <sec>, ...}, "sf": <sf>}
+     "queries": {"<name>": <sec>, ...}, "sf": <sf>, "action": "noop", ...}
 
-Noise discipline (r4/r13/r14 lessons: single-pass artifacts read 27% hot
-on noisy hosts; r13/r14 official artifacts were drift-inflated mid-band
-readings even WITH a settle-wait, because VM-neighbor noise the loadavg
-cannot see inflates a whole timed window uniformly): the whole suite runs
-as THREE full timed sessions in one JVM, each session separated by a
-settle re-check; each query's reported time is its MIN across sessions
-(r14 VERDICT directive #3 — a query cannot run faster than its plan, so
-the min is the drift-free reading), ``sessions`` embeds every per-session
-value for audit, and ``spread`` records the per-query [min, max].
-``value`` is the sum of per-query minima; ``value_median`` keeps the old
-sum-of-medians aggregation for continuity with BENCH_r01..r14.
+Every row is timed by ``tools/qprof.run``: the program cache is cleared,
+the row is built, then fully materialized with the ``noop`` sink (a
+``.count()`` would let Catalyst prune work that only feeds the output).
+BENCH_r01..r17 timed ``.count()``, so their numbers do not compare with
+these (BENCH.md).
 
-Each query is forced with .count() (full compute, no driver-side collect
-overhead).  The suite covers every operator family: reference sync surface,
-TPC-H-style relational, windows/sessions/as-of, dedup, similarity, text,
-multimodal.
+Noise discipline: the host must settle (1- and 5-min load averages under
+SETTLE_LOAD) before timing; one untimed warm-up pass runs the whole
+suite, then PASSES timed passes, each after a bounded settle re-check.
+A row's time is its min across passes (a row cannot run faster than its
+plan, so the min is the drift-free reading); ``sessions`` keeps every
+reading and ``spread`` the [min, max].  ``value`` is the sum of the
+HEADLINE minima, ``extended_wall_sec`` the sum of the EXTENDED minima.
+The last pass also reads each row's layers from the status store
+(``layers``: construct_s/jobs, action_s and the action's stages, tasks,
+shuffle, spill and task skew).
 """
 
 from __future__ import annotations
@@ -31,9 +31,13 @@ import sys
 import time
 from pathlib import Path
 
-sys.path.insert(0, str(Path(__file__).resolve().parent))
+ROOT = Path(__file__).resolve().parent
+sys.path[:0] = [str(ROOT), str(ROOT / "tools")]
 
-PASSES = 4  # timed sessions per invocation (see noise discipline above)
+PASSES = 4  # timed passes per invocation (see noise discipline above)
+SETTLE_LOAD = 2.5  # both load averages must be under this before timing
+SETTLE_TIMEOUT_S = 600  # time anyway after this; the payload says settled=false
+RESETTLE_TIMEOUT_S = 120  # bounded settle re-check before passes 2..N
 
 HEADLINE = [
     # reference surface
@@ -70,11 +74,9 @@ HEADLINE = [
     "multimodal_features",
 ]
 
-# Post-headline extended rows (r5 directive #5): perf evidence for
-# reference boundaries and newer operator families, WITHOUT perturbing the
-# r1-comparable 28-query headline artifact.  Timed identically (3-pass
-# medians, same JVM) and reported under "extended" — never summed into
-# "value".  r7-family representatives added per r7 judge directive #6.
+# Post-headline extended rows: reference boundaries and newer operator
+# families, timed identically and reported under "extended", never summed
+# into "value".
 EXTENDED = [
     "quarantine_split",
     "config_driven_sync",
@@ -105,12 +107,9 @@ EXTENDED = [
     "kruskal_wallis_arms",
     "kneser_ney_bigram",
 ]
-# EXTENDED is FROZEN as of r12 (r12 verdict directive #3): the 18-query
-# list above now has its own summed, round-comparable headline
-# ("extended_wall_sec" in the JSON line, reference value recorded in
-# NOTES.md).  Do NOT add to it — new-family representatives go in EXTRA
-# below (timed identically, reported under "extra", never summed into
-# either frozen number).
+# EXTENDED is frozen: the list above has its own summed headline
+# ("extended_wall_sec").  New-family representatives go in EXTRA below
+# (timed identically, reported under "extra", never summed).
 
 EXTRA = [
     # round-13 representatives: the shared-mining dedup-audit composite,
@@ -138,146 +137,85 @@ EXTRA = [
 ]
 
 
+def loads() -> list[float]:
+    return [round(x, 2) for x in os.getloadavg()]
+
+
+def settle(timeout_s: float) -> bool:
+    """Wait until the 1- and 5-min load averages are under SETTLE_LOAD
+    (a low 1-min figure can hide a host still draining other work);
+    False if ``timeout_s`` passed first."""
+    t0 = time.time()
+    while max(os.getloadavg()[:2]) >= SETTLE_LOAD:
+        if time.time() - t0 >= timeout_s:
+            return False
+        print(f"# settle: loadavg {loads()[:2]} >= {SETTLE_LOAD}, sleeping 10s",
+              file=sys.stderr)
+        time.sleep(10)
+    return True
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     os.environ["SPARK_GRAFT_CPUS"] = cpus
+
+    from qprof import rounded, run, warm_up
 
     from es_ch_sync_spark.queries import spark_queries
     from es_ch_sync_spark.session import get_spark
 
     spark = get_spark("bench", shuffle_partitions=int(cpus))
     qs = spark_queries()
+    rows = HEADLINE + EXTENDED + EXTRA
 
-    # Host-load context (r11 VERDICT #4): three rounds of BENCH_r{N}.json
-    # needed manual busy-host adjudication against NOTES readings.  Record
-    # the 1/5/15-min load averages at suite start and end plus the warmup
-    # wall so a loaded-host artifact self-identifies: loadavg >> ncpus-idle
-    # at start, or warmup wall far above the settled per-pass wall, means
-    # the reading was taken while the host was draining other work.
-    #
-    # Settle-wait (r13 VERDICT #2): the official r13 artifact was a
-    # drain-time reading (+27% vs the settled band, uniform across
-    # untouched queries).  Rather than refuse (which would void the
-    # round's perf evidence), WAIT for the host to settle before timing:
-    # both the 1-min AND 5-min load averages must drop under the
-    # threshold (the r13 late-session readings showed a low 1-min figure
-    # masking a 2.7 5-min drain).  On timeout we proceed anyway and the
-    # artifact records settled=false so the judge adjudicates from the
-    # spread, not the headline.  Tunable for CI via env.
-    settle_threshold = float(os.environ.get("SPARK_GRAFT_SETTLE_LOAD", "2.5"))
-    settle_timeout = float(os.environ.get("SPARK_GRAFT_SETTLE_TIMEOUT", "600"))
     settle_t0 = time.time()
-    settled = True
-    while max(os.getloadavg()[:2]) >= settle_threshold:
-        if time.time() - settle_t0 >= settle_timeout:
-            settled = False
-            break
-        print(
-            f"# settle-wait: loadavg {os.getloadavg()[:2]} >= "
-            f"{settle_threshold}, sleeping 15s",
-            file=sys.stderr,
-        )
-        time.sleep(15)
+    settled = settle(SETTLE_TIMEOUT_S)
     settle_wait = round(time.time() - settle_t0, 1)
-    load_start = [round(x, 2) for x in os.getloadavg()]
+    load_start = loads()
+    warm_up(spark, sf_dir)
 
-    # warm the JVM + parquet footers with one tiny action (not timed)
-    spark.read.parquet(f"{sf_dir}/region.parquet").count()
-
-    # Fault-isolated: one broken query must never zero the round's perf
-    # evidence — errors are recorded per-query and the JSON always emits.
-    samples: dict[str, list[float]] = {
-        name: [] for name in HEADLINE + EXTENDED + EXTRA
-    }
+    # Fault-isolated: one broken row must never void the round's evidence;
+    # errors are recorded per row and the JSON always emits.
+    samples: dict[str, list[float]] = {name: [] for name in rows}
+    layers: dict[str, dict] = {}
     errors: dict[str, str] = {}
 
-    # One UNTIMED warmup execution of the whole suite before the timed
-    # passes (r9 VERDICT #6): pass-1 used to carry all the JIT/codegen
-    # compilation and cold page-cache reads, so a loaded host produced
-    # 19.3 s-style artifacts (r7, r9) whose medians the judge had to
-    # adjudicate against the spread minima.  Warmup errors are recorded
-    # (and the query skipped in timed passes) exactly like timed-pass
-    # errors.
-    warmup_t0 = time.time()
-    for name in HEADLINE + EXTENDED + EXTRA:
+    def timed(name: str, label: str, with_layers: bool = False) -> float | None:
         try:
-            t0 = time.time()
-            qs[name](spark, sf_dir).count()
-            print(
-                f"# warmup {name}: {time.time() - t0:.3f}s (untimed)",
-                file=sys.stderr,
-            )
+            r = run(spark, name, qs[name], sf_dir, layers=with_layers)
         except Exception as exc:  # noqa: BLE001 — isolate, record, continue
             errors[name] = f"{type(exc).__name__}: {exc}"[:500]
             print(f"# {name}: ERROR {errors[name]}", file=sys.stderr)
+            return None
+        print(f"# {label} {name}: {r['s']:.3f}s", file=sys.stderr)
+        if with_layers:
+            layers[name] = rounded({k: v for k, v in r.items() if k != "s"})
+        return r["s"]
+
+    # One untimed warm-up pass: the first run of a row carries JIT/codegen
+    # compilation and cold page-cache reads.
+    warmup_t0 = time.time()
+    for name in rows:
+        timed(name, "warmup")
     warmup_wall = round(time.time() - warmup_t0, 3)
 
-    # Timed sessions (r14 VERDICT directive #3): each session is one full
-    # suite execution; before sessions 2..N we re-check the settle
-    # condition (bounded wait) so a drift burst that lands mid-invocation
-    # doesn't inflate every session uniformly.  Per-session loadavg is
-    # recorded alongside the per-session timings.
-    # Per-query cache-present flag (r16 VERDICT what's-wrong #3 / next-round
-    # #2, "record per-query cache-hit status in the payload so the artifact
-    # self-describes"): queries that .cache() deterministic sub-plans leave
-    # entries in the JVM CacheManager, so later sessions can hit earlier
-    # sessions' caches (min-across-sessions then reads a warm figure).
-    # Rather than clearCache() between sessions — which would shift ~10
-    # cache-heavy rows to cold readings and break per-query comparability
-    # with BENCH_r16 — each timed run records whether the CacheManager held
-    # ANY entries when it started: a `true` means the reading may be
-    # cache-assisted, a `false` means provably cold-cache.  Symmetric with
-    # how r15/r16 measured, so round-over-round deltas stay valid.
-    def _cache_nonempty() -> bool:
-        try:
-            return not spark._jsparkSession.sharedState().cacheManager().isEmpty()
-        except Exception:  # noqa: BLE001 — introspection must never break timing
-            return False
-
-    cache_present: dict[str, list[bool]] = {
-        name: [] for name in HEADLINE + EXTENDED + EXTRA
-    }
     session_loads: list[list[float]] = []
     for pass_no in range(PASSES):
         if pass_no:
-            re_t0 = time.time()
-            while (
-                max(os.getloadavg()[:2]) >= settle_threshold
-                and time.time() - re_t0 < 120
-            ):
-                print(
-                    f"# inter-session settle: loadavg {os.getloadavg()[:2]}"
-                    f" >= {settle_threshold}, sleeping 10s",
-                    file=sys.stderr,
-                )
-                time.sleep(10)
-        session_loads.append([round(x, 2) for x in os.getloadavg()])
-        for name in HEADLINE + EXTENDED + EXTRA:
+            settle(RESETTLE_TIMEOUT_S)
+        session_loads.append(loads())
+        for name in rows:
             if name in errors:
                 continue
-            try:
-                # read before the run, recorded only with its timing, so the
-                # flags stay aligned one-to-one with samples[name]
-                cached = _cache_nonempty()
-                t0 = time.time()
-                n = qs[name](spark, sf_dir).count()
-                dt = time.time() - t0
+            dt = timed(name, f"session {pass_no + 1}/{PASSES}", pass_no == PASSES - 1)
+            if dt is not None:
                 samples[name].append(dt)
-                cache_present[name].append(cached)
-                print(
-                    f"# session {pass_no + 1}/{PASSES} {name}: {n} rows in {dt:.3f}s",
-                    file=sys.stderr,
-                )
-            except Exception as exc:  # noqa: BLE001 — isolate, record, continue
-                errors[name] = f"{type(exc).__name__}: {exc}"[:500]
-                print(f"# {name}: ERROR {errors[name]}", file=sys.stderr)
 
     timings: dict[str, float] = {}
     extended: dict[str, float] = {}
     extra: dict[str, float] = {}
     spread: dict[str, list[float]] = {}
-    medians: dict[str, float] = {}
     sessions: dict[str, list[float]] = {}
     for name, ts in samples.items():
         if not ts:
@@ -286,20 +224,14 @@ def main() -> None:
             extended if name in EXTENDED else extra if name in EXTRA else timings
         )
         bucket[name] = round(min(ts), 3)
-        medians[name] = round(sorted(ts)[len(ts) // 2], 3)
         sessions[name] = [round(t, 3) for t in ts]
         spread[name] = [round(min(ts), 3), round(max(ts), 3)]
 
     # A partial suite must not masquerade as a (faster-looking) full-suite
-    # time: value is null and incomplete=true whenever a HEADLINE query
-    # errored (extended-row errors are recorded but don't void the
-    # r1-comparable artifact).
+    # time: value is null and incomplete=true whenever a HEADLINE row
+    # errored; extended_wall_sec is null whenever an EXTENDED row errored.
     headline_errors = {k: v for k, v in errors.items() if k in HEADLINE}
     total = round(sum(timings.values()), 3) if not headline_errors else None
-    # Second frozen headline (r12 verdict directive #3): sum over the
-    # 18 EXTENDED rows (per-query min across sessions, like "value"),
-    # comparable round-over-round; null whenever an EXTENDED query
-    # errored.  extended_wall_sec_median keeps the pre-r15 aggregation.
     extended_errors = {k: v for k, v in errors.items() if k in EXTENDED}
     extended_total = (
         round(sum(extended.values()), 3) if not extended_errors else None
@@ -309,46 +241,33 @@ def main() -> None:
         sf_val: float | str = float(sf)
     except ValueError:
         sf_val = sf
-    # Continuity numbers: the r1..r14 artifacts aggregated by
-    # sum-of-medians; keep those alongside the new min-based headline so
-    # round-over-round comparisons stay possible in both directions.
-    total_median = (
-        round(sum(medians[n] for n in timings), 3)
-        if not headline_errors else None
-    )
-    extended_total_median = (
-        round(sum(medians[n] for n in extended), 3)
-        if not extended_errors else None
-    )
     payload = {
         "metric": "headline_suite_wall_sec",
         "value": total,
         "unit": "sec",
         "queries": timings,
         "sf": sf_val,
+        "action": "noop",
         "passes": PASSES,
-        "aggregation": "untimed warmup pass, then N full timed sessions "
-        "with inter-session settle re-checks; per-query time = min across "
-        "sessions (drift-free reading), value = sum of minima; "
-        "value_median/extended_wall_sec_median keep the r1..r14 "
-        "sum-of-medians aggregation; 'sessions' embeds every per-session "
-        "reading for audit",
-        "value_median": total_median,
+        "aggregation": "untimed warmup pass, then N full timed passes "
+        "with inter-pass settle re-checks; per-row time = min across "
+        "passes (drift-free reading), value = sum of HEADLINE minima; "
+        "'sessions' embeds every per-pass reading for audit; 'layers' "
+        "come from the last pass",
         "spread": spread,
         "sessions": sessions,
+        "layers": layers,
         "extended": extended,
         "extended_wall_sec": extended_total,
-        "extended_wall_sec_median": extended_total_median,
         "extra": extra,
-        "cache_present": {k: v for k, v in cache_present.items() if v},
         "host": {
             "loadavg_start": load_start,
-            "loadavg_end": [round(x, 2) for x in os.getloadavg()],
+            "loadavg_end": loads(),
             "cpus": int(cpus),
             "warmup_wall_sec": warmup_wall,
             "settled": settled,
             "settle_wait_sec": settle_wait,
-            "settle_threshold": settle_threshold,
+            "settle_threshold": SETTLE_LOAD,
             "session_loadavg": session_loads,
         },
     }
@@ -358,19 +277,11 @@ def main() -> None:
     if headline_errors:
         payload["incomplete"] = True
     print(json.dumps(payload))
-    # Trailing short line: the driver's capture keeps only the LAST ~2000
-    # chars of stdout (BENCH_r08.json lost the big line's head, including
-    # "value").  This line is short enough to always survive whole and
-    # self-describing enough to stand alone; consumers with the full
-    # stream use the complete line above.
-    #
-    # r17 (r16 VERDICT next-round #2): the r16 trailing line carried suite
-    # totals but no per-query map, so the driver's PERF comparator came up
-    # empty (`per_query: {}`).  It now carries "value" and a merged
-    # per-query "queries" map (headline + extended + extra, each value the
-    # min across sessions, 3dp), serialized compact; if it would exceed the
-    # ~2000-char capture window, extra- then extended-tier entries are
-    # dropped (headline always survives) and the line says so.
+    # Trailing short line: a capture that keeps only the last ~2000 chars
+    # of stdout loses the big line's head, so this line stands alone.  It
+    # carries "value" and one per-row "queries" map (headline + extended
+    # + extra minima); past 1900 chars the extra-, then extended-tier
+    # entries are dropped (headline always survives) and the line says so.
     compact_queries = {**timings, **extended, **extra}
     dropped_tiers: list[str] = []
     while True:
@@ -380,10 +291,10 @@ def main() -> None:
             "unit": "sec",
             "queries": compact_queries,
             "sf": sf_val,
+            "action": "noop",
             "headline_wall_sec": total,
-            "headline_wall_sec_median": total_median,
             "extended_wall_sec": extended_total,
-            "aggregation": "per-query min across sessions",
+            "aggregation": "per-row min across passes",
             "incomplete": bool(headline_errors),
             "settled": settled,
             "loadavg_start": load_start,

@@ -17,7 +17,9 @@ Conventions for cross-engine value-hash stability:
 
 from __future__ import annotations
 
+import json
 from collections.abc import Callable
+from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -53,293 +55,33 @@ def register(name: str, oracle: str | None):
     return deco
 
 
-# Names the driver's 50-query correctness sample has already covered
-# (union of CORRECTNESS_r01..r05).  The driver samples the FIRST 50
-# registry entries, and the registry order was static, so the same 50
-# were re-verified every round while the rest rested solely on the
-# builder's sweep harness.  spark_queries() therefore orders never-sampled
-# queries first: each round the driver's sample accumulates coverage of
-# queries it has not independently checked before (judge directive r4 #3).
-_DRIVER_SAMPLED_R1_R4 = frozenset({
-    "ann_cosine_topk", "ann_ivf_topk", "ann_lsh_topk", "ann_recall",
-    "anti_join_customers", "approx_distinct_users", "assign_shards",
-    "conflict_audit", "containment_pairs", "cooccurrence_pairs",
-    "corpus_mixture", "corpus_pipeline", "cross_doc_ngrams", "decontaminate",
-    "dedup_clusters", "dedup_clusters_star", "dedup_exact",
-    "dedup_graph_degrees", "dedup_incremental", "dedup_keep_best",
-    "dedup_keep_one", "dedup_minhash_lsh", "dedup_simhash", "dedup_write",
-    "dim_join", "dim_join_unresolved", "distinct_counts", "distinct_tokens",
-    "embedding_near_dup", "es_status_scan", "exists_any", "gapfill_locf",
-    "global_shuffle", "incremental_sync", "json_extract_props", "knn_join",
-    "knn_join_blocked", "linreg_trend", "media_dedup",
-    "multimodal_audio_chunks", "multimodal_features", "multimodal_frame_plan",
-    "multimodal_pixel_stats", "multimodal_resize_stats", "multimodal_wav_rms",
-    "ngram_jaccard", "oldest_signal", "pack_sequences", "pagerank_dedup_graph",
-    "pivot_order_status", "project_prune", "quality_budget_select",
-    "range_join_events", "redact_pii", "resume_points",
-    "resume_points_incremental", "revenue_by_nation", "rollup_returns",
-    "salted_agg_events", "salted_join_events", "scan_filter", "semantic_dedup",
-    "semi_join_customers", "set_ops_users", "source_cap", "stats_percentiles",
-    "stratified_sample", "sync_pipeline", "temperature_sample",
-    "text_analysis", "text_repetition", "tfidf_top_terms", "top_dup_passages",
-    "topk_scan", "tpch_q1", "tpch_q3_top10", "train_test_split",
-    "unpivot_signals", "weighted_sample", "zscore_anomalies",
-})
-
-# Round-5 sample (CORRECTNESS_r05.json keys — all 50 were first-time checks).
-_DRIVER_SAMPLED_R5 = frozenset({
-    "ann_sq8_topk", "array_ops", "bloom_semijoin", "boilerplate_chunks",
-    "chunk_dedup_stats", "chunk_documents", "cms_frequency",
-    "coactivity_edges", "corpus_pipeline_best", "decontaminate_fuzzy",
-    "dedup_recall", "doc_length_histogram", "embedding_centroid_drift",
-    "embedding_gram", "es_sink_roundtrip", "es_status_agg_pushdown",
-    "es_status_stream_scan", "es_stream_roundtrip", "event_transitions",
-    "fingerprint_nn", "fuzzy_blocked_join", "geo_cell_counts",
-    "geo_radius_join", "geo_trajectory", "grouped_ols_pandas",
-    "heavy_hitters", "histogram_quantiles", "key_skew_report",
-    "kfold_groups", "kmv_distinct_users", "kmv_set_ops", "lag_features",
-    "language_mixture", "media_dhash_groups", "oversample_balance",
-    "ppjoin_pairs", "repivot_signals", "rfm_segments",
-    "robust_outliers_mad", "scd2_dim_join", "scd2_upsert",
-    "semantic_dedup_incremental", "source_overlap_matrix",
-    "streaming_kmv_distinct", "triangle_coactivity", "trigram_perplexity",
-    "udtf_top_terms", "user_entropy", "winsorized_stats", "zipf_fit",
-})
-
-# Round-6 sample (CORRECTNESS_r06.json keys, verbatim).
-_DRIVER_SAMPLED_R6 = frozenset({
-    "ann_ivf_topk", "approx_distinct_users", "approx_percentiles",
-    "asof_join_forward", "bloom_point_lookup", "bm25_topk",
-    "bootstrap_means", "bpe_merges", "bpe_token_freqs",
-    "config_driven_sync", "contamination_report", "dpp_partitioned_scan",
-    "dsir_apply_batch", "dsir_select", "dup_span_removal",
-    "embedding_anisotropy", "es_dsl_scan", "es_status_grouped_agg_pushdown",
-    "hybrid_rrf_retrieval", "incremental_rollup_view", "kmeans_cells",
-    "linreg_trend", "margin_knn_mine", "margin_mine_ann", "mixture_plan",
-    "negative_sample_pairs", "ngram_diversity", "oversample_balance",
-    "pca_incremental", "pca_top_component", "quality_lr_scores",
-    "quarantine_split", "reverse_sync_export", "snapshot_diff",
-    "source_divergence", "streaming_chunk_documents",
-    "streaming_dedup_docs", "streaming_rollup_maintenance",
-    "tokenizer_fertility", "tpch_q10_returned", "tpch_q14_promo_share",
-    "tpch_q18_large_orders", "tpch_q19_disjunctive", "tpch_q5_local",
-    "tpch_q7_volume", "txlog_compacted_scan", "txlog_delete_scan",
-    "txlog_pruned_scan", "txlog_update_scan", "variant_extract_props",
-})
-
-_DRIVER_SAMPLED = _DRIVER_SAMPLED_R1_R4 | _DRIVER_SAMPLED_R5 | _DRIVER_SAMPLED_R6
-
-# Round-7 sample (CORRECTNESS_r07.json keys, verbatim — 50/50 green,
-# including the three r6 reds that flipped after the HUGEINT fix).
-_DRIVER_SAMPLED_R7 = frozenset({
-    "ann_ivf_kmeans_topk", "ann_ivfpq_topk", "ann_pq_adc_topk",
-    "asof_join_bucketed", "asof_join_events", "asof_join_tolerance",
-    "bpe_merges", "bpe_token_freqs", "burst_days", "cohort_retention",
-    "collocations_pmi", "cusum_shifts", "dedup_sorted_neighborhood",
-    "funnel_conversion", "hopping_window_counts", "interarrival_stats",
-    "nb_lang_confusion", "oversample_balance", "phrase_search", "pq_codes",
-    "profile_events", "quantile_normalize_chars", "resample_daily",
-    "running_total_per_user", "sessionize_events", "sessionize_native",
-    "signal_correlations", "signal_daily_rollup", "signal_last_value",
-    "streaming_dim_join", "streaming_interval_join",
-    "streaming_resume_points", "streaming_unpivot",
-    "streaming_windowed_counts", "tpch_q12_late", "tpch_q13_custdist",
-    "tpch_q15_top_supplier", "tpch_q17_small_qty", "tpch_q21_waiting",
-    "tpch_q22_idle_rich", "tpch_q2_mincost", "tpch_q4_exists",
-    "tpch_q6_revenue", "tpch_q8_mktshare", "validate_events",
-    "window_topk_per_user", "wordpiece_fertility", "wordpiece_token_freqs",
-    "wordpiece_vocab_top", "zorder_events",
-})
-
-_DRIVER_SAMPLED = _DRIVER_SAMPLED | _DRIVER_SAMPLED_R7
-
-# Round-8 sample (CORRECTNESS_r08.json keys, verbatim — 50/50 green).
-_DRIVER_SAMPLED_R8 = frozenset({
-    "ab_welch_ttest", "cap_per_domain_kept", "chi2_lang_digit",
-    "csv_source_scan", "dedup_snm_multipass", "domain_report_top",
-    "ewma_smooth", "fingerprint_nn_capped", "graph_bfs_depths",
-    "hll_distinct_users", "k_anonymity_violations", "lr_auc_brier",
-    "lr_calibration", "mann_kendall_trend", "mips_topk",
-    "multimodal_wav_features", "orc_source_scan", "peak_concurrency",
-    "rolling_corr_daily", "seasonal_decompose_daily", "sql_case_agg",
-    "sql_conditional_funcs", "sql_corr_subquery", "sql_cube",
-    "sql_date_funcs", "sql_decile_spend", "sql_exists_subquery",
-    "sql_grouping_sets", "sql_having", "sql_histogram", "sql_in_subquery",
-    "sql_intersect_except", "sql_lateral_topk", "sql_min_per_group_corr",
-    "sql_null_semantics", "sql_order_priority_check",
-    "sql_range_frame_window", "sql_recursive_calendar", "sql_string_funcs",
-    "sql_time_range_window", "sql_union", "sql_window_sampler",
-    "streaming_ewma", "streaming_funnel", "t_closeness_audit",
-    "tpch_q11_important", "tpch_q16_suppcnt", "tpch_q20_promo",
-    "tpch_q9_profit", "url_canonical_groups",
-})
-
-_DRIVER_SAMPLED = _DRIVER_SAMPLED | _DRIVER_SAMPLED_R8
-
-# Round-9 sample (CORRECTNESS_r09.json keys, verbatim — 50/50 green).
-# With this fold the union of r1–r9 driver rows covers all 296 registry
-# names: full driver coverage is COMPLETE (VERDICT r9).  From r10 on the
-# rotation's only job is keeping NEW registrations at the front.
-_DRIVER_SAMPLED_R9 = frozenset({
-    "ab_conversion_ztest", "ab_cuped_ttest", "ab_mann_whitney",
-    "acf_lags", "benford_digits", "char_entropy_docs", "conflict_audit",
-    "corpus_pipeline", "dedup_clusters", "dedup_clusters_star",
-    "dedup_exact", "dedup_incremental", "dedup_minhash_lsh",
-    "dedup_simhash", "dedup_write", "dim_join", "dim_join_unresolved",
-    "distinct_tokens", "domain_pagerank", "dp_event_counts",
-    "es_dsl_scan", "es_status_scan", "exists_any", "fdr_bh_trends",
-    "jsonl_source_scan", "kaplan_meier_conversion", "kendall_tau_daily",
-    "ks_ab_test", "label_agreement_kappa", "ngram_jaccard",
-    "oldest_signal", "project_prune", "readability_sources",
-    "resume_points", "resume_points_incremental",
-    "retrieval_ranking_eval", "scan_filter", "script_ratios_docs",
-    "shingle_novelty_docs", "sliding_distinct_users", "source_jsd",
-    "spearman_daily", "text_analysis", "text_repetition",
-    "tfidf_top_terms", "topk_scan", "train_test_split",
-    "unigram_token_freqs", "unigram_vocab", "unpivot_signals",
-})
-
-_DRIVER_SAMPLED = _DRIVER_SAMPLED | _DRIVER_SAMPLED_R9
-
-_DRIVER_SAMPLED_R10 = frozenset({
-    "c4_line_filters", "chi2_lang_source", "dedup_cluster_sizes",
-    "dedup_containment", "decontaminate", "doc_perplexity_buckets",
-    "event_transition_matrix", "global_shuffle", "good_turing_unseen",
-    "gopher_quality_flags", "heaps_law_fit", "host_communities",
-    "host_hits", "lang_classification_report", "lr_ece",
-    "mmr_rerank_topk", "pack_sequences", "quality_budget_select",
-    "rm3_query_expansion", "source_cap", "tokenizer_compression",
-    "winsorized_event_stats", "zipf_rank_frequency",
-})
-
-_DRIVER_SAMPLED = _DRIVER_SAMPLED | _DRIVER_SAMPLED_R10
-
-_DRIVER_SAMPLED_R11 = frozenset({
-    "ab_mde_power", "conflict_audit", "containment_pairs_prefix",
-    "corpus_pipeline", "dedup_ari_exact_vs_lsh", "dedup_clusters",
-    "dedup_clusters_star", "dedup_exact", "dedup_incremental",
-    "dedup_minhash_lsh", "dedup_simhash", "dedup_write", "dim_join",
-    "dim_join_unresolved", "distinct_tokens", "doc_length_tail_index",
-    "entropy_rate_bigram", "es_dsl_scan", "es_status_scan", "exists_any",
-    "fleiss_kappa_gates", "host_kcore", "mattr_diversity", "mcnemar_gates",
-    "minhash_calibration", "ngram_jaccard", "oldest_signal", "project_prune",
-    "psl_registered_domain", "qld_topk", "rbo_bm25_vs_qld", "resume_points",
-    "resume_points_incremental", "scan_filter", "source_gini",
-    "split_length_drift", "text_analysis", "text_repetition",
-    "tfidf_top_terms", "topk_scan", "train_test_split", "unpivot_signals",
-    "vocab_coverage",
-})
-
-_DRIVER_SAMPLED = _DRIVER_SAMPLED | _DRIVER_SAMPLED_R11
-
-_DRIVER_SAMPLED_R12 = frozenset({
-    "nmi_exact_vs_lsh", "edit_distance_pairs", "embedding_density_clusters",
-    "multimodal_png_stats", "retention_cohorts", "nmi_lang_source",
-    "jackknife_source_means", "krippendorff_alpha_gates", "cochran_q_gates",
-    "gate_information_gain", "pii_pattern_census", "pass_at_k",
-    "bm25_param_grid", "ams_f2_users", "paired_permutation_test",
-    "lr_brier_decomposition", "lr_cumulative_gains", "kneser_ney_bigram",
-    "lexical_concentration", "term_burstiness", "split_cross_entropy",
-    "dunning_llr_keywords", "corpus_stats_panel", "seasonal_strength_daily",
-    "wilcoxon_signed_rank", "kruskal_wallis_arms", "brown_forsythe_arms",
-    "ab_panel", "tukey_pairwise_arms", "effect_sizes_ab", "theil_sen_daily",
-    "runs_test_daily", "gumbel_weekly_max", "nelson_aalen_conversion",
-    "logrank_cohorts", "host_graph_panel", "host_graph_stats",
-    "host_degree_powerlaw", "scan_filter", "topk_scan", "project_prune",
-    "exists_any", "es_status_scan", "es_dsl_scan", "unpivot_signals",
-    "dim_join", "dim_join_unresolved", "oldest_signal", "distinct_tokens",
-    "dedup_write",
-})
-
-_DRIVER_SAMPLED = _DRIVER_SAMPLED | _DRIVER_SAMPLED_R12
-
-_DRIVER_SAMPLED_R13 = frozenset({
-    "auc_delong_gates", "conflict_audit", "corpus_pipeline",
-    "cramer_von_mises_ab", "cuped_adjusted_ab", "dedup_ari_exact_vs_lsh",
-    "dedup_audit_panel", "dedup_cluster_sizes", "dedup_clusters",
-    "dedup_clusters_star", "dedup_containment", "dedup_exact",
-    "dedup_incremental", "dedup_minhash_lsh", "dedup_simhash",
-    "dedup_write", "did_effect", "dim_join", "dim_join_unresolved",
-    "distinct_tokens", "embedding_effective_rank", "es_dsl_scan",
-    "es_status_scan", "event_mix_drift_daily", "exists_any",
-    "friedman_daily", "grubbs_daily", "hodges_lehmann_daily",
-    "host_modularity", "kcenter_coreset", "label_centroid_drift",
-    "ljung_box_daily", "mantel_haenszel_gate", "multimodal_gif_stats",
-    "ngram_jaccard", "nmi_exact_vs_lsh", "oldest_signal",
-    "page_hinkley_daily", "project_prune", "qini_uplift_deciles",
-    "resume_points", "resume_points_incremental", "scan_filter",
-    "split_leakage_report", "sprt_conversion_daily", "temperature_mixture",
-    "text_analysis", "text_repetition", "topk_scan", "unpivot_signals",
-})
-
-_DRIVER_SAMPLED = _DRIVER_SAMPLED | _DRIVER_SAMPLED_R13
-
-_DRIVER_SAMPLED_R14 = frozenset({
-    'ann_cosine_topk', 'ann_ivfpq_index_topk', 'ann_ivfpq_rerank_topk',
-    'conflict_audit', 'containment_pairs_prefix', 'corpus_pipeline',
-    'decontaminate', 'dedup_ari_exact_vs_lsh', 'dedup_audit_panel',
-    'dedup_cluster_sizes', 'dedup_clusters', 'dedup_clusters_star',
-    'dedup_containment', 'dedup_exact', 'dedup_incremental',
-    'dedup_minhash_lsh', 'dedup_simhash', 'dedup_write', 'dim_join',
-    'dim_join_unresolved', 'distinct_tokens', 'duplicate_span_census',
-    'edit_distance_pairs', 'embedding_near_dup', 'es_cell_array_scan',
-    'es_dsl_scan', 'es_status_scan', 'exists_any', 'global_shuffle',
-    'multimodal_jpeg_stats', 'multimodal_video_frames', 'ngram_jaccard',
-    'nmi_exact_vs_lsh', 'oldest_signal', 'pack_sequences',
-    'project_prune', 'quality_budget_select', 'resume_points',
-    'resume_points_incremental', 'scan_filter', 'source_cap',
-    'split_leakage_report', 'stratified_sample', 'text_analysis',
-    'text_repetition', 'tfidf_top_terms', 'topk_scan', 'train_test_split',
-    'unpivot_signals', 'video_frame_dedup',
-})
-
-_DRIVER_SAMPLED = _DRIVER_SAMPLED | _DRIVER_SAMPLED_R14
-
-_DRIVER_SAMPLED_R15 = frozenset({
-    'ann_cosine_topk', 'ann_ivfpq_recall', 'conflict_audit',
-    'containment_pairs_prefix', 'corpus_pipeline', 'decontaminate',
-    'dedup_ari_exact_vs_lsh', 'dedup_audit_panel',
-    'dedup_cluster_sizes', 'dedup_clusters', 'dedup_clusters_star',
-    'dedup_containment', 'dedup_exact', 'dedup_incremental',
-    'dedup_minhash_lsh', 'dedup_simhash', 'dedup_write', 'dim_join',
-    'dim_join_unresolved', 'distinct_tokens', 'edit_distance_pairs',
-    'embedding_near_dup', 'es_cell_array_scan', 'es_dsl_scan',
-    'es_status_scan', 'exists_any', 'gif_frame_dedup',
-    'global_shuffle', 'mmr_rerank_topk', 'multimodal_jpeg_progressive',
-    'multimodal_png_variants', 'multimodal_webp_stats',
-    'ngram_jaccard', 'nmi_exact_vs_lsh', 'oldest_signal',
-    'pack_sequences', 'project_prune', 'quality_budget_select',
-    'resume_points', 'resume_points_incremental', 'scan_filter',
-    'source_cap', 'split_leakage_report', 'stratified_sample',
-    'text_analysis', 'text_repetition', 'tfidf_top_terms', 'topk_scan',
-    'train_test_split', 'unpivot_signals',
-})
-
-_DRIVER_SAMPLED = _DRIVER_SAMPLED | _DRIVER_SAMPLED_R15
-
-# Queries whose LATEST driver row is red for a since-fixed reason and must
-# be re-sampled to flip green.  Empty after r14: the driver's 50-row sample
-# came back 50/50, so no registry name is currently red.
-_RED_LATEST: tuple[str, ...] = ()
+_ROOT = Path(__file__).resolve().parent.parent
 
 
-def _rotated(names) -> list[str]:
-    """Registry order: red-latest rows first, then never-driver-sampled
-    names (i.e. registrations newer than the last folded CORRECTNESS
-    round), then everything else (stable within each group) — pure
-    reordering, the name→query mapping is unchanged."""
-    red = [n for n in names if n in _RED_LATEST]
-    fresh = [n for n in names if n not in _DRIVER_SAMPLED]
-    seen = [
-        n for n in names
-        if n in _DRIVER_SAMPLED and n not in _RED_LATEST
-    ]
+def _driver_order(names, correctness_files) -> list[str]:
+    """Registry order for the correctness gate, which samples the first
+    50 entries of ``spark_queries()``: names whose latest row in
+    ``correctness_files`` (read in order, a later file overriding an
+    earlier one) is not ``rows_match`` and ``hash_match`` first, then
+    names no file holds, then the rest, stable within each group.  A pure
+    reordering: the name -> query mapping is unchanged."""
+    green: dict[str, bool] = {}
+    for path in correctness_files:
+        for name, row in json.loads(Path(path).read_text()).items():
+            green[name] = bool(row.get("rows_match") and row.get("hash_match"))
+    red = [n for n in names if green.get(n) is False]
+    fresh = [n for n in names if n not in green]
+    seen = [n for n in names if green.get(n)]
     return red + fresh + seen
 
 
-def spark_queries() -> dict[str, QueryFn]:
+def _ordered() -> list[str]:
     _load_extra_registries()
-    return {k: _REGISTRY[k][0] for k in _rotated(_REGISTRY)}
+    return _driver_order(_REGISTRY, sorted(_ROOT.glob("CORRECTNESS_r*.json")))
+
+
+def spark_queries() -> dict[str, QueryFn]:
+    return {k: _REGISTRY[k][0] for k in _ordered()}
 
 
 def _load_extra_registries() -> None:
@@ -353,10 +95,7 @@ def _load_extra_registries() -> None:
 
 
 def oracle_queries() -> dict[str, str]:
-    _load_extra_registries()
-    return {
-        k: _REGISTRY[k][1] for k in _rotated(_REGISTRY) if _REGISTRY[k][1] is not None
-    }
+    return {k: _REGISTRY[k][1] for k in _ordered() if _REGISTRY[k][1] is not None}
 
 
 def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
