@@ -1,15 +1,16 @@
-"""Table maintenance: upsert (MERGE analog) and small-file compaction on
-plain partitioned Parquet.
+"""Table maintenance on plain partitioned Parquet, and the stage-and-swap
+commit every partition rewrite goes through.
 
 At 100 TB these are the operations that keep the signal table healthy:
-continuous ingestion produces overlapping keys (upsert) and many small
-files per partition (compaction).  Delta/Iceberg provide these as table
-services; on plain Parquet they are two careful plan shapes:
+continuous ingestion produces overlapping keys (the sink's merge) and
+many small files per partition (compaction).  Delta/Iceberg provide these
+as table services; on plain Parquet they are two careful plan shapes:
 
-- **Upsert** rewrites ONLY the partitions the update batch touches:
-  read those partitions, anti-join the old rows that are being replaced,
-  union the updates, swap the rewritten partitions in.  Work scales with
-  touched partitions, not table size.
+- **Merge** (io/sinks.write_signals, which imports this module; this
+  module imports no sink) rewrites ONLY the partitions the batch's
+  window touches: read those partitions, one dedup over them ∪ the
+  batch, swap the rewritten partitions in.  Work scales with touched
+  partitions, not table size.
 - **Compaction** rewrites a partition's many small files into
   size-targeted files, preserving the (token_id, timestamp, name) sort
   that gives parquet row-group stats their pruning power.
@@ -53,6 +54,7 @@ format (Delta/Iceberg), whose MERGE replaces this module wholesale.
 
 from __future__ import annotations
 
+import contextlib
 import glob
 import json
 import os
@@ -63,14 +65,33 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from es_ch_sync_spark.io.sinks import DEDUP_KEY, dedup_signals
-
+DEDUP_KEY = ["token_id", "timestamp", "name"]  # the signal table's key
 MANIFEST_FILE = "_MANIFEST.json"
 LOCK_FILE = "_WRITER_LOCK"
+_TS_TYPE = "spark.sql.parquet.outputTimestampType"
 
 
 class ConcurrentWriteError(RuntimeError):
     """A second writer, or the debris of an interrupted one, was detected."""
+
+
+@contextlib.contextmanager
+def timestamp_micros(spark: SparkSession):
+    """Write parquet timestamps as TIMESTAMP_MICROS for the duration.
+
+    INT96, a vanilla session's default, carries NO footer min/max stats,
+    which silently voids row-group skipping on time predicates and the
+    txlog's manifest-stats pruning.  The session's own value is restored
+    afterwards; one that was never set is unset, not pinned."""
+    prev = spark.conf.get(_TS_TYPE, None)
+    spark.conf.set(_TS_TYPE, "TIMESTAMP_MICROS")
+    try:
+        yield
+    finally:
+        if prev is not None:
+            spark.conf.set(_TS_TYPE, prev)
+        else:
+            spark.conf.unset(_TS_TYPE)
 
 
 def _read_manifest(table_path: str) -> dict:
@@ -167,10 +188,16 @@ def recover_interrupted_write(table_path: str) -> dict:
     return removed
 
 
-def _stage_and_swap(merged: DataFrame, table_path: str, partition_col: str) -> None:
+def _stage_and_swap(
+    merged: DataFrame, table_path: str, partition_col: str, read: set[str]
+) -> None:
     """Materialize ``merged`` into a staging dir, then atomically swap each
     staged ``<partition_col>=<value>`` directory into ``table_path``,
     under the writer lock + epoch manifest protocol (module docstring).
+
+    ``read`` names the partition directories the rewrite read: a staged
+    one outside it would replace rows the rewrite never saw, so that
+    raises before the manifest or any partition is touched.
 
     The swap never deletes before the replacement exists: old partition →
     trash-rename, staged partition → final rename, trash removed last."""
@@ -187,15 +214,20 @@ def _stage_and_swap(merged: DataFrame, table_path: str, partition_col: str) -> N
                 "recover_interrupted_write(table_path) first"
             )
         epoch = int(manifest.get("epoch", 0)) + 1
-        merged.write.mode("overwrite").partitionBy(partition_col).parquet(staging)
+        with timestamp_micros(merged.sparkSession):
+            merged.write.mode("overwrite").partitionBy(partition_col).parquet(staging)
+        staged = sorted(e for e in os.listdir(staging) if e.startswith(f"{partition_col}="))
+        if not set(staged) <= read:
+            raise ValueError(
+                f"staged partitions {sorted(set(staged) - read)} of {table_path} "
+                "fall outside the partitions the rewrite read"
+            )
         _write_manifest(
             table_path,
             {"epoch": epoch, "state": "staging", "writer": writer_id, "staging": staging},
         )
         _verify_lock(table_path, writer_id)  # fence before first rename
-        for entry in sorted(os.listdir(staging)):
-            if not entry.startswith(f"{partition_col}="):
-                continue
+        for entry in staged:
             src = os.path.join(staging, entry)
             dst = os.path.join(table_path, entry)
             trash = f"{dst}.__old__{uuid.uuid4().hex[:8]}"
@@ -208,49 +240,6 @@ def _stage_and_swap(merged: DataFrame, table_path: str, partition_col: str) -> N
     finally:
         shutil.rmtree(staging, ignore_errors=True)
         _release_lock(table_path, writer_id)
-
-
-def upsert_signals(
-    spark: SparkSession,
-    table_path: str,
-    updates: DataFrame,
-    key: list[str] | None = None,
-) -> None:
-    """MERGE-on-key into a date-partitioned signal table (last-write-wins).
-
-    Equivalent to ``MERGE INTO t USING u ON key WHEN MATCHED UPDATE WHEN
-    NOT MATCHED INSERT``.  Only partitions present in ``updates`` are
-    rewritten; everything else is untouched.  Idempotent: re-merging the
-    same batch is a no-op (the anti-join removes exactly the rows the
-    union re-adds) — the plain-Parquet analog of ReplacingMergeTree
-    absorption the reference relies on (sync.go:128-137).  The rewrite
-    goes through ``_stage_and_swap`` (see module docstring).
-
-    Conflicting rows for one key inside ``updates`` resolve the way the
-    sink's do: ``io/sinks.dedup_signals`` keeps the ``min(struct)``
-    winner, grouped with ``event_date`` as ``write_signals`` does, so the
-    kept row does not depend on the input's partitioning.  No
-    ``repartition("event_date")`` before the write: that put a whole day
-    in one task.
-    """
-    key = key or DEDUP_KEY
-    up = dedup_signals(
-        updates.withColumn("event_date", F.to_date("timestamp")),
-        ["event_date", *key],
-    )
-
-    existing = spark.read.parquet(table_path)
-    touched = [r["event_date"] for r in up.select("event_date").distinct().collect()]
-    existing_touched = existing.filter(F.col("event_date").isin(touched))
-
-    kept = existing_touched.join(up.select(*key), on=key, how="left_anti")
-    merged = kept.unionByName(up.select(*kept.columns))
-
-    _stage_and_swap(
-        merged.sortWithinPartitions("event_date", *DEDUP_KEY),
-        table_path,
-        "event_date",
-    )
 
 
 def compact_partition(
@@ -269,6 +258,7 @@ def compact_partition(
         df.repartition(target_files).sortWithinPartitions(*DEDUP_KEY),
         table_path,
         partition_col,
+        {f"{partition_col}={partition_value}"},
     )
 
 
@@ -329,7 +319,7 @@ def maintain_daily_rollup(
             F.sum("v_sum").alias("v_sum"),
         )
     )
-    _stage_and_swap(merged.repartition("day"), rollup_path, "day")
+    _stage_and_swap(merged.repartition("day"), rollup_path, "day", {f"day={d}" for d in touched})
 
 
 def audit_key_conflicts(
@@ -338,8 +328,8 @@ def audit_key_conflicts(
 ) -> DataFrame:
     """Post-merge conflict audit: keys with more than one surviving row.
 
-    The invariant check behind ReplacingMergeTree semantics (and this
-    module's upsert): after any merge, ``(token_id, timestamp, name)`` must
+    The invariant check behind ReplacingMergeTree semantics (and the
+    sink's merge): after any merge, ``(token_id, timestamp, name)`` must
     be unique — a non-empty result means a merge bug or a writer racing the
     swap.  One hash aggregation over narrow key columns; at 100 TB run it
     per touched partition, not whole-table."""
@@ -380,8 +370,8 @@ def retention_vacuum(
     metadata.  The reference relies on ClickHouse TTL for this; here it is
     an explicit, testable maintenance call (same local-FS scope and
     caveats as _stage_and_swap; object-store production belongs to
-    Delta/Iceberg retention).  Readers racing the drop see the standard
-    dynamic-partition caveat documented on upsert_signals."""
+    Delta/Iceberg retention).  A reader racing the drop can list a
+    partition directory that is gone when it opens the files."""
     dropped: list[str] = []
     if not os.path.isdir(table_path):
         return dropped

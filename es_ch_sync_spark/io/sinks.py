@@ -1,16 +1,20 @@
-"""Sinks — signal-table writer with dedup-on-write and date partitioning.
+"""Sinks — the signal-table writer: one merge with dedup-on-write, and
+date partitioning.
 
 K1/K2: the reference appends batches into a ClickHouse ReplacingMergeTree
 keyed (token_id, timestamp, name), which absorbs the deliberate overlap the
 resume logic creates at range boundaries
 (/root/reference/internal/service/clickhouse/clickhouse.go:113-130,
-internal/sync/sync.go:128-137).  On plain Parquet the engine makes that
-semantics explicit: one keep-one dedup on the same key inside every write
-(dedup_signals; within-batch idempotency) and, for cross-run idempotency,
-an anti-join against the existing table (the batch analog of MERGE).
+internal/sync/sync.go:128-137).  Here that is ONE merge, write_signals:
+the table's rows in the run's window ∪ the batch, one dedup_signals
+aggregate whose payload leads with a source rank (batch 0, table 1).  In
+a batch the min(struct) winner holds; across runs the last write wins, as
+ReplacingMergeTree without a version column keeps the last insert.  So a
+re-run, or overlapping windows, leave the table equal to one run's output.
 
 Scale posture: partition by event date — time-range queries (the engine's
-dominant predicate, S3) prune whole partitions; within files, sorting by
+dominant predicate, S3) prune whole partitions, and the merge reads and
+replaces only the partitions its window touches; within files, sorting by
 (token_id, timestamp) gives parquet row-group min/max stats that serve the
 subject/token predicate (S2).  This is the Parquet equivalent of the
 ClickHouse ORDER BY (token_id, timestamp, name) primary index [dep].
@@ -18,18 +22,23 @@ ClickHouse ORDER BY (token_id, timestamp, name) primary index [dep].
 
 from __future__ import annotations
 
+import os
+from datetime import datetime, timedelta
+from zoneinfo import ZoneInfo
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from es_ch_sync_spark.io.maintenance import DEDUP_KEY, _stage_and_swap
 from es_ch_sync_spark.job.metrics import observe_signals
 
-DEDUP_KEY = ["token_id", "timestamp", "name"]
+_RANK = "_source_rank"
 
 
 def dedup_signals(signals: DataFrame, key: list[str] | None = None) -> DataFrame:
     """K2 — keep-one-row-per-key dedup on the signal key (ReplacingMergeTree
-    analog), done once, by the sink (write_signals, the txlog branch of
-    job/main.py).
+    analog), done once, by the sink's merge (merge_rows, under
+    write_signals and txlog_merge).
 
     The winner per key is the lexicographically smallest
     ``(source, value_number, …)`` payload struct — ``min(struct)``, so the
@@ -60,49 +69,63 @@ def dedup_signals(signals: DataFrame, key: list[str] | None = None) -> DataFrame
     )
 
 
+def merge_rows(new: DataFrame, existing: DataFrame | None, key: list[str]) -> DataFrame:
+    """The one merge: dedup_signals over ``new`` ∪ ``existing`` on ``key``
+    with a leading source rank in the payload (new 0, existing 1), so a
+    shared key keeps the new row and other existing rows survive.  With no
+    ``existing`` it is dedup_signals alone, the plain deduped write."""
+    if existing is None:
+        return dedup_signals(new, key)
+    rest = [c for c in new.columns if c not in key]
+    ranked = new.select(*key, F.lit(0).alias(_RANK), *rest).unionByName(
+        existing.select(*key, F.lit(1).alias(_RANK), *rest)
+    )
+    return dedup_signals(ranked, key).select(*new.columns)
+
+
 def write_signals(
     signals: DataFrame,
     path: str,
-    mode: str = "append",
-    existing: DataFrame | None = None,
+    window: tuple[datetime, datetime],
+    out_format: str = "parquet",
 ) -> dict:
-    """K1+K2 — optionally anti-join already-written keys, dedup, write;
-    returns the job/metrics.observe_signals metrics of the written rows
-    (``n_signals`` …), gathered by the write itself.
+    """K1+K2 — merge ``signals``, the rows of the ``[start, stop)``
+    ``window``, into the signal table at ``path`` (merge_rows); returns
+    the job/metrics.observe_signals metrics of the rows written.
 
-    ``existing`` enables idempotent re-runs (reference guarantee: syncing
-    the same range twice leaves the table unchanged).  The anti-join is
-    key-only (3 narrow columns) so its shuffle is small relative to data.
+    - ``parquet``: reads only the window's ``event_date`` partitions (its
+      dates in the session zone, as ``to_date`` computes them, listed by
+      explicit path) and replaces them via maintenance._stage_and_swap,
+      which raises before any swap if a row falls outside the window.
+    - ``txlog``: txlog_merge over the files whose ``timestamp`` stats can
+      overlap the window, recording those stats for the next run.
 
-    One shuffle: the dedup's Exchange hashes ``(event_date, token_id,
-    timestamp, name)``, so a day is spread over every shuffle partition
-    (a ``repartition("event_date")`` put a whole day in one task), and the
-    dedup's Sort is the order each task writes its files in."""
-    if existing is not None:
-        signals = signals.join(existing.select(*DEDUP_KEY), on=DEDUP_KEY, how="left_anti")
+    With nothing in the window there is no scan of the target: one
+    Exchange on ``(event_date, token_id, timestamp, name)``, so a day
+    spreads over every task, and the dedup's Sort is the file order."""
+    spark, (start, stop) = signals.sparkSession, window
+    if out_format == "txlog":
+        from es_ch_sync_spark.io.txlog import txlog_merge
+
+        where = [("timestamp", ">=", start), ("timestamp", "<", stop)]
+        return txlog_merge(
+            signals, path, DEDUP_KEY, where=where, stats_cols=["timestamp"],
+            observe=observe_signals,
+        )["metrics"]
     dated = signals.withColumn("event_date", F.to_date("timestamp"))
-    out, obs = observe_signals(dedup_signals(dated, ["event_date", *DEDUP_KEY]))
-    # TIMESTAMP_MICROS, not the INT96 default: INT96 parquet columns carry
-    # NO min/max statistics, which silently voids this sink's whole
-    # row-group-skipping story for time predicates (the docstring's
-    # ORDER BY analog).  Set at runtime so it holds under vanilla sessions.
-    spark = signals.sparkSession
-    prev = spark.conf.get("spark.sql.parquet.outputTimestampType", None)
-    spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-    try:
-        (
-            out.sortWithinPartitions("event_date", *DEDUP_KEY)
-            .write.mode(mode)
-            .partitionBy("event_date")
-            .parquet(path)
-        )
-    finally:
-        if prev is not None:
-            spark.conf.set("spark.sql.parquet.outputTimestampType", prev)
-        else:
-            # never explicitly set before this call: unset rather than
-            # pinning MICROS as a permanent session side effect (ADVICE r5)
-            spark.conf.unset("spark.sql.parquet.outputTimestampType")
+    tz = ZoneInfo(spark.conf.get("spark.sql.session.timeZone"))
+    first, last = (t.astimezone(tz).date() for t in (start, stop - timedelta(microseconds=1)))
+    touched = [f"event_date={first + timedelta(days=i)}" for i in range((last - first).days + 1)]
+    present = [os.path.join(path, p) for p in touched if os.path.isdir(os.path.join(path, p))]
+    existing = (
+        spark.read.schema(dated.schema).option("basePath", path).parquet(*present)
+        if present
+        else None
+    )
+    out, obs = observe_signals(merge_rows(dated, existing, ["event_date", *DEDUP_KEY]))
+    _stage_and_swap(
+        out.sortWithinPartitions("event_date", *DEDUP_KEY), path, "event_date", set(touched)
+    )
     return obs.get
 
 

@@ -40,6 +40,8 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
+from es_ch_sync_spark.io.maintenance import timestamp_micros
+
 LOG_DIR = "_txlog"
 DATA_DIR = "data"
 
@@ -90,20 +92,10 @@ def _write_data_files(df: DataFrame, table: str) -> list[str]:
     carry NO parquet footer statistics, which would silently disable both
     this log's manifest-stats pruning and Spark's own row-group skipping
     on time predicates — the engine's dominant predicate shape (S3)."""
-    spark = df.sparkSession
-    prev = spark.conf.get("spark.sql.parquet.outputTimestampType", None)
-    spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-    try:
-        sub = os.path.join(DATA_DIR, uuid.uuid4().hex)
-        out = os.path.join(table, sub)
+    sub = os.path.join(DATA_DIR, uuid.uuid4().hex)
+    out = os.path.join(table, sub)
+    with timestamp_micros(df.sparkSession):
         df.write.mode("error").parquet(out)
-    finally:
-        if prev is not None:
-            spark.conf.set("spark.sql.parquet.outputTimestampType", prev)
-        else:
-            # never explicitly set before this call: unset rather than
-            # pinning MICROS as a permanent session side effect (ADVICE r5)
-            spark.conf.unset("spark.sql.parquet.outputTimestampType")
     return [
         os.path.join(sub, f)
         for f in sorted(os.listdir(out))
@@ -189,6 +181,49 @@ def _try_commit(table: str, version: int, entry: dict) -> bool:
     return True
 
 
+def _entry(
+    table: str, op: str, files: list[str], remove: list[str],
+    stats_cols: list[str] | None = None, meta: dict | None = None,
+) -> dict:
+    """A log entry; ``stats_cols`` adds the new files' footer stats."""
+    entry: dict = {"op": op, "add": files, "remove": remove}
+    st = _collect_file_stats(table, files, stats_cols) if stats_cols else None
+    if st:
+        entry["stats"] = st
+    if meta:
+        entry["meta"] = meta
+    return entry
+
+
+def _commit_rewrite(
+    table: str,
+    base: int | None,
+    op: str,
+    df: DataFrame | None,
+    remove: list[str],
+    stats_cols: list[str] | None = None,
+) -> list[str]:
+    """The copy-on-write commit: write ``df`` (None = no rows) as new data
+    files and commit one remove+add entry pinned at ``base`` + 1 (0 for an
+    empty table).  Pinned, not retried: a writer that lost the race
+    computed its output from a stale snapshot, so it removes its own
+    uncommitted files and raises TxConflictError; the caller re-runs
+    against the new snapshot.  Returns the added files."""
+    files = _write_data_files(df, table) if df is not None else []
+    v = 0 if base is None else base + 1
+    if not _try_commit(table, v, _entry(table, op, files, remove, stats_cols)):
+        for rel in files:
+            try:
+                os.remove(os.path.join(table, rel))
+            except OSError:
+                pass
+        raise TxConflictError(
+            f"{op} of {table} raced another commit at version {v}; "
+            "re-run against the new snapshot"
+        )
+    return files
+
+
 def txlog_append(
     df: DataFrame,
     table: str,
@@ -204,14 +239,7 @@ def txlog_append(
     ``read_table(..., where=...)`` then skips files a bounded predicate
     cannot match — including at old versions (time travel), which plain
     directory-partition pruning cannot serve."""
-    files = _write_data_files(df, table)
-    entry = {"op": "append", "add": files, "remove": []}
-    if stats_cols:
-        st = _collect_file_stats(table, files, stats_cols)
-        if st:
-            entry["stats"] = st
-    if meta:
-        entry["meta"] = meta
+    entry = _entry(table, "append", _write_data_files(df, table), [], stats_cols, meta)
     for _ in range(max_retries):
         cur = current_version(table)
         v = 0 if cur is None else cur + 1
@@ -240,14 +268,7 @@ def txlog_overwrite(
     removed: list[str] = snapshot_files(table, base) if base is not None else []
     files = _write_data_files(df, table)
     v = (base + 1) if base is not None else 0
-    entry: dict = {"op": "overwrite", "add": files, "remove": removed}
-    if stats_cols:
-        st = _collect_file_stats(table, files, stats_cols)
-        if st:
-            entry["stats"] = st
-    if meta:
-        entry["meta"] = meta
-    if not _try_commit(table, v, entry):
+    if not _try_commit(table, v, _entry(table, "overwrite", files, removed, stats_cols, meta)):
         raise TxConflictError(
             f"overwrite of {table} raced another commit at version {v}; "
             "re-read the table and recompute"
@@ -501,24 +522,7 @@ def txlog_compact(
         df = df.repartitionByRange(n_out, *sort_by).sortWithinPartitions(*sort_by)
     else:
         df = df.repartition(n_out)
-    files = _write_data_files(df, table)
-    entry: dict = {"op": "compact", "add": files, "remove": small}
-    if stats_cols:
-        st = _collect_file_stats(table, files, stats_cols)
-        if st:
-            entry["stats"] = st
-    if not _try_commit(table, base + 1, entry):
-        # lost the race: remove the freshly written (uncommitted) files so
-        # they don't linger as orphans, then let the caller re-run
-        for rel in files:
-            try:
-                os.remove(os.path.join(table, rel))
-            except OSError:
-                pass
-        raise TxConflictError(
-            f"compaction of {table} raced another commit at version "
-            f"{base + 1}; re-run against the new snapshot"
-        )
+    files = _commit_rewrite(table, base, "compact", df, small, stats_cols)
     return {
         "version": base + 1,
         "compacted_files": len(small),
@@ -584,24 +588,9 @@ def txlog_delete(
     keep = df.filter(~pred | pred.isNull())
     n_before = df.count()
     n_after = keep.count()
-    new_files: list[str] = []
-    if n_after > 0:
-        new_files = _write_data_files(keep, table)
-    entry: dict = {"op": "delete", "add": new_files, "remove": affected}
-    if stats_cols and new_files:
-        st = _collect_file_stats(table, new_files, stats_cols)
-        if st:
-            entry["stats"] = st
-    if not _try_commit(table, base + 1, entry):
-        for rel in new_files:
-            try:
-                os.remove(os.path.join(table, rel))
-            except OSError:
-                pass
-        raise TxConflictError(
-            f"delete from {table} raced another commit at version "
-            f"{base + 1}; re-run against the new snapshot"
-        )
+    new_files = _commit_rewrite(
+        table, base, "delete", keep if n_after > 0 else None, affected, stats_cols
+    )
     return {
         "version": base + 1,
         "rewritten_files": len(affected),
@@ -643,22 +632,7 @@ def txlog_update(
     updated = df.withColumns(
         {c: F.when(pred, F.expr(e)).otherwise(F.col(c)) for c, e in set_exprs.items()}
     )
-    new_files = _write_data_files(updated, table)
-    entry: dict = {"op": "update", "add": new_files, "remove": affected}
-    if stats_cols:
-        st = _collect_file_stats(table, new_files, stats_cols)
-        if st:
-            entry["stats"] = st
-    if not _try_commit(table, base + 1, entry):
-        for rel in new_files:
-            try:
-                os.remove(os.path.join(table, rel))
-            except OSError:
-                pass
-        raise TxConflictError(
-            f"update of {table} raced another commit at version "
-            f"{base + 1}; re-run against the new snapshot"
-        )
+    new_files = _commit_rewrite(table, base, "update", updated, affected, stats_cols)
     return {
         "version": base + 1,
         "rewritten_files": len(affected),
@@ -762,26 +736,41 @@ def txlog_merge(
     updates: DataFrame,
     table: str,
     key_cols: list[str],
+    where: list[tuple] | None = None,
     expected_base: int | None = None,
-) -> int:
-    """Keyed MERGE (upsert): rows in ``updates`` replace same-key rows in
-    the current snapshot; new keys append.  Implemented as read-snapshot →
-    anti-join → union → overwrite pinned to the snapshot's version, so a
-    concurrent commit between read and write raises ``TxConflictError``
-    instead of silently losing one writer's rows (the lost-update anomaly
-    optimistic concurrency exists to prevent)."""
-    from pyspark.sql import functions as F  # noqa: F401
+    stats_cols: list[str] | None = None,
+    observe=None,
+) -> dict:
+    """Keyed MERGE (upsert) as copy-on-write through io/sinks.merge_rows,
+    the parquet sink's merge: ``updates`` win shared keys, new keys
+    append, other rows survive.  ``where`` is read_table's (col, op,
+    value) list and must hold for every update: only files whose stats
+    can overlap it (stats-less files included) are rewritten; None = all.
+    One commit pinned to the version read, so a concurrent commit raises
+    TxConflictError instead of losing one writer's rows.  ``observe`` (a
+    job/metrics ``observe_*``) rides the merged rows.  Returns {'version',
+    'rewritten_files', 'new_files', 'metrics'} (metrics None unobserved)."""
+    from es_ch_sync_spark.io.sinks import merge_rows
 
-    spark = updates.sparkSession
     base = expected_base if expected_base is not None else current_version(table)
-    if base is None:
-        return txlog_append(updates, table)
-    current = read_table(spark, table, base)
-    kept = current.join(
-        updates.select(*key_cols).distinct(), key_cols, "leftanti"
+    affected = snapshot_files(table, base) if base is not None else []
+    if where and affected:
+        affected = prune_snapshot_files(table, affected, where, base)
+    existing = (
+        updates.sparkSession.read.parquet(*[os.path.join(table, f) for f in affected])
+        if affected
+        else None
     )
-    merged = kept.unionByName(updates)
-    return txlog_overwrite(merged, table, expected_base=base)
+    merged, obs = merge_rows(updates, existing, key_cols), None
+    if observe is not None:
+        merged, obs = observe(merged)
+    files = _commit_rewrite(table, base, "merge", merged, affected, stats_cols)
+    return {
+        "version": 0 if base is None else base + 1,
+        "rewritten_files": len(affected),
+        "new_files": len(files),
+        "metrics": obs.get if obs is not None else None,
+    }
 
 
 def read_table_merged_schema(

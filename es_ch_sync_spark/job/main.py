@@ -49,7 +49,10 @@ def build_parser() -> argparse.ArgumentParser:
         choices=["parquet", "txlog"],
         help="parquet = date-partitioned layout (default); txlog = the "
         "transaction-log table (atomic commit, snapshot isolation, time "
-        "travel; streaming mode commits each micro-batch exactly-once)",
+        "travel; streaming mode commits each micro-batch exactly-once).  A "
+        "batch run merges its window into either: re-running a window, or "
+        "syncing overlapping ones, leaves one copy of each key, the last "
+        "run's row winning",
     )
     p.add_argument("--quarantine", default=None, help="side-output path for bad records")
     p.add_argument("--start", default=os.environ.get("START_TIME"), help="RFC3339; default stop-30d")
@@ -85,6 +88,8 @@ def main(argv: list[str] | None = None) -> int:
         token_ids=SyncOptions.parse_token_ids(args.tokens),
         signals=[s.strip() for s in args.signals.split(",") if s.strip()],
     )
+    # resolved once: the source plan, the scan and the merge share one window
+    opts.start_time, opts.stop_time = window = opts.resolved_window()
     dim = None
     if args.dim:
         if args.dim.endswith((".jsonl", ".json", ".ndjson")):
@@ -153,7 +158,7 @@ def main(argv: list[str] | None = None) -> int:
             ]
         )
         parsed = read_es_hits(
-            spark, export_files(args.source, *opts.resolved_window()), source_schema
+            spark, export_files(args.source, *window), source_schema
         )
         status, es_quarantine = split_es_hits(parsed)
         status = status.drop("es_id", "es_index")
@@ -172,19 +177,10 @@ def main(argv: list[str] | None = None) -> int:
     if parsed is not None:
         parsed.persist()
     try:
+        from es_ch_sync_spark.io.sinks import write_signals
+
         signals, quarantine = plan_sync(status, catalog, dim, opts)
-        if args.out_format == "txlog":
-            from es_ch_sync_spark.io.sinks import dedup_signals
-            from es_ch_sync_spark.io.txlog import txlog_append
-            from es_ch_sync_spark.job.metrics import observe_signals
-
-            out, obs = observe_signals(dedup_signals(signals))
-            txlog_append(out, args.out)
-            written = obs.get
-        else:
-            from es_ch_sync_spark.io.sinks import write_signals
-
-            written = write_signals(signals, args.out)
+        written = write_signals(signals, args.out, window, args.out_format)
         if args.quarantine:
             quarantine.write.mode("append").parquet(args.quarantine)
             if es_quarantine is not None:

@@ -14,15 +14,18 @@ driver only plans — executors move data.  The entire job is:
     src        = read(events).filter(time range ∧ token-set ∧ exists-any) (S1-S7)
     signals    = unpivot(src, catalog)                   (T1-T3)
                  ⋈ broadcast(device_dim)                 (J1)
-    write      = anti-join existing + dedup + append     (K1-K2, the sink)
+    write      = merge(window's rows ∪ new) + dedup      (K1-K2, the sink)
 
 plan_sync builds everything up to the write and stays lazy: it does not
 dedup and takes no cache (a source that still carries the corrupt-record
 column is persisted by its caller; see split_quarantine).  Duplicates are
 the sink's to absorb, as in the reference, where the ClickHouse
 ReplacingMergeTree collapses them
-(clickhouse.go:113-130, sync.go:128-137): io/sinks.py:write_signals and
-the txlog branch of job/main.py each run dedup_signals exactly once.  The
+(clickhouse.go:113-130, sync.go:128-137): io/sinks.py:write_signals, the
+CLI's only write for either output format, runs one dedup_signals
+aggregate over the window's existing rows ∪ the new ones, the new row
+winning a shared key (the last write, as ReplacingMergeTree keeps the
+last insert), so a re-run or an overlapping window changes nothing.  The
 CLI (job/main.py) owns the one persisted parse of a text source that the
 signals and the quarantines share.
 
@@ -87,7 +90,6 @@ def plan_sync(
     catalog: SignalCatalog,
     device_dim: DataFrame | None,
     opts: SyncOptions,
-    existing_signals: DataFrame | None = None,
     subject_col: str = "subject",
     ts_col: str = "time",
     source_col: str = "source",
@@ -97,8 +99,8 @@ def plan_sync(
     """Build the full sync plan; returns (signals, quarantine).
 
     ``signals`` still holds the duplicates the source carries (re-emitted
-    documents, overlapping windows): the sink dedups (write_signals /
-    dedup_signals).  Lazily declared — nothing executes until the caller
+    documents, overlapping windows): the sink's merge dedups them
+    (write_signals).  Lazily declared — nothing executes until the caller
     writes/collects, so Catalyst sees the whole pipeline and can push the
     time/token filters into the source scan beneath the unpivot.
 
@@ -145,12 +147,4 @@ def plan_sync(
         )
     else:
         signals = unpivot_signals(wide, cat, token_col=token_col, ts_col=ts_col, source_col=source_col)
-
-    if existing_signals is not None:
-        # P4 analog at plan level: don't re-emit already-synced keys.
-        signals = signals.join(
-            existing_signals.select("token_id", "timestamp", "name"),
-            on=["token_id", "timestamp", "name"],
-            how="left_anti",
-        )
     return signals, quarantined

@@ -504,10 +504,11 @@ def q_dedup_write(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_conflict_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """K2 invariant check — the post-merge duplicate-key report backing
-    ReplacingMergeTree semantics (upsert must leave the signal key unique).
+    ReplacingMergeTree semantics (the sink's merge must leave the signal
+    key unique).
     Run here against a deliberately doubled table so the audit provably
     *finds* conflicts (each key reported with its surviving-row count);
-    tests assert it returns empty after upsert_signals."""
+    tests assert it returns empty after write_signals' merge."""
     from es_ch_sync_spark.io.maintenance import audit_key_conflicts
 
     sig = _events(spark, sf_dir).select(

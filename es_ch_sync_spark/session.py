@@ -115,7 +115,9 @@ def cluster_conf(executor_cores: int = 5, executors: int = 1000) -> dict[str, st
         # timestamps must carry footer stats (INT96 has none) or time-
         # range row-group skipping is silently inert — see get_spark
         "spark.sql.parquet.outputTimestampType": "TIMESTAMP_MICROS",
-        # dynamic partition overwrite is what upsert_signals relies on
+        # dynamic partition overwrite: an in-place partitioned rewrite
+        # replaces only the partitions it writes (the sink's merge stages
+        # and swaps instead, io/maintenance.py)
         "spark.sql.sources.partitionOverwriteMode": "dynamic",
         # keep the registry's ObjectHashAggregates hashing at real key
         # cardinalities; see get_spark for rationale

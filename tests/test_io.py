@@ -70,7 +70,8 @@ def test_signal_sink_layout_and_pruning(spark, tmp_path):
         ]
     )
     out = str(tmp_path / "signal")
-    write_signals(spark.createDataFrame(rows, schema), out, mode="overwrite")
+    window = (datetime(2024, 1, 1, tzinfo=timezone.utc), datetime(2024, 1, 3, tzinfo=timezone.utc))
+    write_signals(spark.createDataFrame(rows, schema), out, window)
 
     back = read_signals(spark, out)
     assert back.count() == 3  # dedup-on-write absorbed the duplicate
@@ -86,8 +87,8 @@ def test_signal_sink_layout_and_pruning(spark, tmp_path):
     assert "PartitionFilters: [isnotnull(event_date" in plan
     assert pruned.count() == 2
 
-    # idempotent re-append: anti-join against existing leaves the table unchanged
-    write_signals(spark.createDataFrame(rows, schema), out, existing=back)
+    # idempotent re-run: merging the same batch again leaves the table unchanged
+    write_signals(spark.createDataFrame(rows, schema), out, window)
     assert read_signals(spark, out).count() == 3
 
 
@@ -198,13 +199,15 @@ def test_corpus_shard_export(spark, sf_dir, tmp_path):
 def test_signal_sink_timestamps_carry_footer_stats(spark, tmp_path):
     """The sink's row-group-skipping claim is only real if timestamp
     columns carry parquet min/max statistics — INT96 (Spark's default
-    output type) has NONE.  Pin that written files use TIMESTAMP_MICROS
-    with populated stats (r5; same reason the txlog writer switched)."""
+    output type) has NONE.  Pin that every staged write (the sink's merge
+    and a partition compaction) uses TIMESTAMP_MICROS with populated stats
+    under a session that never set the output type, and leaves it unset."""
     import datetime
     import glob
 
     import pyarrow.parquet as pq
 
+    from es_ch_sync_spark.io.maintenance import compact_partition
     from es_ch_sync_spark.io.sinks import write_signals
 
     sig = spark.createDataFrame(
@@ -215,25 +218,44 @@ def test_signal_sink_timestamps_carry_footer_stats(spark, tmp_path):
         "token_id long, timestamp timestamp, name string, source string, "
         "value_number double, value_string string",
     )
-    path = str(tmp_path / "signals")
-    write_signals(sig, path, mode="overwrite")
-    files = glob.glob(f"{path}/event_date=*/**/*.parquet", recursive=True) or glob.glob(
-        f"{path}/event_date=*/*.parquet"
-    )
-    assert files
-    checked = 0
-    for f in files:
-        md = pq.ParquetFile(f).metadata
-        for rg in range(md.num_row_groups):
-            row = md.row_group(rg)
-            for ci in range(row.num_columns):
-                col = row.column(ci)
-                if col.path_in_schema == "timestamp":
-                    assert col.physical_type == "INT64", col.physical_type
-                    st = col.statistics
-                    assert st is not None and st.has_min_max
-                    checked += 1
-    assert checked > 0
+    window = (datetime.datetime(2024, 2, 1), datetime.datetime(2024, 2, 4))
+    conf = "spark.sql.parquet.outputTimestampType"
+    prev = spark.conf.get(conf, None)
+
+    def check(pattern):
+        files = glob.glob(pattern)
+        assert files
+        checked = 0
+        for f in files:
+            md = pq.ParquetFile(f).metadata
+            for rg in range(md.num_row_groups):
+                row = md.row_group(rg)
+                for ci in range(row.num_columns):
+                    col = row.column(ci)
+                    if col.path_in_schema == "timestamp":
+                        assert col.physical_type == "INT64", col.physical_type
+                        st = col.statistics
+                        assert st is not None and st.has_min_max
+                        checked += 1
+        assert checked > 0
+
+    spark.conf.unset(conf)
+    try:
+        assert spark.conf.get(conf) == "INT96"  # the vanilla default
+        path = str(tmp_path / "signals")
+        write_signals(sig, path, window)
+        check(f"{path}/event_date=*/*.parquet")
+        assert spark.conf.get(conf, None) is None  # unset again, not pinned
+        # a fragmented INT96 table: compaction rewrites it with stats
+        frag = str(tmp_path / "frag")
+        sig.withColumn("event_date", F.to_date("timestamp")).repartition(4).write.partitionBy(
+            "event_date"
+        ).parquet(frag)
+        compact_partition(spark, frag, "2024-02-01")
+        check(f"{frag}/event_date=2024-02-01/*.parquet")
+    finally:
+        if prev is not None:
+            spark.conf.set(conf, prev)
 
 
 def test_jsonl_roundtrip_quarantines_corrupt_lines(spark, tmp_path):
@@ -323,10 +345,56 @@ def test_plan_sync_over_json_takes_no_cache(spark, tmp_path):
         signals, quarantine = plan_sync(parsed, DEVICE_STATUS_CATALOG, dim, opts)
         assert quarantine.count() == 2
         assert signals.count() > 0
-        written = write_signals(signals, str(tmp_path / "signal"), mode="overwrite")
+        written = write_signals(signals, str(tmp_path / "signal"), opts.resolved_window())
         quarantine.write.parquet(str(tmp_path / "quarantine"))
     finally:
         parsed.unpersist()
     assert cache.isEmpty()
     assert written["n_signals"] == read_signals(spark, str(tmp_path / "signal")).count()
     assert spark.read.parquet(str(tmp_path / "quarantine")).count() == 2
+
+
+def test_first_write_plan_is_one_exchange_and_no_target_scan(spark, tmp_path, monkeypatch):
+    """On a target with nothing in the window (every fresh backfill), the
+    merge is the plain deduped write: one Exchange, one min(struct)
+    aggregate and no scan of the target.  Once the window holds rows, the
+    target's partition is scanned into the same single Exchange."""
+    from datetime import datetime, timezone
+
+    import es_ch_sync_spark.io.sinks as sinks
+
+    schema = (
+        "token_id long, timestamp timestamp, name string, source string, "
+        "value_number double, value_string string"
+    )
+    src = str(tmp_path / "src")
+    spark.createDataFrame(
+        [(i % 3, datetime(2024, 5, 1, i % 24, tzinfo=timezone.utc), "speed", "s", float(i), None)
+         for i in range(40)],
+        schema,
+    ).write.parquet(src)
+    plans = []
+    real = sinks._stage_and_swap
+
+    def spy(df, *args):
+        plans.append(df._jdf.queryExecution().executedPlan().toString())
+        return real(df, *args)
+
+    monkeypatch.setattr(sinks, "_stage_and_swap", spy)
+    out = str(tmp_path / "signal")
+    window = (datetime(2024, 5, 1, tzinfo=timezone.utc), datetime(2024, 5, 2, tzinfo=timezone.utc))
+    for _ in range(2):
+        write_signals(spark.read.parquet(src), out, window)
+    first, second = plans
+
+    def scans(plan):
+        return [ln for ln in plan.splitlines() if "FileScan" in ln]
+
+    for plan in plans:
+        assert plan.count("Exchange ") == 1, plan
+        assert plan.count("SortAggregate(key=") == 2, plan
+        assert plan.count("functions=[min(struct") == 1, plan
+    (only,) = scans(first)  # the source; the target's path is never listed
+    assert "/src]" in only and "event_date" not in only, first
+    assert len(scans(second)) == 2 and any("event_date" in ln for ln in scans(second)), second
+    assert read_signals(spark, out).count() == 24  # i and i + 24 share a key

@@ -1,4 +1,5 @@
-"""Tests for upsert (MERGE analog), compaction, and v2-payload dispatch."""
+"""Tests for the sink's merge (MERGE analog: write_signals re-writing a
+window), compaction, and v2-payload dispatch."""
 
 from __future__ import annotations
 
@@ -7,7 +8,7 @@ from datetime import datetime, timedelta, timezone
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from es_ch_sync_spark.io.maintenance import compact_partition, table_file_stats, upsert_signals
+from es_ch_sync_spark.io.maintenance import compact_partition, table_file_stats
 from es_ch_sync_spark.io.sinks import write_signals
 
 SIG_SCHEMA = T.StructType(
@@ -23,6 +24,10 @@ SIG_SCHEMA = T.StructType(
 
 D1 = datetime(2024, 1, 1, 10, tzinfo=timezone.utc)
 D2 = datetime(2024, 1, 2, 10, tzinfo=timezone.utc)
+DAY = timedelta(days=1)
+W1 = (datetime(2024, 1, 1, tzinfo=timezone.utc), datetime(2024, 1, 2, tzinfo=timezone.utc))
+W2 = (W1[1], W1[1] + DAY)
+W12 = (W1[0], W2[1])
 
 
 def _sig(tok, ts, name, num):
@@ -32,13 +37,13 @@ def _sig(tok, ts, name, num):
 def test_upsert_updates_and_inserts(spark, tmp_path):
     path = str(tmp_path / "sig")
     base = [_sig(1, D1, "speed", 10), _sig(1, D2, "speed", 20), _sig(2, D2, "speed", 30)]
-    write_signals(spark.createDataFrame(base, SIG_SCHEMA), path, mode="overwrite")
+    write_signals(spark.createDataFrame(base, SIG_SCHEMA), path, W12)
 
     updates = [
         _sig(1, D2, "speed", 99),  # matched → update (same key, new value)
         _sig(3, D2, "speed", 40),  # not matched → insert
     ]
-    upsert_signals(spark, path, spark.createDataFrame(updates, SIG_SCHEMA))
+    write_signals(spark.createDataFrame(updates, SIG_SCHEMA), path, W2)
 
     got = spark.read.parquet(path)
     assert got.count() == 4
@@ -62,12 +67,9 @@ def test_upsert_conflicting_updates_keep_the_sink_winner(spark, tmp_path):
     winners = []
     for parts in (1, 8):
         path = str(tmp_path / f"sig{parts}")
-        write_signals(
-            spark.createDataFrame([_sig(1, D1, "speed", 10)], SIG_SCHEMA),
-            path, mode="overwrite",
-        )
+        write_signals(spark.createDataFrame([_sig(1, D1, "speed", 10)], SIG_SCHEMA), path, W1)
         updates = spark.createDataFrame(rows, SIG_SCHEMA).repartition(parts)
-        upsert_signals(spark, path, updates)
+        write_signals(updates, path, W2)
         got = spark.read.parquet(path).drop("event_date")
         assert got.count() == 3
         (row,) = got.filter(
@@ -86,14 +88,14 @@ def test_upsert_conflicting_updates_keep_the_sink_winner(spark, tmp_path):
 def test_upsert_touches_only_update_partitions(spark, tmp_path):
     path = str(tmp_path / "sig")
     base = [_sig(1, D1, "speed", 10), _sig(1, D2, "speed", 20)]
-    write_signals(spark.createDataFrame(base, SIG_SCHEMA), path, mode="overwrite")
+    write_signals(spark.createDataFrame(base, SIG_SCHEMA), path, W12)
     import os
 
     d1_dir = f"{path}/event_date=2024-01-01"
     before = {f: os.path.getmtime(f"{d1_dir}/{f}") for f in os.listdir(d1_dir)}
-    upsert_signals(spark, path, spark.createDataFrame([_sig(9, D2, "speed", 1)], SIG_SCHEMA))
+    write_signals(spark.createDataFrame([_sig(9, D2, "speed", 1)], SIG_SCHEMA), path, W2)
     after = {f: os.path.getmtime(f"{d1_dir}/{f}") for f in os.listdir(d1_dir)}
-    assert before == after  # dynamic overwrite never rewrote the D1 partition
+    assert before == after  # the merge never read or rewrote the D1 partition
 
 
 def test_upsert_idempotent_three_merges_and_audit_clean(spark, tmp_path):
@@ -104,7 +106,7 @@ def test_upsert_idempotent_three_merges_and_audit_clean(spark, tmp_path):
 
     path = str(tmp_path / "sig")
     base = [_sig(1, D1, "speed", 10), _sig(1, D2, "speed", 20), _sig(2, D2, "speed", 30)]
-    write_signals(spark.createDataFrame(base, SIG_SCHEMA), path, mode="overwrite")
+    write_signals(spark.createDataFrame(base, SIG_SCHEMA), path, W12)
     updates = spark.createDataFrame(
         [_sig(1, D2, "speed", 99), _sig(3, D2, "speed", 40)], SIG_SCHEMA
     )
@@ -119,7 +121,7 @@ def test_upsert_idempotent_three_merges_and_audit_clean(spark, tmp_path):
 
     states = []
     for _ in range(3):
-        upsert_signals(spark, path, updates)
+        write_signals(updates, path, W2)
         states.append(snapshot())
         assert audit_key_conflicts(spark.read.parquet(path)).count() == 0
 
@@ -128,14 +130,14 @@ def test_upsert_idempotent_three_merges_and_audit_clean(spark, tmp_path):
 
 
 def test_stage_and_swap_leaves_no_staging_dirs(spark, tmp_path):
-    """After a successful upsert no staging/trash remnants survive next to
+    """After a successful merge no staging/trash remnants survive next to
     the table, and the table stays readable mid-workflow."""
     import os
 
     path = str(tmp_path / "sig")
     base = [_sig(1, D1, "speed", 10), _sig(1, D2, "speed", 20)]
-    write_signals(spark.createDataFrame(base, SIG_SCHEMA), path, mode="overwrite")
-    upsert_signals(spark, path, spark.createDataFrame([_sig(9, D2, "speed", 1)], SIG_SCHEMA))
+    write_signals(spark.createDataFrame(base, SIG_SCHEMA), path, W12)
+    write_signals(spark.createDataFrame([_sig(9, D2, "speed", 1)], SIG_SCHEMA), path, W2)
     siblings = os.listdir(str(tmp_path))
     assert not any("__staging__" in s for s in siblings)
     assert not any("__old__" in e for e in os.listdir(path))
@@ -242,17 +244,15 @@ def test_second_writer_detected(spark, tmp_path):
     from es_ch_sync_spark.io import maintenance as M
 
     path = str(tmp_path / "sig")
-    write_signals(
-        spark.createDataFrame([_sig(1, D1, "speed", 10)], SIG_SCHEMA), path, mode="overwrite"
-    )
+    write_signals(spark.createDataFrame([_sig(1, D1, "speed", 10)], SIG_SCHEMA), path, W1)
     M._acquire_lock(path, "writer-A")
     updates = spark.createDataFrame([_sig(1, D1, "speed", 99)], SIG_SCHEMA)
     with pytest.raises(M.ConcurrentWriteError, match="another writer holds"):
-        upsert_signals(spark, path, updates)
+        write_signals(updates, path, W1)
     # table untouched by the refused writer
     assert spark.read.parquet(path).collect()[0]["value_number"] == 10.0
     M._release_lock(path, "writer-A")
-    upsert_signals(spark, path, updates)
+    write_signals(updates, path, W1)
     assert spark.read.parquet(path).collect()[0]["value_number"] == 99.0
 
 
@@ -270,7 +270,7 @@ def test_crash_between_stage_and_swap_detected_and_recovered(spark, tmp_path, mo
 
     path = str(tmp_path / "sig")
     base = [_sig(1, D1, "speed", 10), _sig(1, D2, "speed", 20)]
-    write_signals(spark.createDataFrame(base, SIG_SCHEMA), path, mode="overwrite")
+    write_signals(spark.createDataFrame(base, SIG_SCHEMA), path, W12)
 
     updates = spark.createDataFrame([_sig(1, D2, "speed", 99)], SIG_SCHEMA)
     real_rename = _os.rename
@@ -280,7 +280,7 @@ def test_crash_between_stage_and_swap_detected_and_recovered(spark, tmp_path, mo
 
     monkeypatch.setattr(_os, "rename", crash_on_swap)
     with pytest.raises(OSError, match="simulated crash"):
-        upsert_signals(spark, path, updates)
+        write_signals(updates, path, W2)
     monkeypatch.setattr(_os, "rename", real_rename)
 
     # old data fully intact (the swap never deletes before replacing)
@@ -291,13 +291,13 @@ def test_crash_between_stage_and_swap_detected_and_recovered(spark, tmp_path, mo
 
     # next writer refuses the torn table
     with pytest.raises(M.ConcurrentWriteError, match="recover_interrupted_write"):
-        upsert_signals(spark, path, updates)
+        write_signals(updates, path, W2)
 
     summary = recover_interrupted_write(path)
     assert summary["manifest_reset"] is True
     assert not _os.path.exists(_os.path.join(path, M.LOCK_FILE))
 
-    upsert_signals(spark, path, updates)
+    write_signals(updates, path, W2)
     final = spark.read.parquet(path)
     assert {
         (r["token_id"], r["timestamp"].replace(tzinfo=timezone.utc)): r["value_number"]
@@ -312,15 +312,43 @@ def test_epoch_advances_per_commit(spark, tmp_path):
     from es_ch_sync_spark.io import maintenance as M
 
     path = str(tmp_path / "sig")
-    write_signals(
-        spark.createDataFrame([_sig(1, D1, "speed", 10)], SIG_SCHEMA), path, mode="overwrite"
-    )
-    for i in range(1, 3):
-        upsert_signals(
-            spark, path, spark.createDataFrame([_sig(1, D1, "speed", i)], SIG_SCHEMA)
-        )
+    # every write_signals is a stage-and-swap commit, the first one included
+    write_signals(spark.createDataFrame([_sig(1, D1, "speed", 10)], SIG_SCHEMA), path, W1)
+    assert M._read_manifest(path)["epoch"] == 1
+    for i in range(2, 4):
+        write_signals(spark.createDataFrame([_sig(1, D1, "speed", i)], SIG_SCHEMA), path, W1)
         m = M._read_manifest(path)
         assert m == {"epoch": i, "state": "committed", "writer": m["writer"]}
+
+
+def test_merge_refuses_partitions_outside_its_window(spark, tmp_path):
+    """A batch with a row outside its window would swap in a partition the
+    merge never read, dropping that partition's other rows: the write
+    raises before the first rename and the table stays byte-identical."""
+    import hashlib
+    import os
+
+    import pytest
+
+    path = str(tmp_path / "sig")
+    base = [_sig(1, D1, "speed", 10), _sig(2, D2, "speed", 20)]
+    write_signals(spark.createDataFrame(base, SIG_SCHEMA), path, W12)
+
+    def tree():
+        out = {}
+        for root, _dirs, files in os.walk(path):
+            for f in files:
+                full = os.path.join(root, f)
+                with open(full, "rb") as fh:
+                    out[os.path.relpath(full, path)] = hashlib.sha256(fh.read()).hexdigest()
+        return out
+
+    before = tree()
+    batch = spark.createDataFrame([_sig(1, D1, "speed", 11), _sig(3, D2, "speed", 5)], SIG_SCHEMA)
+    with pytest.raises(ValueError, match="outside the partitions"):
+        write_signals(batch, path, W2)
+    assert tree() == before
+    assert not any("__staging__" in e for e in os.listdir(str(tmp_path)))
 
 
 def test_seasonal_decompose_identity_and_edges(spark):

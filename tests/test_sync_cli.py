@@ -10,6 +10,7 @@ one stage, and no cache outlives ``main``."""
 from __future__ import annotations
 
 import contextlib
+import glob
 import io
 import os
 from datetime import datetime, timedelta, timezone
@@ -107,12 +108,14 @@ def export(spark, tmp_path_factory):
     }
 
 
-def _argv(export: dict, out: str, *extra: str) -> list[str]:
+def _argv(
+    export: dict, out: str, *extra: str, start: datetime = START, stop: datetime = STOP
+) -> list[str]:
     return [
         "--source", export["source"], "--source-format", "es_status",
         "--dim", export["dim"], "--out", out,
-        "--start", START.strftime("%Y-%m-%dT%H:%M:%SZ"),
-        "--stop", STOP.strftime("%Y-%m-%dT%H:%M:%SZ"),
+        "--start", start.strftime("%Y-%m-%dT%H:%M:%SZ"),
+        "--stop", stop.strftime("%Y-%m-%dT%H:%M:%SZ"),
         *extra,
     ]
 
@@ -185,23 +188,155 @@ def test_cli_sync_end_to_end(spark, export):
 
 
 def test_cli_txlog_branch_dedups_once(spark, export, monkeypatch):
+    """The txlog output is written by one merge commit whose plan holds
+    exactly one min(struct) dedup."""
     from es_ch_sync_spark.io import txlog as tx
 
     plans = []
-    real_append = tx.txlog_append
+    real_write = tx._write_data_files
 
-    def spy(df, table, *a, **kw):
+    def spy(df, table):
         plans.append(df._jdf.queryExecution().executedPlan().toString())
-        return real_append(df, table, *a, **kw)
+        return real_write(df, table)
 
-    monkeypatch.setattr(tx, "txlog_append", spy)
+    monkeypatch.setattr(tx, "_write_data_files", spy)
     out = str(export["root"] / "signal_tx")
     stdout = _run_main(spark, _argv(export, out, "--out-format", "txlog"), "sync-cli-tx")
 
     want = _expected_signals(export["docs"])
     assert stdout.strip() == f"synced: {want} signal rows at {out}"
     assert tx.read_table(spark, out).count() == want
+    assert [h["op"] for h in tx.table_history(out)] == ["merge"]
     (plan,) = plans
     assert plan.count("functions=[min(struct") == 1, plan
     assert plan.count("functions=[partial_min(struct") == 1, plan
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+# Re-runs: the reference resumes from the oldest synced timestamp and its
+# ReplacingMergeTree absorbs the overlap, so syncing a window twice, or
+# overlapping windows, must leave the table equal to one run's output.
+
+FORMATS = ["parquet", "txlog"]
+
+
+def _table(spark, out: str, fmt: str):
+    from es_ch_sync_spark.io import txlog as tx
+
+    if fmt == "txlog":
+        return tx.read_table(spark, out)
+    return spark.read.parquet(out).drop("event_date")
+
+
+def _data_files(out: str, fmt: str) -> list[str]:
+    from es_ch_sync_spark.io import txlog as tx
+
+    if fmt == "txlog":
+        return [os.path.join(out, f) for f in tx.snapshot_files(out)]
+    return sorted(glob.glob(os.path.join(out, "event_date=*", "*.parquet")))
+
+
+def _assert_equal_tables(spark, got: str, want: str, fmt: str) -> None:
+    import duckdb
+
+    g, w = _table(spark, got, fmt), _table(spark, want, fmt)
+    assert g.exceptAll(w).count() == 0
+    assert w.exceptAll(g).count() == 0
+    n, keys = duckdb.sql(
+        "SELECT count(*), count(DISTINCT (token_id, timestamp, name)) "
+        f"FROM read_parquet({_data_files(got, fmt)!r})"
+    ).fetchone()
+    assert n == keys == w.count() == _expected_signals_total(), (n, keys)
+
+
+def _expected_signals_total() -> int:
+    docs, _ = _docs()
+    return _expected_signals(docs)
+
+
+def _single_run(spark, export: dict, fmt: str) -> str:
+    out = str(export["root"] / f"single_{fmt}")
+    if not os.path.exists(out):
+        _run_main(spark, _argv(export, out, "--out-format", fmt), f"single-{fmt}")
+    return out
+
+
+@pytest.mark.parametrize("fmt", FORMATS)
+def test_cli_rerun_same_window_is_idempotent(spark, export, fmt):
+    out = str(export["root"] / f"twice_{fmt}")
+    for k in range(2):
+        _run_main(spark, _argv(export, out, "--out-format", fmt), f"twice-{fmt}-{k}")
+    _assert_equal_tables(spark, out, _single_run(spark, export, fmt), fmt)
+
+
+@pytest.mark.parametrize("fmt", FORMATS)
+def test_cli_overlapping_windows_equal_one_run(spark, export, fmt):
+    """[START, +30h) then [+26h, STOP): the second window touches only the
+    second day, and a parquet run reads only that day's partition: the one
+    stage that scans the export reads its lines plus that partition's rows,
+    not the whole table's."""
+    out = str(export["root"] / f"overlap_{fmt}")
+    first_stop, second_start = START + timedelta(hours=30), START + timedelta(hours=26)
+    _run_main(spark, _argv(export, out, "--out-format", fmt, stop=first_stop), f"ov1-{fmt}")
+    if fmt == "parquet":
+        day2 = pq.read_table(os.path.join(out, "event_date=2024-03-02")).num_rows
+        total = pq.read_table(out).num_rows
+        assert 0 < day2 < total
+    group = f"ov2-{fmt}"
+    _run_main(spark, _argv(export, out, "--out-format", fmt, start=second_start), group)
+    _assert_equal_tables(spark, out, _single_run(spark, export, fmt), fmt)
+    if fmt == "parquet":
+        lines = 0
+        for f in export_files(export["source"], second_start, STOP):
+            with open(f) as fh:
+                lines += sum(1 for _ in fh)
+        reads = _stage_input_records(spark, group)
+        assert max(reads) == lines + day2, (reads, lines, day2, total)
+
+
+@pytest.fixture(scope="module")
+def corrected(spark, export):
+    """A re-export of the same documents in which one value changed."""
+    from pyspark.sql import types as T
+
+    schema = T.StructType(
+        [
+            T.StructField("es_id", T.StringType()),
+            T.StructField("subject", T.StringType()),
+            T.StructField("source", T.StringType()),
+            T.StructField("time", T.TimestampType()),
+            T.StructField("data_speed", T.LongType()),
+            T.StructField("data_odometer", T.DoubleType()),
+            T.StructField("data_make", T.StringType()),
+        ]
+    )
+    (doc,) = [d for d in export["docs"] if d["es_id"] == "e50"]
+    assert doc["subject"] in RESOLVED and doc["data_speed"] is not None
+    docs = [dict(d, data_speed=777) if d is doc else d for d in export["docs"]]
+    src = str(export["root"] / "export_corrected")
+    write_es_status(
+        spark.createDataFrame(docs, schema).repartition(2),
+        src, mode="overwrite", statscolumns="time",
+    )
+    name = {d.source_field: d.name for d in DEVICE_STATUS_CATALOG.defs}["data_speed"]
+    return {**export, "source": src, "key": (RESOLVED[doc["subject"]], doc["time"], name)}
+
+
+@pytest.mark.parametrize("fmt", FORMATS)
+def test_cli_reexport_keeps_the_corrected_value(spark, export, corrected, fmt):
+    from pyspark.sql import functions as F
+
+    out = str(export["root"] / f"corrected_{fmt}")
+    _run_main(spark, _argv(export, out, "--out-format", fmt), f"corr1-{fmt}")
+    _run_main(spark, _argv(corrected, out, "--out-format", fmt), f"corr2-{fmt}")
+    got, want = _table(spark, out, fmt), _table(spark, _single_run(spark, export, fmt), fmt)
+    token, ts, name = corrected["key"]
+    at_key = (F.col("token_id") == token) & (F.col("timestamp") == ts) & (F.col("name") == name)
+    (row,) = got.filter(at_key).collect()
+    assert row["value_number"] == 777.0
+    (old,) = want.filter(at_key).collect()
+    assert old["value_number"] != 777.0
+    # every other row is the single run's
+    assert got.filter(~at_key).exceptAll(want.filter(~at_key)).count() == 0
+    assert want.filter(~at_key).exceptAll(got.filter(~at_key)).count() == 0
+    assert got.count() == want.count()

@@ -92,16 +92,23 @@ def test_quarantine_never_fails_job(spark, status_df, dim_df):
     assert signals.join(bad_keys, on=["timestamp", "token_id"], how="inner").count() == 0
 
 
-def test_idempotent_rerun(spark, status_df, dim_df):
-    """Re-running the sync over an overlapping window adds nothing once
-    existing keys are anti-joined (K2/P4 — ReplacingMergeTree semantics)."""
+def test_idempotent_rerun(spark, status_df, dim_df, tmp_path):
+    """Re-running the sync over the same window adds nothing: the sink's
+    merge absorbs every already-written key (K2/P4 — ReplacingMergeTree
+    semantics)."""
+    from es_ch_sync_spark.io.sinks import write_signals
+
     start, stop = _window_midpoint()
     opts = SyncOptions(start_time=start, stop_time=stop)
     first, _ = plan_sync(status_df, DEVICE_STATUS_CATALOG, dim_df, opts)
     first = first.cache()
     n1 = first.count()
-    again, _ = plan_sync(status_df, DEVICE_STATUS_CATALOG, dim_df, opts, existing_signals=first)
-    assert again.count() == 0
+    out = str(tmp_path / "signal")
+    write_signals(first, out, (start, stop))
+    assert spark.read.parquet(out).count() == n1
+    again, _ = plan_sync(status_df, DEVICE_STATUS_CATALOG, dim_df, opts)
+    write_signals(again, out, (start, stop))
+    assert spark.read.parquet(out).count() == n1
     # and dedup of the doubled stream returns the original count
     doubled = first.unionByName(first)
     assert dedup_signals(doubled).count() == n1
