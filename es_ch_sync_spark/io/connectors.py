@@ -5,9 +5,11 @@ at the reference's actual endpoints (ES status index in, ClickHouse signal
 table out — /root/reference/internal/service/{elastic,clickhouse}) is a
 reader/writer swap, not an operator change.  The required jars
 (elasticsearch-spark-30_2.13, clickhouse-jdbc) are not in this container,
-so each factory raises a clear ConnectorUnavailable with the exact
+so the ES reader raises a clear ConnectorUnavailable with the exact
 spark-submit incantation; the option-building logic (the part that encodes
-the reference's connection surface) is real and unit-testable.
+the reference's connection surface) is real and unit-testable.  The signal
+table's writer is io/sinks.write_signals; a ClickHouse target takes
+``ch_jdbc_options`` through ``DataFrame.write.format("jdbc")``.
 """
 
 from __future__ import annotations
@@ -83,15 +85,3 @@ def ch_jdbc_options(
     if password:
         opts["password"] = password
     return opts
-
-
-def write_signals_clickhouse(signals: DataFrame, url: str, **kw) -> None:
-    try:
-        signals.write.format("jdbc").options(**ch_jdbc_options(url, **kw)).mode(
-            "append"
-        ).save()
-    except Exception as e:  # noqa: BLE001
-        raise ConnectorUnavailable(
-            "clickhouse-jdbc driver not on the classpath; launch with "
-            "--packages com.clickhouse:clickhouse-jdbc:<version>"
-        ) from e

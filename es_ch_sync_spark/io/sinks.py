@@ -23,10 +23,12 @@ ClickHouse ORDER BY (token_id, timestamp, name) primary index [dep].
 from __future__ import annotations
 
 import os
+import shutil
+import uuid
 from datetime import datetime, timedelta
 from zoneinfo import ZoneInfo
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from es_ch_sync_spark.io.maintenance import DEDUP_KEY, _stage_and_swap
@@ -103,6 +105,7 @@ def write_signals(
     With nothing in the window there is no scan of the target: one
     Exchange on ``(event_date, token_id, timestamp, name)``, so a day
     spreads over every task, and the dedup's Sort is the file order."""
+    refuse_file_sink_log(path)
     spark, (start, stop) = signals.sparkSession, window
     if out_format == "txlog":
         from es_ch_sync_spark.io.txlog import txlog_merge
@@ -127,6 +130,34 @@ def write_signals(
         out.sortWithinPartitions("event_date", *DEDUP_KEY), path, "event_date", set(touched)
     )
     return obs.get
+
+
+def refuse_file_sink_log(path: str) -> None:
+    """Raise before touching ``path`` if it holds a streaming file-sink log:
+    readers list files through it, so a swapped partition breaks the
+    table, and taking it over would expose uncommitted batches' files."""
+    log = os.path.join(path, "_spark_metadata")
+    if os.path.isdir(log):
+        raise ValueError(f"{path} holds a streaming file-sink log at {log}; copy its rows "
+                         "(spark.read.parquet honours the log) into a new signal table")
+
+
+def replace_rows(rows: DataFrame, path: str, scope: Column) -> None:
+    """Replace the rows under ``path`` where ``scope`` holds (null = false)
+    by ``rows``' rows where it holds, duplicates kept: a side output's
+    re-run rule.  Nothing at ``path``: one plain write; else a staged
+    write swapped in, as a plan may not overwrite a path it reads."""
+    in_scope = F.coalesce(scope, F.lit(False))
+    rows = rows.filter(in_scope)
+    if not os.path.isdir(path):
+        rows.write.parquet(path)
+        return
+    kept = rows.sparkSession.read.schema(rows.schema).parquet(path).filter(~in_scope)
+    staging = f"{path.rstrip('/')}__staging__{uuid.uuid4().hex[:8]}"
+    kept.unionByName(rows).write.parquet(staging)
+    os.rename(path, f"{staging}__old")
+    os.rename(staging, path)
+    shutil.rmtree(f"{staging}__old")
 
 
 def read_signals(spark: SparkSession, path: str) -> DataFrame:

@@ -220,11 +220,13 @@ def split_es_hits(raw: DataFrame) -> tuple[DataFrame, DataFrame]:
     """(docs, quarantine) of a read_es_hits frame: docs has ``_source``
     unwrapped to top-level columns plus ``es_id``/``es_index``; lines that
     did not parse go to quarantine with the raw text (same T3 contract as
-    read_status_json)."""
+    read_status_json).  Columns the caller added to the envelope (the
+    CLI's source file) ride along on both sides."""
     bad = F.col(CORRUPT_COL).isNotNull() | F.col("_source").isNull()
-    quarantine = raw.filter(bad).select(F.col(CORRUPT_COL).alias("raw"))
+    extra = [c for c in raw.columns if c not in ("_id", "_index", "_source", CORRUPT_COL)]
+    quarantine = raw.filter(bad).select(F.col(CORRUPT_COL).alias("raw"), *extra)
     docs = raw.filter(~bad).select(
-        F.col("_id").alias("es_id"), F.col("_index").alias("es_index"), "_source.*"
+        F.col("_id").alias("es_id"), F.col("_index").alias("es_index"), "_source.*", *extra
     )
     return docs, quarantine
 

@@ -707,31 +707,6 @@ def last_committed_meta(table: str, key: str) -> int | None:
     return best
 
 
-def txlog_stream_writer(table: str):
-    """foreachBatch function for an exactly-once txlog sink.
-
-    Structured Streaming guarantees batch ids are monotone and that a
-    failed batch is redelivered WITH THE SAME id; committing the id in the
-    log entry makes the sink idempotent — the replayed batch is detected
-    and skipped, so rows land exactly once even across crash/restart.
-    (The same mechanism Delta's streaming sink uses: txn appId/version.)
-
-    Usage::
-
-        q = (df.writeStream.foreachBatch(txlog_stream_writer(path))
-               .option("checkpointLocation", ckpt)
-               .trigger(availableNow=True).start())
-    """
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        seen = last_committed_meta(table, "batch_id")
-        if seen is not None and batch_id <= seen:
-            return  # redelivered batch — already committed, exactly-once
-        txlog_append(batch_df, table, meta={"batch_id": batch_id})
-
-    return write_batch
-
-
 def txlog_merge(
     updates: DataFrame,
     table: str,

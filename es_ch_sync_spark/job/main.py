@@ -21,6 +21,8 @@ import os
 import sys
 from datetime import datetime, timezone
 
+SOURCE_FILE = "source_file"
+
 
 def _parse_time(s: str | None) -> datetime | None:
     if not s:
@@ -49,19 +51,18 @@ def build_parser() -> argparse.ArgumentParser:
         choices=["parquet", "txlog"],
         help="parquet = date-partitioned layout (default); txlog = the "
         "transaction-log table (atomic commit, snapshot isolation, time "
-        "travel; streaming mode commits each micro-batch exactly-once).  A "
-        "batch run merges its window into either: re-running a window, or "
-        "syncing overlapping ones, leaves one copy of each key, the last "
-        "run's row winning",
+        "travel).  A batch run merges its window into either, a --streaming "
+        "run each micro-batch's time range: re-runs, overlaps and replays "
+        "leave one copy of each key, the last write winning",
     )
-    p.add_argument("--quarantine", default=None, help="side-output path for bad records")
+    p.add_argument("--quarantine", default=None, help="side-output path for bad records (a re-run replaces its rows)")
     p.add_argument("--start", default=os.environ.get("START_TIME"), help="RFC3339; default stop-30d")
     p.add_argument("--stop", default=os.environ.get("STOP_TIME"), help="RFC3339; default now")
     p.add_argument("--tokens", default=os.environ.get("TOKEN_IDS", ""), help="csv token ids")
     p.add_argument("--signals", default=os.environ.get("SIGNALS", ""), help="csv signal names")
     p.add_argument("--batch-size", default=os.environ.get("BATCH_SIZE"), help="ignored (Spark split sizing)")
     p.add_argument("--parallel", default=os.environ.get("PARALLEL"), help="ignored (Spark task scheduling)")
-    p.add_argument("--streaming", action="store_true", help="run as AvailableNow stream (cron mode)")
+    p.add_argument("--streaming", action="store_true", help="run as AvailableNow stream (cron mode) of merges")
     p.add_argument("--checkpoint", default=None, help="stream checkpoint dir (required with --streaming)")
     p.add_argument("--catalog", default=None, help="signal-definitions YAML (default: built-in 18-signal catalog)")
     return p
@@ -99,7 +100,7 @@ def main(argv: list[str] | None = None) -> int:
 
             dim, dim_quarantine = read_device_dim(spark, args.dim)
             if args.quarantine:
-                dim_quarantine.write.mode("append").parquet(args.quarantine + "_dim")
+                dim_quarantine.write.mode("overwrite").parquet(args.quarantine + "_dim")
         else:
             dim = spark.read.parquet(args.dim)
 
@@ -110,26 +111,20 @@ def main(argv: list[str] | None = None) -> int:
         from es_ch_sync_spark.streaming.sync_stream import (
             build_signal_stream,
             read_status_stream,
-            start_signal_sink,
+            start_signal_stream,
         )
 
         stream = read_status_stream(spark, args.source, DEVICE_STATUS_SCHEMA)
         signals = build_signal_stream(
             stream, catalog.filtered(opts.signals or None), dim
         )
-        if args.out_format == "txlog":
-            from es_ch_sync_spark.io.txlog import txlog_stream_writer
-
-            q = (
-                signals.writeStream.foreachBatch(txlog_stream_writer(args.out))
-                .option("checkpointLocation", args.checkpoint)
-                .trigger(availableNow=True)
-                .start()
-            )
-        else:
-            q = start_signal_sink(signals, args.out, args.checkpoint, available_now=True)
-        q.awaitTermination()
+        start_signal_stream(signals, args.out, args.checkpoint, args.out_format).awaitTermination()
         return 0
+
+    from pyspark.sql import functions as F
+
+    def with_source_file(df):  # keys a quarantine row's re-run replacement
+        return df.withColumn(SOURCE_FILE, F.input_file_name()) if args.quarantine else df
 
     # A text source is parsed once: `parsed` is persisted for the run when
     # more than one output reads it (the signals and the quarantines), and
@@ -157,8 +152,8 @@ def main(argv: list[str] | None = None) -> int:
                 if f.name not in ("es_id", "es_index")
             ]
         )
-        parsed = read_es_hits(
-            spark, export_files(args.source, *window), source_schema
+        parsed = with_source_file(
+            read_es_hits(spark, export_files(args.source, *window), source_schema)
         )
         status, es_quarantine = split_es_hits(parsed)
         status = status.drop("es_id", "es_index")
@@ -170,10 +165,12 @@ def main(argv: list[str] | None = None) -> int:
     ):
         from es_ch_sync_spark.io.sources import read_status_json
 
-        status = parsed = read_status_json(spark, args.source, DEVICE_STATUS_SCHEMA)
+        status = parsed = with_source_file(read_status_json(spark, args.source, DEVICE_STATUS_SCHEMA))
     else:
-        status = spark.read.parquet(args.source)
+        status = with_source_file(spark.read.parquet(args.source))
 
+    if args.quarantine:  # listed before the persist hides the source's files
+        read = F.col(SOURCE_FILE).isin(status.inputFiles())
     if parsed is not None:
         parsed.persist()
     try:
@@ -182,9 +179,14 @@ def main(argv: list[str] | None = None) -> int:
         signals, quarantine = plan_sync(status, catalog, dim, opts)
         written = write_signals(signals, args.out, window, args.out_format)
         if args.quarantine:
-            quarantine.write.mode("append").parquet(args.quarantine)
+            # a re-run replaces its window's rows (by file where time is null)
+            from es_ch_sync_spark.io.sinks import replace_rows
+
+            t, (start, stop) = F.col("time"), window
+            in_window = F.when(t.isNull(), read).otherwise((t >= start) & (t < stop))
+            replace_rows(quarantine, args.quarantine, in_window)
             if es_quarantine is not None:
-                es_quarantine.write.mode("append").parquet(args.quarantine + "_es")
+                replace_rows(es_quarantine, args.quarantine + "_es", read)
     finally:
         if parsed is not None:
             parsed.unpersist()

@@ -44,7 +44,7 @@ from pyspark.sql import functions as F
 
 from es_ch_sync_spark.catalog import SignalCatalog
 from es_ch_sync_spark.operators.dimjoin import resolve_tokens
-from es_ch_sync_spark.operators.transform import split_quarantine, unpivot_signals
+from es_ch_sync_spark.operators.transform import castable_subjects, split_quarantine, unpivot_signals
 
 
 @dataclass
@@ -129,7 +129,9 @@ def plan_sync(
         wide = resolved
         token_col = "token_id"
     else:
-        wide = scan
+        castable = castable_subjects(subject_col)
+        quarantined = quarantined.unionByName(scan.filter(~castable), allowMissingColumns=True)
+        wide = scan.filter(castable)
         token_col = subject_col
 
     if opts.token_ids:  # C1: config-driven token predicate

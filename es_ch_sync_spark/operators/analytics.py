@@ -210,25 +210,6 @@ def topk_per_group(
     return df.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") <= k)
 
 
-def last_value_snapshot(
-    signals: DataFrame,
-    at_ts: str | None = None,
-    token_col: str = "token_id",
-    name_col: str = "name",
-    ts_col: str = "timestamp",
-) -> DataFrame:
-    """As-of snapshot of the tall signal table: per (token, signal-name) the
-    most recent row at or before ``at_ts`` (the 'current vehicle state'
-    query the reference's destination table exists to serve)."""
-    base = signals if at_ts is None else signals.filter(F.col(ts_col) <= F.lit(at_ts))
-    w = W.partitionBy(token_col, name_col).orderBy(F.col(ts_col).desc())
-    return (
-        base.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .drop("rn")
-    )
-
-
 def gapfill_locf(
     df: DataFrame,
     key: str,

@@ -33,8 +33,12 @@ def resolve_tokens(
     Returns ``(resolved, unresolved)`` — unresolved mirrors the reference's
     NotFoundError quarantine path (service.go:22-36): logged and skipped,
     never fatal (sync.go:97-105).
+
+    A subject listed more than once resolves to its smallest non-null
+    token_id (null only if every entry is null), whatever the dim's
+    partitioning; dropDuplicates kept whichever row came first.
     """
-    dim = device_dim.select(subject_col, token_col).dropDuplicates([subject_col])
+    dim = device_dim.groupBy(subject_col).agg(F.min(token_col).alias(token_col))
     if broadcast_dim:
         dim = F.broadcast(dim)
     joined = facts.join(dim, on=subject_col, how="left")

@@ -276,10 +276,6 @@ _FIXED_COEFS = ((), (1,), (2, -1), (3, -3, 1), (4, -6, 4, -1))
 _BLOCKSIZE = 1024
 
 
-def _rice_cost(u, p: int) -> int:
-    return int((u >> p).sum()) + len(u) * (p + 1)
-
-
 def _best_rice_param(u) -> int:
     """argmin_p of the exact rice bit cost over p ∈ [0, 14], as one
     vectorized 15×n shift-sum (r16 optimization) — ties break to the

@@ -88,15 +88,6 @@ FEATURE_SCHEMA = T.StructType(
 )
 
 
-def try_import_pillow():
-    try:
-        import PIL.Image  # noqa: F401
-
-        return PIL.Image
-    except ImportError:
-        return None
-
-
 # ---------------------------------------------------------------------------
 # Lib-free codecs for UNCOMPRESSED formats (pure numpy, no Pillow/pyav).
 # BMP: Windows BITMAPINFOHEADER, 24-bpp, bottom-up, BGR, 4-byte row padding.

@@ -21,7 +21,7 @@ the Parquet scan to them automatically even if the caller doesn't pre-select.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from es_ch_sync_spark.catalog import SignalCatalog
@@ -75,6 +75,14 @@ def unpivot_signals(
         F.col("sig.value_number").alias("value_number"),
         F.col("sig.value_string").alias("value_string"),
     ).filter(F.col("value_number").isNotNull() | F.col("value_string").isNotNull())
+
+
+def castable_subjects(subject_col: str = "subject") -> Column:
+    """True where the subject is null or casts to a long token id: without
+    a dim the subject is the token_id, and under ANSI one ``0xdev001117``
+    fails the whole cast.  plan_sync quarantines the rest; the stream drops it."""
+    subject = F.col(subject_col)
+    return subject.isNull() | subject.try_cast("long").isNotNull()
 
 
 def split_quarantine(

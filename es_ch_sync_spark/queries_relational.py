@@ -1238,20 +1238,21 @@ def _drain_to_memory(signals: DataFrame, output_mode: str) -> DataFrame:
 @register("streaming_unpivot", _STREAM_ORACLE)
 def q_streaming_unpivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Structured Streaming driven through the checked surface: stream the
-    events parquet (AvailableNow), unpivot + watermark-dedup exactly like
-    the ingestion pipeline, drain to a memory sink, return the result —
-    which must equal the batch distinct unpivot (the oracle).  Exactly-once
-    + dedup semantics of the stream are thereby oracle-verified."""
+    events parquet (AvailableNow) through the ingestion pipeline's
+    build_signal_stream, drain to a memory sink, and dedup the result with
+    the signal table's dedup_signals — which must equal the batch distinct
+    unpivot (the oracle).  The stream's exactly-once delivery and the
+    merge's dedup are thereby oracle-verified."""
     from es_ch_sync_spark.catalog import SignalCatalog, SignalDef
+    from es_ch_sync_spark.io.sinks import dedup_signals
     from es_ch_sync_spark.streaming.sync_stream import build_signal_stream
 
     cat = SignalCatalog([SignalDef("value", "value", "number")])
     stream = _read_events_stream(spark, sf_dir).withColumn("src", F.lit("events"))
     signals = build_signal_stream(
         stream, cat, device_dim=None, subject_col="user_id", ts_col="ts", source_col="src",
-        watermark="365 days",
     )
-    return _drain_to_memory(signals, "append")
+    return dedup_signals(_drain_to_memory(signals, "append"))
 
 
 @register(

@@ -5,7 +5,8 @@ aggregate kept current (ClickHouse materialized views over the signal
 table).  This composes the engine's existing pieces into exactly that:
 each micro-batch (1) lands in the txlog fact table as an atomic commit
 carrying the batch id — a replayed batch after a crash commits NOTHING
-twice (same idempotence watermark as txlog_stream_writer), and (2)
+twice (the commit's ``batch_id`` meta, read back with
+last_committed_meta, is its idempotence watermark), and (2)
 delta-refreshes the rollup view, which reads ONLY the files that commit
 added (io/ivm.py) and records the fact version it is current to — so a
 replayed or racing refresh is a provable no-op, never a double count.

@@ -4,30 +4,33 @@ The reference runs as a one-shot k8s Job, optionally cron-scheduled weekly
 (/root/reference/charts/es-ch-sync/templates/job.yaml:2,
 charts/es-ch-sync/values.yaml:23-25), re-scanning from per-token resume
 points.  Streaming subsumes that pattern: the SAME transform functions
-(unpivot_signals, resolve_tokens, dedup) run over ``readStream``, with
+run over ``readStream``, and each micro-batch lands through the batch
+CLI's one merge, io/sinks.write_signals, under ``foreachBatch``:
 
-- checkpointing  = the resume logic (sync.go:128-137) for free, exactly-once
-- watermark      = bounded state for late data (the reference has no story
-                   for late events at all — it re-syncs whole ranges)
-- dropDuplicates = ReplacingMergeTree semantics, continuously
-  *withinWatermark* so dedup state is bounded (the batch job's dedup key,
-  K2, carried into the stream)
+- checkpointing        = the resume logic (sync.go:128-137), exactly-once
+- write_signals' merge = ReplacingMergeTree semantics over the batch's own
+  time range, the last write winning: a replay, a fresh checkpoint or a
+  batch run over the same rows leaves the table equal to one run's output
 - Trigger.AvailableNow = the cron/Job mode: drain everything new, exit.
 
-At scale this is the preferred ingestion mode: no re-scan of already-synced
-ranges, state bounded by the watermark horizon, output partitioned the same
-way as the batch sink.
+The table is the only dedup state.  The cost is write amplification: a
+micro-batch rewrites each partition (or txlog file) its range touches.
 """
 
 from __future__ import annotations
+
+from datetime import datetime, timedelta, timezone
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from es_ch_sync_spark.catalog import SignalCatalog
+from es_ch_sync_spark.io.sinks import refuse_file_sink_log, write_signals
 from es_ch_sync_spark.operators.dimjoin import resolve_tokens
-from es_ch_sync_spark.operators.transform import unpivot_signals
+from es_ch_sync_spark.operators.transform import castable_subjects, split_quarantine, unpivot_signals
+
+_EPOCH = datetime(1970, 1, 1, tzinfo=timezone.utc)
 
 
 def read_status_stream(
@@ -50,52 +53,61 @@ def build_signal_stream(
     subject_col: str = "subject",
     ts_col: str = "time",
     source_col: str = "source",
-    watermark: str = "1 hour",
 ) -> DataFrame:
-    """The batch transform, verbatim, over a stream + watermarked dedup.
-
-    dropDuplicatesWithinWatermark keys (token_id, timestamp, name) — the
-    ReplacingMergeTree key — so replays/overlaps inside the watermark
-    horizon collapse exactly like the reference's merge-on-write, with
-    state that expires instead of growing forever."""
-    wide = status_stream  # watermark attaches once, post-unpivot (Spark
-    # disallows redefining it along the plan)
+    """The batch transform over a stream.  The rows the batch CLI
+    quarantines (malformed, unresolved, or without a dim a subject that is
+    not an integer) and rows without a time are dropped; duplicates stay
+    for write_signals' merge."""
+    wide, _ = split_quarantine(status_stream)
+    wide = wide.filter(F.col(ts_col).isNotNull())
     if device_dim is not None:
         # stream-static broadcast join: the dimension is re-read per
         # micro-batch (picks up new devices), never shuffles the stream
         wide, _ = resolve_tokens(wide, device_dim, subject_col=subject_col)
         token_col = "token_id"
     else:
+        wide = wide.filter(castable_subjects(subject_col))
         token_col = subject_col
     signals = unpivot_signals(wide, catalog, token_col=token_col, ts_col=ts_col, source_col=source_col)
-    # Event-time watermarks require TIMESTAMP (LTZ); sources may deliver
-    # TIMESTAMP_NTZ (the testdata parquet does).  The session TZ is pinned
-    # UTC so the cast is wall-clock-preserving, and it is a no-op when the
-    # column is already LTZ — type drift at the source can't break the
-    # watermark path.
-    signals = signals.withColumn("timestamp", F.col("timestamp").cast("timestamp"))
-    return signals.withWatermark("timestamp", watermark).dropDuplicatesWithinWatermark(
-        ["token_id", "timestamp", "name"]
-    )
+    # Sources may deliver TIMESTAMP_NTZ (the testdata parquet does); the
+    # signal table's timestamp is TIMESTAMP.  The session TZ is pinned UTC
+    # so the cast is wall-clock-preserving, and a no-op on LTZ input.
+    return signals.withColumn("timestamp", F.col("timestamp").cast("timestamp"))
 
 
-def start_signal_sink(
+def merge_batch(out_path: str, out_format: str = "parquet"):
+    """foreachBatch function: write_signals over the micro-batch's own
+    window ``[min(timestamp), max(timestamp) + 1 µs)``.  The batch is
+    persisted for the window's aggregate and the merge, and released
+    after; an empty batch writes nothing."""
+
+    def merge(batch: DataFrame, batch_id: int) -> None:
+        batch.persist()
+        try:
+            # as epoch micros: a collected timestamp is naive local time
+            lo, hi = batch.select(F.min(F.unix_micros("timestamp")), F.max(F.unix_micros("timestamp"))).first()
+            if lo is not None:
+                window = tuple(_EPOCH + timedelta(microseconds=m) for m in (lo, hi + 1))
+                write_signals(batch, out_path, window, out_format)
+        finally:
+            batch.unpersist()
+
+    return merge
+
+
+def start_signal_stream(
     signals: DataFrame,
     out_path: str,
     checkpoint_path: str,
-    available_now: bool = True,
+    out_format: str = "parquet",
 ):
-    """Write the signal stream as date-partitioned parquet (same layout as
-    the batch sink).  AvailableNow = the reference's cron mode: process all
-    new input, then stop; checkpoint carries the resume point."""
-    writer = (
-        signals.withColumn("event_date", F.to_date("timestamp"))
-        .writeStream.format("parquet")
-        .option("path", out_path)
+    """Drain the signal stream into the signal table (AvailableNow, the
+    reference's cron mode), one merge_batch per micro-batch; the
+    checkpoint carries the resume point.  Returns the started query."""
+    refuse_file_sink_log(out_path)
+    return (
+        signals.writeStream.foreachBatch(merge_batch(out_path, out_format))
         .option("checkpointLocation", checkpoint_path)
-        .partitionBy("event_date")
-        .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

@@ -340,3 +340,71 @@ def test_cli_reexport_keeps_the_corrected_value(spark, export, corrected, fmt):
     assert got.filter(~at_key).exceptAll(want.filter(~at_key)).count() == 0
     assert want.filter(~at_key).exceptAll(got.filter(~at_key)).count() == 0
     assert got.count() == want.count()
+
+
+# Side outputs re-run like the signal table: each quarantine holds one
+# run's rows, whatever the runs and their windows.
+
+QUARANTINES = ("", "_es", "_dim")
+
+
+def _jsonl_dim(export: dict) -> str:
+    path = export["root"] / "subjects.jsonl"
+    if not path.exists():
+        lines = [f'{{"id": "{s}", "token_id": {t}}}' for s, t in sorted(RESOLVED.items())]
+        path.write_text("\n".join([*lines, '{"id": "s9", "token_id": ']) + "\n")
+    return str(path)
+
+
+def _quarantine_run(spark, export: dict, name: str, windows) -> str:
+    quar = str(export["root"] / f"q_{name}")
+    out = str(export["root"] / f"q_{name}_signal")
+    for k, (start, stop) in enumerate(windows):
+        argv = _argv(export, out, "--quarantine", quar, start=start, stop=stop)
+        argv[argv.index("--dim") + 1] = _jsonl_dim(export)
+        _run_main(spark, argv, f"q-{name}-{k}")
+    return quar
+
+
+def test_quarantines_hold_one_runs_rows(spark, export):
+    once = _quarantine_run(spark, export, "once", [(START, STOP)])
+    twice = _quarantine_run(spark, export, "twice", [(START, STOP)] * 2)
+    overlap = _quarantine_run(
+        spark, export, "overlap",
+        [(START, START + timedelta(hours=30)), (START + timedelta(hours=26), STOP)],
+    )
+    unresolved = sum(
+        1 for d in export["docs"] if d["subject"] not in RESOLVED and START <= d["time"] < STOP
+    )
+    counts = {"": unresolved, "_es": 1, "_dim": 1}
+    for suffix in QUARANTINES:
+        want = spark.read.parquet(once + suffix)
+        assert want.count() == counts[suffix]
+        for got_path in (twice, overlap):
+            got = spark.read.parquet(got_path + suffix)
+            assert got.count() == counts[suffix], (got_path, suffix)
+            assert got.exceptAll(want).count() == 0, (got_path, suffix)
+            assert want.exceptAll(got).count() == 0, (got_path, suffix)
+
+
+def test_cli_without_dim_quarantines_non_integer_subjects(spark, export):
+    """Without --dim the subject is the token id: a subject that is not an
+    integer goes to the quarantine instead of failing the run's cast."""
+    from pyspark.sql import functions as F
+
+    src = str(export["root"] / "export_nodim")
+    docs = spark.createDataFrame(
+        [("e1", "17", START, 50), ("e2", "0xdev001117", START, 60), ("e3", "18", STOP, 70)],
+        "es_id string, subject string, time timestamp, data_speed bigint",
+    )
+    write_es_status(docs.coalesce(1), src, mode="overwrite")
+    out, quar = str(export["root"] / "nodim_signal"), str(export["root"] / "nodim_q")
+    argv = _argv({**export, "source": src}, out, "--quarantine", quar)
+    del argv[argv.index("--dim"):argv.index("--dim") + 2]
+    stdout = _run_main(spark, argv, "sync-cli-nodim")
+    assert stdout.strip() == f"synced: 1 signal rows at {out}"
+    (row,) = spark.read.parquet(out).collect()
+    assert (row["token_id"], row["name"], row["value_number"]) == (17, "speed", 50.0)
+    q = spark.read.parquet(quar)
+    assert [r.subject for r in q.select("subject").collect()] == ["0xdev001117"]
+    assert q.filter(F.col("subject") == "18").count() == 0  # outside the window

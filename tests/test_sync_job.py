@@ -342,3 +342,17 @@ def test_dedup_keeps_the_collect_list_winner(spark):
     assert after.count() == sig.select(*key).distinct().count()
     assert after.exceptAll(before).count() == 0
     assert before.exceptAll(after).count() == 0
+
+
+def test_dim_duplicate_subject_resolves_to_min_token(spark):
+    """A subject listed more than once in the dim takes its smallest
+    non-null token_id, however the dim is partitioned."""
+    from es_ch_sync_spark.operators.dimjoin import resolve_tokens
+
+    entries = [("a", t) for t in (9, 5, None, 3, 7, 4, 8, 6)] + [("b", None), ("b", 2)]
+    dim = spark.createDataFrame(entries, "subject string, token_id bigint")
+    facts = spark.createDataFrame([("a", 1), ("b", 2), ("c", 3)], "subject string, n int")
+    for parts in (1, 8):
+        resolved, unresolved = resolve_tokens(facts, dim.repartition(parts), broadcast_dim=parts == 1)
+        assert sorted((r.subject, r.token_id) for r in resolved.collect()) == [("a", 3), ("b", 2)]
+        assert [r.subject for r in unresolved.collect()] == ["c"]

@@ -99,49 +99,54 @@ def test_snapshot_isolation_under_concurrent_append(spark, tmp_path):
     assert _ids(spark, t, version=0) == list(range(5))
 
 
+def _signals(spark, lo, hi):
+    """Signal rows with token_id ``lo..hi-1``, a minute apart."""
+    return spark.range(lo, hi).selectExpr(
+        "id AS token_id",
+        "timestamp'2024-01-01 00:00:00' + make_interval(0, 0, 0, 0, 0, id) AS timestamp",
+        "'speed' AS name", "'r1' AS source", "double(id * 2) AS value_number",
+        "CAST(NULL AS STRING) AS value_string",
+    )
+
+
+def _tokens(spark, table):
+    return sorted(r.token_id for r in tx.read_table(spark, table).collect())
+
+
 def test_streaming_sink_exactly_once(spark, tmp_path):
+    """The streaming sink's micro-batch write (sync_stream.merge_batch →
+    write_signals) merges each batch over its own time range, so a batch
+    the engine redelivers after a crash, with the same id, lands once."""
+    from es_ch_sync_spark.streaming.sync_stream import merge_batch
+
     t = str(tmp_path / "t")
-    writer = tx.txlog_stream_writer(t)
-    # simulate the engine delivering batches 0 and 1, then redelivering 1
-    # (post-crash replay with the same batch id — the streaming contract)
-    writer(_df(spark, 0, 3), 0)
-    writer(_df(spark, 3, 6), 1)
-    writer(_df(spark, 3, 6), 1)  # replay: must be a no-op
-    assert _ids(spark, t) == list(range(6))
-    assert tx.last_committed_meta(t, "batch_id") == 1
-    hist = tx.table_history(t)
-    assert len(hist) == 2  # the replayed batch added no commit
+    write = merge_batch(t, "txlog")
+    write(_signals(spark, 0, 3), 0)
+    write(_signals(spark, 3, 6), 1)
+    before = sorted(map(tuple, tx.read_table(spark, t).collect()))
+    write(_signals(spark, 3, 6), 1)  # replay: must change no row
+    assert sorted(map(tuple, tx.read_table(spark, t).collect())) == before
+    assert _tokens(spark, t) == list(range(6))
+    write(_signals(spark, 0, 0), 2)  # empty: no commit
+    assert [h["op"] for h in tx.table_history(t)] == ["merge"] * 3
 
 
 def test_streaming_sink_end_to_end(spark, tmp_path):
-    import os
+    from es_ch_sync_spark.streaming.sync_stream import start_signal_stream
+    from es_ch_sync_spark.streaming.util import drain
 
     src = str(tmp_path / "src")
     t = str(tmp_path / "t")
     ckpt = str(tmp_path / "ckpt")
-    spark.range(0, 10).selectExpr("id", "id * 2 AS x").write.parquet(src)
-    stream = (
-        spark.readStream.schema("id long, x long").parquet(src)
-    )
-    q = (
-        stream.writeStream.foreachBatch(tx.txlog_stream_writer(t))
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    assert _ids(spark, t) == list(range(10))
+    _signals(spark, 0, 10).write.parquet(src)
+    schema = spark.read.parquet(src).schema
+    drain(start_signal_stream(spark.readStream.schema(schema).parquet(src), t, ckpt, "txlog"), 120)
+    assert _tokens(spark, t) == list(range(10))
     # restart from the same checkpoint with no new data: no new commits
     n_before = len(tx.table_history(t))
-    q2 = (
-        stream.writeStream.foreachBatch(tx.txlog_stream_writer(t))
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q2.awaitTermination(120)
+    drain(start_signal_stream(spark.readStream.schema(schema).parquet(src), t, ckpt, "txlog"), 120)
     assert len(tx.table_history(t)) == n_before
-    assert _ids(spark, t) == list(range(10))
+    assert _tokens(spark, t) == list(range(10))
 
 
 def test_merge_upsert_and_lost_update_protection(spark, tmp_path):
